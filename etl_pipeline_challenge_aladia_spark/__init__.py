@@ -30,7 +30,6 @@ from etl_pipeline_challenge_aladia_spark.sinks import (  # noqa: E402
     save_bucketed,
     table_changes,
     table_history,
-    upsert_warehouse_batch,
     vacuum_warehouse,
 )
 from etl_pipeline_challenge_aladia_spark.streaming.pipeline import (  # noqa: E402
@@ -45,7 +44,6 @@ __all__ = [
     "append_warehouse",
     "read_warehouse",
     "read_warehouse_key",
-    "upsert_warehouse_batch",
     "merge_warehouse_batch",
     "compact_warehouse",
     "vacuum_warehouse",

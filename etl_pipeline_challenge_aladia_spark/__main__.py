@@ -4,7 +4,7 @@
     python -m etl_pipeline_challenge_aladia_spark run tpch_q1_pricing_summary \
         --sf-dir /root/testdata/sf0.01 --limit 20
     python -m etl_pipeline_challenge_aladia_spark cdc --input ./in \
-        --warehouse ./wh --checkpoint ./ckpt --sink merge
+        --warehouse ./wh --checkpoint ./ckpt
 
 The reference is driven by per-container scripts (producer/consumer); this
 is the single-binary equivalent for the Spark engine.
@@ -33,7 +33,6 @@ def build_parser() -> argparse.ArgumentParser:
     cdcp.add_argument("--warehouse", required=True)
     cdcp.add_argument("--checkpoint", required=True)
     cdcp.add_argument("--quarantine", default=None)
-    cdcp.add_argument("--sink", choices=["rewrite", "merge"], default="merge")
 
     # table-format operations on a manifest warehouse
     hist = sub.add_parser("history", help="list a table's readable snapshots")
@@ -83,12 +82,7 @@ def main(argv: list[str] | None = None) -> int:
         from etl_pipeline_challenge_aladia_spark.sinks import table_history
 
         for snap in table_history(args.path):
-            layout = (
-                f"{len(snap['buckets'])} buckets"
-                if "buckets" in snap
-                else snap["table_dir"]
-            )
-            print(f"v{snap['version']:<6d} {layout}")
+            print(f"v{snap['version']:<6d} {len(snap['buckets'])} buckets")
         return 0
 
     if args.cmd == "vacuum":
@@ -159,7 +153,6 @@ def main(argv: list[str] | None = None) -> int:
         args.warehouse,
         args.checkpoint,
         quarantine_path=args.quarantine,
-        sink=args.sink,
     )
     return 0
 

@@ -3157,6 +3157,13 @@ def semantic_dedup_screen(
         import numpy as np
 
         rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
+        if not rows:
+            # no cell to route into -> nothing screens, like the sql join
+            return delta.select(
+                F.col(id_col),
+                F.col(id_col).alias("canonical_id"),
+                F.lit(None).cast("double").alias("max_cos"),
+            ).limit(0)
         rows.sort(key=lambda r: r["cluster"])
         cent_map = {
             0: (

@@ -6,21 +6,22 @@ dedup (SURVEY.md §2.1-S5, §1.4). Spark-first equivalents:
 - ``append_warehouse``: partitioned Parquet append. Partitioning by the
   date of ``original_timestamp`` gives partition pruning for time-ranged
   analytics (the layout the reference README wished for but didn't build).
-- ``upsert_warehouse_batch``: dedup-on-write for ``foreachBatch`` — merges
-  a micro-batch into the stored table keeping the latest version per key.
-  Paired with Structured Streaming checkpointing this gives effectively
+- ``merge_warehouse_batch``: dedup-on-write for ``foreachBatch`` — merges
+  a micro-batch into the bucketed stored table keeping the latest version
+  per key, rewriting only the buckets the batch's keys hash into. Paired
+  with Structured Streaming checkpointing this gives effectively
   exactly-once (at-least-once redelivery collapses on the dedup key), the
   engine's answer to the reference's ack/requeue + ReplacingMergeTree.
 
-Both sinks commit through an atomic snapshot manifest, which grows into a
-small transactional table format: ``read_warehouse(version=)`` /
+The merge sink commits through an atomic snapshot manifest, which grows
+into a small transactional table format: ``read_warehouse(version=)`` /
 ``read_warehouse(as_of=)`` time travel (VERSION AS OF and TIMESTAMP AS
 OF) over ``retain_snapshots`` retained versions, ``table_history``,
 ``table_changes`` (change data feed between snapshots),
 ``erase_warehouse_keys`` (bucket-proportional GDPR hard deletes),
-``vacuum_warehouse`` (snapshot expiry + GC), schema evolution via merged
-bucket schemas, and ``compact_warehouse`` (small-file OPTIMIZE, optionally
-z-order clustered).
+``vacuum_warehouse`` (snapshot expiry + GC) and schema evolution via
+merged bucket schemas. ``compact_warehouse`` (small-file OPTIMIZE, optionally
+z-order clustered) serves the day-partitioned append tables.
 """
 
 from __future__ import annotations
@@ -55,13 +56,13 @@ def read_warehouse(
     as_of: float | str | None = None,
 ) -> DataFrame:
     """Read a warehouse table, resolving through the snapshot manifest when
-    one exists (manifest-sink tables): the manifest names one directory per
-    bucket (or one table-version directory), so a reader sees exactly the
-    set a single atomic commit published — never a half-merged mix.
-    Legacy/append layouts read the directory tree directly as before.
+    one exists (merge-sink tables): the manifest names one directory per
+    bucket, so a reader sees exactly the set a single atomic commit
+    published — never a half-merged mix. Append tables read the directory
+    tree directly.
 
     ``version=`` time-travels to a RETAINED earlier snapshot (the
-    manifest's ``history`` list, rotation depth set by the sinks'
+    manifest's ``history`` list, rotation depth set by the merge sink's
     ``retain_snapshots``) — the plain-parquet analog of Delta's
     ``VERSION AS OF``. ``as_of=`` is the ``TIMESTAMP AS OF`` twin: the
     NEWEST retained snapshot committed at or before the given time
@@ -85,27 +86,18 @@ def read_warehouse(
         # own buckets); the union schema with NULL back-fill is the
         # correct read. Footer cost is bounded by the bucket count.
         return spark.read.option("mergeSchema", "true").parquet(*dirs)
-    if manifest is not None and manifest.get("table_dir"):
-        df = spark.read.parquet(os.path.join(path, manifest["table_dir"]))
-        return df.drop("_day") if "_day" in df.columns else df
     df = spark.read.parquet(path)
-    for layout_col in ("_day", "_bucket"):
-        if layout_col in df.columns:
-            df = df.drop(layout_col)
-    return df
+    return df.drop("_day") if "_day" in df.columns else df
 
 
 def _snapshot_entry(manifest: dict) -> dict:
-    """The frozen, re-readable core of a manifest: version + directory
-    refs + commit time. What history retains per commit — nothing else in
-    the manifest is needed to resolve a past snapshot."""
+    """The frozen, re-readable core of a manifest: version + bucket
+    directory refs + commit time. What history retains per commit —
+    nothing else in the manifest is needed to resolve a past snapshot."""
     entry: dict = {"version": manifest["version"]}
     if manifest.get("committed_at") is not None:
         entry["committed_at"] = manifest["committed_at"]
-    if "buckets" in manifest:
-        entry["buckets"] = dict(manifest["buckets"])
-    else:
-        entry["table_dir"] = manifest["table_dir"]
+    entry["buckets"] = dict(manifest["buckets"])
     return entry
 
 
@@ -114,7 +106,7 @@ def _rotate_history(manifest: dict, retain_snapshots: int) -> list[dict]:
     snapshot, keep the newest ``retain_snapshots`` entries. 0 disables
     time travel (lag-1 ``garbage`` retention still applies)."""
     history = list(manifest.get("history", []))
-    if manifest.get("buckets") or manifest.get("table_dir"):
+    if manifest.get("buckets"):
         history.append(_snapshot_entry(manifest))
     return history[-retain_snapshots:] if retain_snapshots > 0 else []
 
@@ -169,7 +161,7 @@ def _resolve_as_of(manifest: dict, as_of: float | str) -> dict:
 
 def table_history(path: str) -> list[dict]:
     """Readable snapshots, oldest first, current last: ``[{version,
-    table_dir | buckets}, ...]`` — Delta's ``DESCRIBE HISTORY`` shape for
+    buckets}, ...]`` — Delta's ``DESCRIBE HISTORY`` shape for
     the manifest warehouse. Empty for non-manifest tables."""
     manifest = _read_manifest(path)
     if manifest is None:
@@ -202,90 +194,6 @@ def _recover_dir(dst: str, keep_old_as: str) -> None:
             shutil.rmtree(keep_old_as)
         else:
             os.rename(keep_old_as, dst)
-
-
-def upsert_warehouse_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    retain_snapshots: int = 1,
-) -> None:
-    """Idempotent micro-batch upsert: union stored + batch, keep latest per
-    key, rewrite. Simple full-rewrite variant — correct anywhere, O(table)
-    per batch; ``merge_warehouse_batch`` below is the batch-proportional
-    MERGE used at scale.
-
-    Visibility is SNAPSHOT-ATOMIC like the merge sink: each rewrite lands
-    as a new table-version directory published by one atomic manifest
-    rename, with the previous version retained one commit for in-flight
-    readers (``_commit_manifest``). A crash before the commit leaves only
-    an unreferenced staging/version dir — readers keep the old snapshot and
-    the next upsert garbage-collects the stray. Pre-manifest tables
-    (day dirs directly under ``path``, possibly with an interrupted
-    ``._old`` promote) are adopted in place.
-
-    Only the missing-table case starts from batch-only; any other read
-    failure (IO, permissions, corruption) raises instead of silently
-    discarding the stored table.
-    """
-    manifest = _read_manifest(path)
-    if manifest is not None and "buckets" in manifest:
-        raise ValueError(
-            f"{path} was written by the bucketed MERGE sink; "
-            "use merge_warehouse_batch on it, not upsert_warehouse_batch"
-        )
-    legacy_entries: list[str] = []
-    if manifest is None:
-        # pre-manifest table (or fresh path): read whatever is stored —
-        # raising on anything unreadable, exactly like before — and migrate
-        # it into the first version directory on this write
-        _recover_dir(path, path + "._old")
-        shutil.rmtree(path + "._tmp", ignore_errors=True)
-        legacy_entries = (
-            [e for e in os.listdir(path) if not e.startswith("._")]
-            if os.path.exists(path)
-            else []
-        )
-        if legacy_entries:
-            current = spark.read.parquet(path)
-            if "_day" in current.columns:
-                current = current.drop("_day")
-            merged = current.unionByName(batch, allowMissingColumns=True)
-        else:
-            merged = batch
-        version = 1
-        garbage: list[str] = []
-    else:
-        # entry GC: unreferenced versions are aged-out garbage or strays
-        _gc_unreferenced(path, manifest)
-        shutil.rmtree(path + "._tmp", ignore_errors=True)
-        if manifest["table_dir"] is not None:
-            current = spark.read.parquet(
-                os.path.join(path, manifest["table_dir"])
-            ).drop("_day")
-            merged = current.unionByName(batch, allowMissingColumns=True)
-        else:
-            merged = batch
-        version = int(manifest["version"]) + 1
-        garbage = [manifest["table_dir"]] if manifest["table_dir"] else []
-    deduped = latest_per_key(merged)
-    out = deduped.withColumn("_day", F.to_date("original_timestamp"))
-    # executing this write also materializes the legacy read above, BEFORE
-    # anything is moved or deleted — an unreadable store raises here with
-    # the stored files untouched
-    out.write.mode("overwrite").partitionBy("_day").parquet(path + "._tmp")
-    new_dir = f"v{version:08d}"
-    os.makedirs(path, exist_ok=True)
-    os.rename(path + "._tmp", os.path.join(path, new_dir))
-    history = _rotate_history(manifest or {}, retain_snapshots)
-    _commit_manifest(
-        path,
-        {"version": version, "table_dir": new_dir, "garbage": garbage,
-         "history": history},
-    )
-    for e in legacy_entries:
-        full = os.path.join(path, e)
-        shutil.rmtree(full) if os.path.isdir(full) else os.remove(full)
 
 
 #: Snapshot manifest file name (inside the table directory).
@@ -338,24 +246,17 @@ def _bucket_dirname(bk: int, version: int) -> str:
 
 
 def _gc_unreferenced(path: str, manifest: dict) -> int:
-    """Drop every version directory neither the current manifest nor any
-    RETAINED history snapshot references — aged-out garbage (rotated out
-    of history) and strays from crashed pre-commit attempts. Shared by
-    both sinks' entry GC and the public ``vacuum_warehouse``. Returns
+    """Drop every bucket version directory neither the current manifest nor
+    any RETAINED history snapshot references — aged-out garbage (rotated
+    out of history) and strays from crashed pre-commit attempts. Shared by
+    the merge sink's entry GC and the public ``vacuum_warehouse``. Returns
     directories removed."""
     import glob as _glob
 
     snapshots = [manifest] + list(manifest.get("history", []))
-    if "buckets" in manifest:
-        referenced = {d for s in snapshots for d in s.get("buckets", {}).values()}
-        pattern = "b[0-9]*_v[0-9]*"
-    else:
-        referenced = {
-            s["table_dir"] for s in snapshots if s.get("table_dir")
-        }
-        pattern = "v[0-9]*"
+    referenced = {d for s in snapshots for d in s.get("buckets", {}).values()}
     removed = 0
-    for d in _glob.glob(os.path.join(path, pattern)):
+    for d in _glob.glob(os.path.join(path, "b[0-9]*_v[0-9]*")):
         if os.path.basename(d) not in referenced:
             shutil.rmtree(d, ignore_errors=True)
             removed += 1
@@ -421,31 +322,28 @@ def merge_warehouse_batch(
     ``num_buckets`` is pinned in the manifest at table creation; later
     calls use the pinned value (a caller drifting the bucket count would
     otherwise split keys across buckets and break the merge locality).
-    Returns the number of buckets written.
+    A directory without a manifest is only started as a fresh table when
+    it holds nothing but ``._*`` staging leftovers; anything else raises
+    ``ValueError`` with the files untouched, so a stored table is never
+    silently discarded. Returns the number of buckets written.
     """
-    import glob as _glob
-
     manifest = _read_manifest(path)
-    if manifest is not None and "buckets" not in manifest:
-        raise ValueError(
-            f"{path} was written by the rewrite (upsert) sink; "
-            "use upsert_warehouse_batch on it, not merge_warehouse_batch"
-        )
     if manifest is None:
-        # pre-manifest layout (or fresh table): adopt any legacy
-        # ``_bucket=N`` partition dirs as version-0 buckets after running
-        # the legacy interrupted-promote repair
-        for leftover in _glob.glob(f"{path}._old_bucket_*"):
-            bk = leftover.rsplit("_", 1)[-1]
-            _recover_dir(os.path.join(path, f"_bucket={bk}"), leftover)
+        stored = (
+            [e for e in os.listdir(path) if not e.startswith("._")]
+            if os.path.exists(path)
+            else []
+        )
+        if stored:
+            raise ValueError(
+                f"{path} holds files but no {_MANIFEST}; refusing to start "
+                "a fresh table over them"
+            )
         os.makedirs(path, exist_ok=True)
+        # version 0 is committed before any bucket is staged, so a crash
+        # mid-way leaves a manifest whose entry GC collects the strays
         manifest = {"version": 0, "num_buckets": num_buckets, "buckets": {},
                     "garbage": []}
-        for legacy in sorted(_glob.glob(os.path.join(path, "_bucket=*"))):
-            bk = int(legacy.rsplit("=", 1)[-1])
-            adopted = _bucket_dirname(bk, 0)
-            os.rename(legacy, os.path.join(path, adopted))
-            manifest["buckets"][str(bk)] = adopted
         _commit_manifest(path, manifest)
     num_buckets = int(manifest["num_buckets"])
 
@@ -532,7 +430,7 @@ def read_warehouse_key(
     for col, val in zip(keys, key_values):
         c = F.col(col) == F.lit(val)
         cond = c if cond is None else cond & c
-    if manifest is None or "buckets" not in manifest:
+    if manifest is None:
         return read_warehouse(spark, path).filter(cond)
     num_buckets = int(manifest["num_buckets"])
     # same deterministic route the writer used — computed driver-side on
@@ -611,14 +509,6 @@ def compact_warehouse(
     """
     import glob as _glob
     from concurrent.futures import ThreadPoolExecutor
-
-    # manifest-era upsert tables keep their day dirs inside the current
-    # version directory — compact within the published snapshot in place
-    # (day swaps stay crash-recoverable; snapshot atomicity is the
-    # sink's concern, compaction never changes row content)
-    manifest = _read_manifest(path)
-    if manifest is not None and manifest.get("table_dir"):
-        path = os.path.join(path, manifest["table_dir"])
 
     # repair any promote a previous compaction crashed in the middle of
     # (old-copy names are keyed by partition directory, so this is exact)
@@ -778,35 +668,14 @@ def erase_warehouse_keys(
     (DELETE then VACUUM). ``table_changes`` across the erase commit
     reports the rows as ``delete``.
 
-    Rewrite-sink (``table_dir``) tables fall back to a full single-version
-    rewrite — correct anywhere, O(table). Returns the number of bucket
-    directories (or 1 for rewrite tables) written.
+    Raises ``ValueError`` on a path without a snapshot manifest. Returns
+    the number of bucket directories written.
     """
     manifest = _read_manifest(path)
     if manifest is None:
         raise ValueError(f"{path} has no snapshot manifest; nothing to erase from")
     key_cols = list(keys)
     erase = keys_df.select(*key_cols).distinct()
-
-    if "buckets" not in manifest:
-        # rewrite-sink table: one new version without the matching keys
-        current = spark.read.parquet(
-            os.path.join(path, manifest["table_dir"])
-        ).drop("_day")
-        kept = current.join(erase, key_cols, "left_anti")
-        version = int(manifest["version"]) + 1
-        out = kept.withColumn("_day", F.to_date("original_timestamp"))
-        out.write.mode("overwrite").partitionBy("_day").parquet(path + "._tmp")
-        new_dir = f"v{version:08d}"
-        os.rename(path + "._tmp", os.path.join(path, new_dir))
-        _commit_manifest(
-            path,
-            {"version": version, "table_dir": new_dir,
-             "garbage": [manifest["table_dir"]],
-             "history": _rotate_history(manifest, retain_snapshots)},
-        )
-        return 1
-
     num_buckets = int(manifest["num_buckets"])
     bucket = F.pmod(
         F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(num_buckets)

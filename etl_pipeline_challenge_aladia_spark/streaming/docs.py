@@ -60,18 +60,6 @@ def make_incremental_dedup_processor(
     return process_batch
 
 
-def erase_corpus_keys(
-    spark: SparkSession, corpus_path: str, doc_ids
-) -> int:
-    """Right-to-be-forgotten for the incremental-dedup CORPUS store —
-    the one derived store that retains raw text, so erasure here is the
-    most literal removal obligation: physically rewrite every batch /
-    compacted layout without the keyed documents and denylist the ids
-    against replay (streaming/store.py:erase_keys). Returns physical
-    rows removed."""
-    return erase_keys(spark, corpus_path, "doc_id", doc_ids)
-
-
 def run_incremental_dedup_stream(
     spark: SparkSession,
     input_dir: str,
@@ -1075,33 +1063,6 @@ def compact_cdc_chunk_store(
         spark, store_path, out_path, CDC_CHUNK_STORE_SCHEMA,
         transform=lambda d: d.distinct(),
     )
-
-
-def erase_chunks_of_docs(
-    spark: SparkSession,
-    store_path: str,
-    erased_docs: DataFrame,
-    retained_docs: DataFrame | None = None,
-    divisor: int = 16,
-    text_col: str = "text",
-) -> int:
-    """Right-to-be-forgotten for the content-keyed CDC-chunk store —
-    the chunk twin of ``erase_segments_of_docs``: re-chunk the erased
-    documents with the ingest's own CDC cut rule, optionally subtract
-    the retained corpus's chunks (shared content stays screening-able),
-    and erase the remainder. Returns physical rows removed."""
-    from etl_pipeline_challenge_aladia_spark.operators.text import (
-        cdc_chunk_store,
-    )
-
-    gone = cdc_chunk_store(erased_docs, divisor=divisor, text_col=text_col)
-    if retained_docs is not None:
-        keep = cdc_chunk_store(
-            retained_docs, divisor=divisor, text_col=text_col
-        )
-        gone = gone.join(keep, "chunk", "left_anti")
-    return erase_keys(spark, store_path, "chunk", gone)
-
 
 
 # --------------------------------------------------------------------------

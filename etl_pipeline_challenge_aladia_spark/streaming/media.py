@@ -237,23 +237,6 @@ def compact_media_sig_store(
     )
 
 
-def erase_media_sig_keys(
-    spark: SparkSession, store_path: str, media_ids
-) -> int:
-    """Right-to-be-forgotten for the media fingerprint stores (VERDICT
-    r9 #2): physically rewrite every modality sub-store without the
-    keyed fingerprints and denylist the ids against replay
-    (streaming/store.py:erase_keys) — post-erase, ingest screens behave
-    as if the assets were never fingerprinted. Returns total physical
-    rows removed across modalities."""
-    return sum(
-        erase_keys(
-            spark, os.path.join(store_path, m), "media_id", media_ids
-        )
-        for m in FINGERPRINT_MODALITIES
-    )
-
-
 #: per-batch video frame-hash SEQUENCES (frame_no kept — the whole
 #: point: runs need order, not just membership)
 VIDEO_SEQ_STORE_SCHEMA = "media_id long, frame_no long, ahash long"
@@ -361,23 +344,6 @@ def read_video_seq_report(spark: SparkSession, report_path: str) -> DataFrame:
 
 def read_video_seq_store(spark: SparkSession, store_path: str) -> DataFrame:
     return _read_store(spark, store_path, VIDEO_SEQ_STORE_SCHEMA)
-
-
-def compact_video_seq_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Consolidate the sequence store's per-batch directories into one
-    ``compacted/`` layout at a fresh path. DISTINCT on the full
-    (media_id, frame_no, ahash) row — the same clip re-ingested by many
-    batches stores one sequence; frame order survives because frame_no
-    is data, not layout."""
-    return compact_store(
-        spark,
-        store_path,
-        out_path,
-        VIDEO_SEQ_STORE_SCHEMA,
-        transform=lambda d: d.distinct(),
-    )
 
 
 def erase_video_seq_keys(

@@ -28,10 +28,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.operators.structure import parse_envelope
 from etl_pipeline_challenge_aladia_spark.pipeline import envelopes_to_warehouse
-from etl_pipeline_challenge_aladia_spark.sinks import (
-    merge_warehouse_batch,
-    upsert_warehouse_batch,
-)
+from etl_pipeline_challenge_aladia_spark.sinks import merge_warehouse_batch
 
 
 def streaming_envelopes_from_json(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -97,30 +94,6 @@ def encode_kafka_records(envelopes: DataFrame, key_col: str = "document_id") -> 
     )
 
 
-def publish_envelopes_to_kafka(
-    envelopes: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str = "document_id",
-):
-    """Streaming publish: envelope rows -> Kafka topic (reference S2).
-
-    Durable-queue semantics map to Kafka acks + checkpointed offsets; the
-    reference's per-message connection churn (its own named bottleneck)
-    disappears — one long-lived producer per task. Requires the
-    spark-sql-kafka connector at runtime; returns the StreamingQuery.
-    """
-    return (
-        encode_kafka_records(envelopes, key_col=key_col)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def streaming_envelopes_from_kafka(
     spark: SparkSession,
     bootstrap_servers: str,
@@ -155,7 +128,6 @@ def run_cdc_file_stream(
     warehouse_path: str,
     checkpoint_dir: str,
     quarantine_path: str | None = None,
-    sink: str = "rewrite",
     view_path: str | None = None,
 ) -> None:
     """Run the CDC pipeline over all currently-available files and stop
@@ -163,9 +135,8 @@ def run_cdc_file_stream(
     by tests and backfills. A production deployment drops the trigger and
     runs continuously; nothing else changes.
 
-    ``sink`` picks the upsert strategy: ``"rewrite"`` (full-table rewrite,
-    simplest) or ``"merge"`` (bucket-partitioned MERGE, I/O proportional to
-    the batch — the scale path).
+    Every micro-batch upserts through ``merge_warehouse_batch`` (bucketed
+    MERGE, I/O proportional to the batch).
 
     ``view_path`` additionally maintains the materialized per-video stats
     view (views.py) INSIDE each micro-batch: after the upsert commits, the
@@ -178,7 +149,7 @@ def run_cdc_file_stream(
     (
         envelopes.writeStream.foreachBatch(
             make_cdc_batch_processor(
-                warehouse_path, quarantine_path, sink, view_path
+                warehouse_path, quarantine_path, view_path=view_path
             )
         )
         .option("checkpointLocation", checkpoint_dir)
@@ -210,21 +181,20 @@ def _split_off_quarantine(
 def make_cdc_batch_processor(
     warehouse_path: str,
     quarantine_path: str | None = None,
-    sink: str = "rewrite",
+    sink: str = "merge",
     view_path: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The foreachBatch body shared by every CDC ingress (file-stream,
-    Kafka): quarantine corrupt envelopes, transform, idempotent upsert."""
-    if sink not in ("rewrite", "merge"):
-        raise ValueError(f"unknown sink {sink!r}: expected 'rewrite' or 'merge'")
+    Kafka): quarantine corrupt envelopes, transform, idempotent upsert
+    through ``merge_warehouse_batch``. ``sink`` only accepts ``"merge"``,
+    the one warehouse sink; it is kept for callers that name it."""
+    if sink != "merge":
+        raise ValueError(f"unknown sink {sink!r}: the only sink is 'merge'")
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         ok = _split_off_quarantine(batch, quarantine_path)
         rows = envelopes_to_warehouse(ok, with_ingestion_time=True)
-        if sink == "merge":
-            merge_warehouse_batch(batch.sparkSession, rows, warehouse_path)
-        else:
-            upsert_warehouse_batch(batch.sparkSession, rows, warehouse_path)
+        merge_warehouse_batch(batch.sparkSession, rows, warehouse_path)
         if view_path is not None:
             from etl_pipeline_challenge_aladia_spark.views import (
                 refresh_video_stats_view,
@@ -269,7 +239,6 @@ def run_cdc_kafka_stream(
     warehouse_path: str,
     checkpoint_dir: str,
     quarantine_path: str | None = None,
-    sink: str = "rewrite",
     records: DataFrame | None = None,
     available_now: bool = False,
     source_options: dict[str, str] | None = None,
@@ -301,7 +270,7 @@ def run_cdc_kafka_stream(
     writer = (
         observe_decode_health(envelopes)
         .writeStream.foreachBatch(
-            make_cdc_batch_processor(warehouse_path, quarantine_path, sink)
+            make_cdc_batch_processor(warehouse_path, quarantine_path)
         )
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -365,7 +334,6 @@ def replay_quarantine(
     spark: SparkSession,
     quarantine_path: str,
     warehouse_path: str,
-    sink: str = "merge",
 ) -> tuple[int, int]:
     """Reprocess quarantined raw messages — the operational other half of
     the quarantine contract (X5): after a producer or parser fix, replay
@@ -389,12 +357,8 @@ def replay_quarantine(
     from etl_pipeline_challenge_aladia_spark.sinks import (
         _promote_dir,
         _recover_dir,
-        merge_warehouse_batch,
-        upsert_warehouse_batch,
     )
 
-    if sink not in ("rewrite", "merge"):
-        raise ValueError(f"unknown sink {sink!r}: expected 'rewrite' or 'merge'")
     _recover_dir(quarantine_path, quarantine_path + "._old")
     if not os.path.exists(quarantine_path):
         return 0, 0
@@ -406,10 +370,7 @@ def replay_quarantine(
     rows = envelopes_to_warehouse(ok, with_ingestion_time=True)
     n_recovered = rows.count()
     if n_recovered:
-        if sink == "merge":
-            merge_warehouse_batch(spark, rows, warehouse_path)
-        else:
-            upsert_warehouse_batch(spark, rows, warehouse_path)
+        merge_warehouse_batch(spark, rows, warehouse_path)
     still_bad = raw.join(
         decoded.filter(F.col("_corrupt")).select(F.col("_raw").alias("raw")),
         "raw",

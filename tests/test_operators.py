@@ -274,12 +274,13 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
 
 
 def test_upsert_raises_on_unreadable_store(spark, tmp_path):
-    """Only a MISSING warehouse path falls back to batch-only; an existing
-    but unreadable store must raise, never silently discard the table."""
+    """Only a MISSING (or empty) warehouse path starts a fresh table; a
+    directory holding files but no snapshot manifest must raise, never
+    silently discard the stored table."""
     import pytest
     from pyspark.sql import functions as F
 
-    from etl_pipeline_challenge_aladia_spark.sinks import upsert_warehouse_batch
+    from etl_pipeline_challenge_aladia_spark.sinks import merge_warehouse_batch
 
     path = str(tmp_path / "wh")
     os.makedirs(path)
@@ -292,11 +293,21 @@ def test_upsert_raises_on_unreadable_store(spark, tmp_path):
         F.lit(1).cast("long").alias("version"),
         F.lit("2024-01-01 10:00:00").cast("timestamp").alias("original_timestamp"),
     )
-    with pytest.raises(Exception):
-        upsert_warehouse_batch(spark, batch, path)
-    # the corrupt store was not replaced by the batch
+    with pytest.raises(ValueError, match="_manifest.json"):
+        merge_warehouse_batch(spark, batch, path)
+    # the stored files were neither replaced nor joined by a manifest
+    assert sorted(os.listdir(path)) == ["part-00000.parquet"]
     with open(os.path.join(path, "part-00000.parquet")) as f:
         assert f.read() == "this is not a parquet file"
+
+    # ``._*`` staging leftovers of a crashed first commit are no table:
+    # the merge starts fresh over them
+    fresh = str(tmp_path / "fresh")
+    os.makedirs(fresh)
+    with open(os.path.join(fresh, "._manifest_tmp"), "w") as f:
+        f.write("{")
+    assert merge_warehouse_batch(spark, batch, fresh) == 1
+    assert os.path.exists(os.path.join(fresh, "_manifest.json"))
 
 
 def test_scrub_pii_redacts_emails_and_urls(spark):

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
 
 def test_cdcgen_batch_exact_and_partitioned(spark):
     """Batch read returns exactly messages [0, n) (content-identical to
@@ -125,6 +127,8 @@ def test_cdcgen_stream_restart_resumes_past_checkpoint(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     ranges_log = str(tmp_path / "ranges.jsonl")
     base_proc = make_cdc_batch_processor(wh, sink="merge")
+    with pytest.raises(ValueError, match="only sink is 'merge'"):
+        make_cdc_batch_processor(wh, sink="append")
 
     def proc(batch, bid):
         batch = batch.localCheckpoint(eager=True)

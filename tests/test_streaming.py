@@ -62,8 +62,7 @@ def state(spark, wh_path):
     }
 
 
-@pytest.mark.parametrize("sink", ["rewrite", "merge"])
-def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs, sink):
+def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs):
     batch1 = [
         envelope("insert", "doc_1", 1, watched=10),
         envelope("update", "doc_1", 2, watched=20),
@@ -74,7 +73,7 @@ def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs, sink):
     ]
     write_lines(os.path.join(dirs["in"], "batch1.json"), batch1)
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink=sink
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
 
     s1 = state(spark, dirs["wh"])
@@ -94,7 +93,7 @@ def test_stream_end_to_end_with_redelivery_and_corrupt(spark, dirs, sink):
     ]
     write_lines(os.path.join(dirs["in"], "batch2.json"), batch2)
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink=sink
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
 
     s2 = state(spark, dirs["wh"])
@@ -260,44 +259,6 @@ def test_merge_sink_recovers_crashed_precommit_attempt(spark, tmp_path):
     assert read_warehouse(spark, path).count() == before
 
 
-def test_merge_sink_adopts_legacy_bucket_layout(spark, tmp_path):
-    """Tables written by the pre-manifest merge sink (``_bucket=N``
-    partition dirs, including an interrupted ``._old_bucket_`` promote)
-    migrate in place on the first manifest-era merge, losing no rows."""
-    import glob
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_challenge_aladia_spark.schemas import DEDUP_KEY
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        _read_manifest,
-        merge_warehouse_batch,
-        read_warehouse,
-    )
-
-    path = str(tmp_path / "wh")
-    base = _merge_base_frame(spark)
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in DEDUP_KEY]), F.lit(8)).cast("int")
-    base.withColumn("_bucket", bucket).write.partitionBy("_bucket").parquet(path)
-    # legacy crash window: one bucket moved aside, replacement missing
-    victim = sorted(glob.glob(os.path.join(path, "_bucket=*")))[0]
-    bk = victim.rsplit("=", 1)[-1]
-    shutil.move(victim, f"{path}._old_bucket_{bk}")
-
-    one = _merge_base_frame(spark, version=2, watched=999).filter(
-        F.col("original_id") == "doc_3"
-    )
-    merge_warehouse_batch(spark, one, path, num_buckets=8)
-    rows = {
-        r["original_id"]: r["watched_seconds"]
-        for r in read_warehouse(spark, path).collect()
-    }
-    assert len(rows) == 50 and rows["doc_3"] == 999
-    assert _read_manifest(path) is not None
-    assert not glob.glob(os.path.join(path, "_bucket=*"))  # fully adopted
-
-
 def test_merge_snapshot_isolation_under_concurrent_reads(spark, tmp_path):
     """THE atomicity contract (VERDICT r02 #1): while a merge rewriting
     every bucket runs in another thread, every row-set a reader observes
@@ -395,64 +356,6 @@ def test_decode_health_observed_metrics(spark, dirs):
     assert total == 3 and corrupt == 1
 
 
-def test_upsert_sink_snapshot_versions_and_migration(spark, tmp_path):
-    """The rewrite sink's atomicity contract: each upsert publishes a new
-    table-version directory via the manifest (previous version retained one
-    commit for in-flight readers), a stray pre-commit version is GC'd, and
-    a pre-manifest day-partitioned table migrates in place on first write."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        _read_manifest,
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    base = _merge_base_frame(spark)
-    # pre-manifest layout: day dirs directly under path
-    base.withColumn("_day", F.to_date("original_timestamp")).write.partitionBy(
-        "_day"
-    ).parquet(path)
-
-    upd = _merge_base_frame(spark, version=2, watched=555).filter(
-        F.col("original_id") == "doc_1"
-    )
-    upsert_warehouse_batch(spark, upd, path)
-    m1 = _read_manifest(path)
-    assert m1 is not None and m1["table_dir"] == "v00000001"
-    rows = {
-        r["original_id"]: r["watched_seconds"]
-        for r in read_warehouse(spark, path).collect()
-    }
-    assert len(rows) == 50 and rows["doc_1"] == 555
-
-    # stray version from a crashed pre-commit attempt: invisible, then GC'd
-    stray = os.path.join(path, "v00000099")
-    shutil.copytree(os.path.join(path, "v00000001"), stray)
-    assert read_warehouse(spark, path).count() == 50
-
-    upsert_warehouse_batch(
-        spark,
-        _merge_base_frame(spark, version=3, watched=7).filter(
-            F.col("original_id") == "doc_2"
-        ),
-        path,
-    )
-    m2 = _read_manifest(path)
-    assert m2["table_dir"] == "v00000002" and m2["garbage"] == ["v00000001"]
-    assert not os.path.exists(stray)
-    # previous version still on disk for in-flight readers (lag-1 retention)
-    assert os.path.isdir(os.path.join(path, "v00000001"))
-    rows = {
-        r["original_id"]: r["watched_seconds"]
-        for r in read_warehouse(spark, path).collect()
-    }
-    assert rows["doc_2"] == 7 and rows["doc_1"] == 555
-
-
 def test_read_warehouse_key_scans_single_bucket(spark, tmp_path):
     """Point lookup reads exactly one bucket directory (manifest-routed) —
     1/num_buckets of the table's files — and returns the right row."""
@@ -470,97 +373,6 @@ def test_read_warehouse_key_scans_single_bucket(spark, tmp_path):
     assert files
     dirs = {f.rsplit("/", 2)[-2] for f in files}
     assert len(dirs) == 1 and next(iter(dirs)).startswith("b")
-
-
-def test_compact_warehouse_on_manifest_upsert_table(spark, tmp_path):
-    """Compaction resolves through the manifest on rewrite-sink tables:
-    files shrink inside the published version dir, rows and manifest are
-    untouched."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        _read_manifest,
-        compact_warehouse,
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    # several small upserts -> many small files inside the current version
-    for v in range(1, 4):
-        upsert_warehouse_batch(
-            spark,
-            _merge_base_frame(spark, n=30, version=v).repartition(4),
-            path,
-        )
-    m = _read_manifest(path)
-    vdir = os.path.join(path, m["table_dir"])
-    before = sorted(map(str, read_warehouse(spark, path).collect()))
-
-    def n_files():
-        return len(glob.glob(os.path.join(vdir, "_day=*", "*.parquet")))
-
-    # split into ~10-row files, then compact back down — both rewrites land
-    # inside the published version dir and never touch the manifest
-    assert compact_warehouse(spark, path, target_rows_per_file=10) >= 1
-    fragmented = n_files()
-    assert fragmented >= 3
-    assert compact_warehouse(spark, path, target_rows_per_file=1_000_000) >= 1
-    assert n_files() < fragmented
-    assert sorted(map(str, read_warehouse(spark, path).collect())) == before
-    assert _read_manifest(path) == m  # manifest untouched by compaction
-
-
-def test_upsert_snapshot_isolation_under_concurrent_reads(spark, tmp_path):
-    """The rewrite sink's atomicity under a live reader: while an upsert
-    rewriting the whole table runs in another thread, every observed
-    row-set equals the complete pre- or post-upsert snapshot."""
-    import threading
-
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    upsert_warehouse_batch(spark, _merge_base_frame(spark, n=40), path)
-    pre = frozenset(
-        (r["original_id"], r["version"], r["watched_seconds"])
-        for r in read_warehouse(spark, path).collect()
-    )
-    update = _merge_base_frame(spark, n=40, version=2, watched=777)
-    post = frozenset((f"doc_{i}", 2, 777) for i in range(40))
-    assert pre != post
-
-    err: list = []
-
-    def run_upsert():
-        try:
-            upsert_warehouse_batch(spark, update, path)
-        except Exception as ex:  # noqa: BLE001
-            err.append(ex)
-
-    t = threading.Thread(target=run_upsert)
-    t.start()
-    observed = []
-    while t.is_alive():
-        snap = frozenset(
-            (r["original_id"], r["version"], r["watched_seconds"])
-            for r in read_warehouse(spark, path).collect()
-        )
-        observed.append(snap)
-    t.join()
-    assert not err
-    bad = [s for s in observed if s != pre and s != post]
-    assert not bad, f"{len(bad)} torn snapshot(s) of {len(observed)}"
-    assert observed, "reader never overlapped the upsert"
-    final = frozenset(
-        (r["original_id"], r["version"], r["watched_seconds"])
-        for r in read_warehouse(spark, path).collect()
-    )
-    assert final == post
 
 
 def test_vacuum_and_num_buckets_pinning(spark, tmp_path):
@@ -714,7 +526,8 @@ def test_time_travel_merge_table(spark, tmp_path):
     """read_warehouse(version=) returns the exact row-set each retained
     commit published; table_history lists readable snapshots oldest-first;
     rotation keeps only retain_snapshots past versions; vacuum expires
-    history and makes expired versions raise with the readable list."""
+    history and makes expired versions raise with the readable list;
+    non-manifest paths refuse version= with a clear error."""
     from pyspark.sql import functions as F
 
     from etl_pipeline_challenge_aladia_spark.sinks import (
@@ -767,40 +580,6 @@ def test_time_travel_merge_table(spark, tmp_path):
     assert doc7(3) == 222 and doc7() == 333
     with pytest.raises(KeyError):
         read_warehouse(spark, path, version=2)
-
-
-def test_time_travel_upsert_table(spark, tmp_path):
-    """Same contract on the rewrite sink: full past table versions stay
-    readable for retain_snapshots commits; non-manifest paths refuse
-    version= with a clear error."""
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        read_warehouse,
-        table_history,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    upsert_warehouse_batch(
-        spark, _merge_base_frame(spark, n=30), path, retain_snapshots=3
-    )
-    upsert_warehouse_batch(
-        spark,
-        _merge_base_frame(spark, n=30, version=2, watched=99).filter(
-            F.col("original_id") == "doc_3"
-        ),
-        path,
-        retain_snapshots=3,
-    )
-    assert [h["version"] for h in table_history(path)] == [1, 2]
-    v1 = read_warehouse(spark, path, version=1)
-    assert v1.filter(F.col("original_id") == "doc_3").first()[
-        "watched_seconds"
-    ] == 30
-    assert read_warehouse(spark, path).filter(
-        F.col("original_id") == "doc_3"
-    ).first()["watched_seconds"] == 99
 
     plain = str(tmp_path / "plain")
     _merge_base_frame(spark, n=5).write.parquet(plain)
@@ -909,25 +688,6 @@ def test_erase_warehouse_keys_gdpr(spark, tmp_path):
     assert {
         r["original_id"] for r in read_warehouse(spark, path).collect()
     } == now
-
-
-def test_erase_warehouse_keys_rewrite_table(spark, tmp_path):
-    """Erasure falls back to a single-version full rewrite on upsert-sink
-    tables and stays snapshot-atomic."""
-    from etl_pipeline_challenge_aladia_spark.sinks import (
-        erase_warehouse_keys,
-        read_warehouse,
-        upsert_warehouse_batch,
-    )
-
-    path = str(tmp_path / "wh")
-    upsert_warehouse_batch(spark, _merge_base_frame(spark, n=20), path)
-    doomed = spark.createDataFrame(
-        [("doc_5", "v", "s")], ["original_id", "video_id", "session_id"]
-    )
-    assert erase_warehouse_keys(spark, doomed, path) == 1
-    rows = {r["original_id"] for r in read_warehouse(spark, path).collect()}
-    assert "doc_5" not in rows and len(rows) == 19
 
 
 def test_merge_sink_schema_evolution(spark, tmp_path):
@@ -1045,7 +805,7 @@ def test_replay_quarantine_recovers_fixed_messages(spark, tmp_path):
         f.write(json.dumps({"raw": good, "quarantined_at": "2024-01-01"}) + "\n")
         f.write(json.dumps({"raw": bad, "quarantined_at": "2024-01-01"}) + "\n")
 
-    n_rec, n_bad = replay_quarantine(spark, quar, wh, sink="merge")
+    n_rec, n_bad = replay_quarantine(spark, quar, wh)
     assert (n_rec, n_bad) == (1, 1)
     rows = {r["original_id"]: r for r in read_warehouse(spark, wh).collect()}
     assert rows["doc_q"]["watched_seconds"] == 42
@@ -1053,7 +813,7 @@ def test_replay_quarantine_recovers_fixed_messages(spark, tmp_path):
     assert residue.count() == 1 and residue.first()["raw"] == bad
 
     # replaying the residue again recovers nothing and leaves it intact
-    assert replay_quarantine(spark, quar, wh, sink="merge") == (0, 1)
+    assert replay_quarantine(spark, quar, wh) == (0, 1)
     assert spark.read.json(quar).count() == 1
 
 
@@ -1246,7 +1006,7 @@ def test_kafka_stream_contract_end_to_end(spark, tmp_path):
     def run():
         run_cdc_kafka_stream(
             spark, None, None, wh, ckpt,
-            quarantine_path=quar, sink="merge",
+            quarantine_path=quar,
             records=kafka_shaped_file_stream(spark, in_dir),
             available_now=True,
         )
@@ -1319,7 +1079,7 @@ def test_kafka_stream_against_real_broker(spark, tmp_path):
     wh = str(tmp_path / "wh")
     run_cdc_kafka_stream(
         spark, bootstrap, topic, wh, str(tmp_path / "ckpt"),
-        sink="merge", available_now=True,
+        available_now=True,
     )
     got = {r["original_id"] for r in read_warehouse(spark, wh).collect()}
     assert got == {"doc_k"}
@@ -1375,7 +1135,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
         [good_a_v1[:-5], envelope("insert", "doc_b", 1, watched=11)],
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     assert spark.read.json(dirs["quar"]).count() == 1
     assert ("doc_a", "video_1", "session_1") not in state(spark, dirs["wh"])
@@ -1387,7 +1147,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
          envelope("insert", "doc_c", 1, watched=33)],  # corrupt twin below
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     s = state(spark, dirs["wh"])
     assert s[("doc_a", "video_1", "session_1")] == (22, 2)
@@ -1406,7 +1166,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
          json.dumps({"raw": envelope("insert", "doc_d", 1, watched=44),
                      "quarantined_at": "t"})],
     )
-    n_rec, n_bad = replay_quarantine(spark, dirs["quar"], dirs["wh"], sink="merge")
+    n_rec, n_bad = replay_quarantine(spark, dirs["quar"], dirs["wh"])
     assert (n_rec, n_bad) == (2, 0)
 
     s2 = state(spark, dirs["wh"])
@@ -1422,7 +1182,7 @@ def test_replay_full_loop_never_regresses_live_state(spark, dirs):
          envelope("update", "doc_a", 1, watched=1)],  # stale live, loses too
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     s3 = state(spark, dirs["wh"])
     assert s3[("doc_a", "video_1", "session_1")] == (22, 2)
@@ -1608,7 +1368,9 @@ def test_cell_partitioned_index_probe_scans_only_probed_cells(spark, tmp_path):
 
 
 @pytest.mark.slow  # measured heavy in the full --durations run (see pytest.ini)
-def test_semantic_dedup_ingest_stream_matches_batch_operator(spark, tmp_path):
+def test_semantic_dedup_ingest_stream_matches_batch_operator(
+    spark, tmp_path, monkeypatch
+):
     """Streaming incremental semantic dedup: each micro-batch is screened
     against the ACCUMULATED index, per-batch reports equal the batch
     operator bit-for-bit (including one-shot semantic_dedup_incremental
@@ -1706,6 +1468,21 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(spark, tmp_path):
     assert rows(read_dedup_report(spark, rep)) == before
     assert rows(read_index(spark, idx).select("vec_id", "cell")) >= idx0_rows
     assert read_index(spark, idx).count() == 25
+
+    # an EMPTY centroid table routes nothing: both implementations screen
+    # to an empty frame with the normal output schema
+    from etl_pipeline_challenge_aladia_spark.operators.similarity import (
+        ASSIGN_IMPL_ENV,
+    )
+
+    schemas = []
+    for impl in ("arrow", "sql"):
+        monkeypatch.setenv(ASSIGN_IMPL_ENV, impl)
+        empty = semantic_dedup_screen(idx0, delta1, cents.limit(0))
+        assert empty.columns == ["vec_id", "canonical_id", "max_cos"]
+        assert empty.collect() == []
+        schemas.append([f.dataType for f in empty.schema.fields])
+    assert schemas[0] == schemas[1]
 
 
 @pytest.mark.slow  # measured heavy in the full --durations run (see pytest.ini)
@@ -1966,7 +1743,7 @@ def test_required_field_envelopes_quarantine_not_ingest(spark, dirs):
          envelope("insert", "doc_ok", 1, watched=5)],
     )
     run_cdc_file_stream(
-        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"], sink="merge"
+        spark, dirs["in"], dirs["wh"], dirs["ckpt"], dirs["quar"]
     )
     assert set(state(spark, dirs["wh"])) == {("doc_ok", "video_1", "session_1")}
     quar = spark.read.json(dirs["quar"])
@@ -1986,7 +1763,7 @@ def test_required_field_envelopes_quarantine_not_ingest(spark, dirs):
          json.dumps({"raw": envelope("insert", "doc_y", 1, watched=8),
                      "quarantined_at": "t"})],
     )
-    assert replay_quarantine(spark, dirs["quar"], dirs["wh"], sink="merge") == (2, 0)
+    assert replay_quarantine(spark, dirs["quar"], dirs["wh"]) == (2, 0)
     s = state(spark, dirs["wh"])
     assert s[("doc_x", "video_1", "session_1")] == (7, 1)
     assert s[("doc_y", "video_1", "session_1")] == (8, 1)

@@ -155,7 +155,7 @@ def test_streaming_pipeline_maintains_view(spark, tmp_path):
             envelope("insert", "d3", 1, 80, "video_b"),
         ]) + "\n")
     run_cdc_file_stream(
-        spark, d["in"], d["wh"], d["ckpt"], sink="merge", view_path=d["view"]
+        spark, d["in"], d["wh"], d["ckpt"], view_path=d["view"]
     )
     v1 = {r["video_id"]: r for r in read_view(spark, d["view"]).collect()}
     assert v1["video_a"]["n_sessions"] == 2
@@ -164,7 +164,7 @@ def test_streaming_pipeline_maintains_view(spark, tmp_path):
     with open(os.path.join(d["in"], "b2.json"), "w") as f:
         f.write(envelope("update", "d1", 2, 99, "video_a") + "\n")
     run_cdc_file_stream(
-        spark, d["in"], d["wh"], d["ckpt"], sink="merge", view_path=d["view"]
+        spark, d["in"], d["wh"], d["ckpt"], view_path=d["view"]
     )
     v2 = {r["video_id"]: r for r in read_view(spark, d["view"]).collect()}
     assert v2["video_a"]["max_watched_seconds"] == 99
