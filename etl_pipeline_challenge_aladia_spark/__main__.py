@@ -123,18 +123,17 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "curate-stream":
         import os
 
-        from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-            run_streaming_curation,
-        )
+        from etl_pipeline_challenge_aladia_spark.streaming import docs, store
 
-        run_streaming_curation(
+        store.drain_files(
             spark,
+            docs.CURATION_INGEST,
             args.input,
+            os.path.join(args.out, "checkpoint"),
             admitted_path=os.path.join(args.out, "admitted"),
             budget_state_path=os.path.join(args.out, "budget_state"),
             sig_store_path=os.path.join(args.out, "signatures"),
             report_path=os.path.join(args.out, "near_dup_report"),
-            checkpoint_dir=os.path.join(args.out, "checkpoint"),
             budget=args.budget,
             quality_min=args.quality_min,
             threshold=args.threshold,

@@ -2070,6 +2070,14 @@ def assign_to_centroids(
         import numpy as np
 
         rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
+        if not rows:
+            # no centroid to route onto -> no rows, like the sql join
+            return v.select(
+                "id",
+                F.lit(None).cast("int").alias("cluster"),
+                F.lit(None).cast("long").alias("dist_fx"),
+                F.lit(None).cast("double").alias("dist"),
+            ).limit(0)
         rows.sort(key=lambda r: r["cluster"])
         cent_map = {
             0: (

@@ -1483,7 +1483,7 @@ def q_doc_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus text is never re-read. Storage is pure precompute "
     "(distinct-semantics Jaccard), so output — and therefore the "
     "oracle — is IDENTICAL to the recompute form. The streaming twin "
-    "(streaming/docs.py:run_sigstore_ingest_stream) appends each "
+    "(streaming/docs.py:SIGSTORE_INGEST) appends each "
     "batch's precomputation and screens the next batch against it.",
 )
 def q_doc_incremental_near_dup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:

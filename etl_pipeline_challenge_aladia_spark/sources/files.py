@@ -71,9 +71,10 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     upstream shuffle stages (and raises on streaming frames). That contract
     is enforced, not conventional: streaming frames and frames whose
     analyzed plan contains a shuffle-introducing node (aggregate, join,
-    window, sort, distinct, repartition, limit) SKIP the probe and
-    repartition unconditionally — never silently double-executing the
-    upstream stage just to count partitions.
+    window, sort, distinct, repartition, limit, grouped or cogrouped
+    ``applyInPandas``, intersect, except/subtract, rebalance) SKIP the
+    probe and repartition unconditionally — never silently
+    double-executing the upstream stage just to count partitions.
     """
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.isStreaming:
@@ -101,6 +102,11 @@ _NON_SCAN_NODES = (
     "Deduplicate",
     "GlobalLimit",
     "Repartition",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "Intersect",
+    "Except",
+    "RebalancePartitions",
 )
 
 

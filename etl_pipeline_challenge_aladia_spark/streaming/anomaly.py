@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_challenge_aladia_spark.functions.rounding import round_half_up
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
     COMPACTED_DIR,
+    FileIngest,
     append_batch,
     compact_store,
     read_batch_store,
@@ -156,6 +157,11 @@ def make_mad_monitor_processor(
     return process_batch
 
 
+MAD_MONITOR_INGEST = FileIngest(
+    EVENTS_STREAM_SCHEMA, make_mad_monitor_processor, one_file_per_batch=True,
+)
+
+
 def read_mad_report(spark: SparkSession, report_path: str) -> DataFrame:
     return read_batch_store(spark, report_path, MAD_REPORT_SCHEMA)
 
@@ -173,34 +179,6 @@ def read_day_store(spark: SparkSession, store_path: str) -> DataFrame:
             .withColumn("batch_id", F.lit(None).cast("long"))
         )
     return df
-
-
-def run_mad_monitor_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    z_threshold: float = 3.5,
-) -> None:
-    """Drain currently-available event files through the monitor
-    (Trigger.AvailableNow; 1 file = 1 micro-batch, so every file's
-    anomaly report reflects exactly the history before it plus
-    itself)."""
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_mad_monitor_processor(store_path, report_path, z_threshold)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def compact_day_store(

@@ -24,6 +24,7 @@ from etl_pipeline_challenge_aladia_spark.operators.similarity import (
 )
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
     COMPACTED_DIR,
+    FileIngest,
     append_batch,
     compact_store,
     erase_keys,
@@ -60,28 +61,7 @@ def make_incremental_dedup_processor(
     return process_batch
 
 
-def run_incremental_dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    corpus_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.8,
-) -> None:
-    """Run the incremental-dedup ingest over all currently-available files
-    and stop (Trigger.AvailableNow) — continuous deployment just drops the
-    trigger. Each micro-batch is screened against every PREVIOUS batch's
-    documents (the corpus accumulates batch by batch)."""
-    stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(input_dir)
-    (
-        stream.writeStream.foreachBatch(
-            make_incremental_dedup_processor(corpus_path, report_path, threshold)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+INCREMENTAL_DEDUP_INGEST = FileIngest(DOC_STREAM_SCHEMA, make_incremental_dedup_processor)
 
 
 #: stored-index schemas (what the readers return before any ingest)
@@ -189,32 +169,11 @@ def make_sigstore_ingest_processor(
     return process_batch
 
 
+SIGSTORE_INGEST = FileIngest(DOC_STREAM_SCHEMA, make_sigstore_ingest_processor)
+
+
 def read_near_dup_report(spark, report_path: str) -> DataFrame:
     return _read_store(spark, report_path, NEAR_DUP_REPORT_SCHEMA)
-
-
-def run_sigstore_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.8,
-) -> None:
-    """Drain currently-available document files through the
-    signature-store ingest (Trigger.AvailableNow)."""
-    stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(input_dir)
-    (
-        stream.writeStream.foreachBatch(
-            make_sigstore_ingest_processor(
-                store_path, report_path, threshold
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 #: per-batch admission-state rows (what the budget reader returns pre-ingest)
@@ -337,26 +296,9 @@ def make_budget_admission_processor(
     return process_batch
 
 
-def run_budget_admission_stream(
-    spark: SparkSession,
-    input_dir: str,
-    admitted_path: str,
-    state_path: str,
-    checkpoint_dir: str,
-    budget: int,
-) -> None:
-    """Drain currently-available document files through the token-budget
-    admission gate (Trigger.AvailableNow)."""
-    stream = spark.readStream.schema(BUDGET_DOC_STREAM_SCHEMA).json(input_dir)
-    (
-        stream.writeStream.foreachBatch(
-            make_budget_admission_processor(admitted_path, state_path, budget)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+BUDGET_ADMISSION_INGEST = FileIngest(
+    BUDGET_DOC_STREAM_SCHEMA, make_budget_admission_processor,
+)
 
 
 # --------------------------------------------------------------------------
@@ -608,37 +550,10 @@ def make_text_drift_ingest_processor(
     return process_batch
 
 
-def run_text_drift_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    ingest_path: str,
-    stats_path: str,
-    checkpoint_dir: str,
-    drift_threshold_permille: int = 100,
-    min_evidence_permille: int = 200,
-    vocab_size: int = 50,
-) -> None:
-    """Drain available document files through the drift-monitored text
-    ingest (Trigger.AvailableNow, 1 file = 1 micro-batch so drift is
-    re-evaluated per arriving file)."""
-    stream = (
-        spark.readStream.schema(BUDGET_DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_text_drift_ingest_processor(
-                store_path, ingest_path, stats_path,
-                drift_threshold_permille, min_evidence_permille, vocab_size,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+TEXT_DRIFT_INGEST = FileIngest(
+    BUDGET_DOC_STREAM_SCHEMA, make_text_drift_ingest_processor,
+    one_file_per_batch=True,
+)
 
 
 def make_streaming_curation_processor(
@@ -709,40 +624,10 @@ def make_streaming_curation_processor(
     return process_batch
 
 
-def run_streaming_curation(
-    spark: SparkSession,
-    input_dir: str,
-    admitted_path: str,
-    budget_state_path: str,
-    sig_store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    budget: int,
-    quality_min: float = 0.0,
-    threshold: float = 0.8,
-) -> None:
-    """Drain available document files through the composed curation
-    ingest (Trigger.AvailableNow; 1 file = 1 micro-batch, so every file
-    is screened against all previously-ingested files' signatures — a
-    single all-files batch would screen against an empty store and
-    report nothing)."""
-    stream = (
-        spark.readStream.schema(BUDGET_DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_streaming_curation_processor(
-                admitted_path, budget_state_path, sig_store_path, report_path,
-                budget, quality_min, threshold,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+CURATION_INGEST = FileIngest(
+    BUDGET_DOC_STREAM_SCHEMA, make_streaming_curation_processor,
+    one_file_per_batch=True,
+)
 
 
 def compact_signature_store(
@@ -871,38 +756,14 @@ def make_segment_store_ingest_processor(
     return process_batch
 
 
+SEGMENT_STORE_INGEST = FileIngest(
+    BUDGET_DOC_STREAM_SCHEMA, make_segment_store_ingest_processor,
+    one_file_per_batch=True,
+)
+
+
 def read_segment_dedup_report(spark, report_path: str) -> DataFrame:
     return _read_store(spark, report_path, SEGMENT_REPORT_SCHEMA)
-
-
-def run_segment_store_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    segment_tokens: int = 8,
-) -> None:
-    """Drain currently-available document files through the
-    segment-store ingest (Trigger.AvailableNow; 1 file = 1 micro-batch,
-    so every file is screened against all previously-ingested files'
-    segment fingerprints)."""
-    stream = (
-        spark.readStream.schema(BUDGET_DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_segment_store_ingest_processor(
-                store_path, report_path, segment_tokens
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def compact_segment_store(
@@ -1020,35 +881,14 @@ def make_cdc_chunk_ingest_processor(
     return process_batch
 
 
+CDC_CHUNK_INGEST = FileIngest(
+    BUDGET_DOC_STREAM_SCHEMA, make_cdc_chunk_ingest_processor,
+    one_file_per_batch=True,
+)
+
+
 def read_cdc_chunk_dedup_report(spark, report_path: str) -> DataFrame:
     return _read_store(spark, report_path, CDC_CHUNK_REPORT_SCHEMA)
-
-
-def run_cdc_chunk_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    divisor: int = 8,
-) -> None:
-    """Drain currently-available document files through the CDC-chunk
-    ingest (Trigger.AvailableNow; 1 file = 1 micro-batch, so every file
-    is screened against all previously-ingested files\' chunks)."""
-    stream = (
-        spark.readStream.schema(BUDGET_DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_cdc_chunk_ingest_processor(store_path, report_path, divisor)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def compact_cdc_chunk_store(
@@ -1202,6 +1042,11 @@ def make_countmin_ingest_processor(
     return process_batch
 
 
+COUNTMIN_INGEST = FileIngest(
+    DOC_STREAM_SCHEMA, make_countmin_ingest_processor, one_file_per_batch=True,
+)
+
+
 def read_countmin_report(spark, report_path: str) -> DataFrame:
     return _read_store(spark, report_path, CM_REPORT_SCHEMA)
 
@@ -1251,35 +1096,6 @@ def countmin_estimate_from_store(
             .cast("long")
             .alias("cm_estimate")
         )
-    )
-
-
-def run_countmin_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    depth: int = 4,
-    width: int = 256,
-) -> None:
-    """Drain currently-available document files through the count-min
-    ingest (Trigger.AvailableNow; 1 file = 1 micro-batch)."""
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_countmin_ingest_processor(
-                store_path, report_path, depth, width
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
 

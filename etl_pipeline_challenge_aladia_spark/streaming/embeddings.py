@@ -35,6 +35,7 @@ from etl_pipeline_challenge_aladia_spark.operators.similarity import (
 # streaming module and test historically imports them from this module.
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
     COMPACTED_DIR,
+    FileIngest,
     append_batch,
     apply_erasure,
     carry_erasure,
@@ -90,29 +91,9 @@ def make_embedding_ingest_processor(
     return process_batch
 
 
-def run_embedding_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    centroids: DataFrame,
-    index_path: str,
-    stats_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain currently-available embedding files through the frozen-index
-    ingest (Trigger.AvailableNow) — the test/backfill execution mode; a
-    production deployment drops the trigger and runs continuously."""
-    stream = spark.readStream.schema(EMB_STREAM_SCHEMA).parquet(input_dir)
-    (
-        stream.writeStream.foreachBatch(
-            make_embedding_ingest_processor(
-                centroids, index_path, stats_path
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+EMBEDDING_INGEST = FileIngest(
+    EMB_STREAM_SCHEMA, make_embedding_ingest_processor, fmt="parquet",
+)
 
 
 #: schema of the cell-partitioned index (what read_index returns even
@@ -221,39 +202,13 @@ def make_semantic_dedup_ingest_processor(
     return process_batch
 
 
+SEMANTIC_DEDUP_INGEST = FileIngest(
+    EMB_STREAM_SCHEMA, make_semantic_dedup_ingest_processor, fmt="parquet",
+)
+
+
 def read_dedup_report(spark: SparkSession, report_path: str) -> DataFrame:
     return read_batch_store(spark, report_path, DEDUP_REPORT_SCHEMA)
-
-
-def run_semantic_dedup_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    centroids: DataFrame,
-    index_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.95,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain currently-available embedding files through the screening
-    ingest (Trigger.AvailableNow); ``max_files_per_trigger`` splits the
-    drain into multiple micro-batches (1 file = 1 batch) so tests can
-    exercise the batch-over-batch accumulation exactly."""
-    reader = spark.readStream.schema(EMB_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
-    (
-        stream.writeStream.foreachBatch(
-            make_semantic_dedup_ingest_processor(
-                centroids, index_path, report_path, threshold
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -427,42 +382,15 @@ def make_decontamination_ingest_processor(
     return process_batch
 
 
+DECONTAMINATION_INGEST = FileIngest(
+    EMB_STREAM_SCHEMA, make_decontamination_ingest_processor, fmt="parquet",
+)
+
+
 def read_decontamination_report(
     spark: SparkSession, report_path: str
 ) -> DataFrame:
     return read_batch_store(spark, report_path, DECON_REPORT_SCHEMA)
-
-
-def run_decontamination_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    eval_cells: DataFrame,
-    centroids: DataFrame,
-    report_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.95,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain currently-available training-embedding files through the
-    decontamination screen (Trigger.AvailableNow; 1 file = 1 batch
-    under ``max_files_per_trigger`` so tests can pin batch grain)."""
-    reader = spark.readStream.schema(EMB_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(input_dir)
-    (
-        stream.writeStream.foreachBatch(
-            make_decontamination_ingest_processor(
-                eval_cells, centroids, report_path, threshold
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -719,36 +647,10 @@ def make_monitored_ingest_processor(
     return process_batch
 
 
-def run_monitored_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    index_path: str,
-    stats_path: str,
-    checkpoint_dir: str,
-    drift_threshold_permille: int = 100,
-    min_evidence_permille: int = 200,
-) -> None:
-    """Drain available embedding files through the drift-monitored
-    ingest (Trigger.AvailableNow, 1 file = 1 micro-batch so drift is
-    re-evaluated per arriving file)."""
-    stream = (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_monitored_ingest_processor(
-                store_path, index_path, stats_path, drift_threshold_permille,
-                min_evidence_permille,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+MONITORED_INGEST = FileIngest(
+    EMB_STREAM_SCHEMA, make_monitored_ingest_processor, fmt="parquet",
+    one_file_per_batch=True,
+)
 
 
 def rebuild_index(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    FileIngest,
     append_batch,
     compact_store,
     erase_keys,
@@ -150,6 +151,12 @@ def make_media_fingerprint_ingest_processor(
     return process_batch
 
 
+MEDIA_FINGERPRINT_INGEST = FileIngest(
+    MEDIA_STREAM_SCHEMA, make_media_fingerprint_ingest_processor,
+    one_file_per_batch=True,
+)
+
+
 def read_media_near_dup_report(spark: SparkSession, report_path: str) -> DataFrame:
     return _read_store(spark, report_path, MEDIA_NEAR_DUP_REPORT_SCHEMA)
 
@@ -170,50 +177,6 @@ def read_media_sig_store(
         ).withColumn("modality", F.lit(m))
         out = part if out is None else out.unionByName(part)
     return out
-
-
-def run_media_fingerprint_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    max_hamming: int = 3,
-    blocks: int = 6,
-    key_blocks: int = 3,
-    audio_max_hamming: int = 6,
-    audio_blocks: int = 8,
-    audio_key_blocks: int = 2,
-) -> None:
-    """Drain currently-available media files through the fingerprint
-    ingest (Trigger.AvailableNow; 1 file = 1 micro-batch, so every
-    file's images AND audio are screened against all previously-
-    ingested fingerprints of their own modality, plus the within-file
-    self-screen). Image and audio Hamming ball / table layouts are each
-    tunable end-to-end."""
-    stream = (
-        spark.readStream.schema(MEDIA_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_media_fingerprint_ingest_processor(
-                store_path,
-                report_path,
-                max_hamming,
-                blocks,
-                key_blocks,
-                audio_max_hamming,
-                audio_blocks,
-                audio_key_blocks,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def compact_media_sig_store(
@@ -309,33 +272,10 @@ def make_video_sequence_ingest_processor(
     return process_batch
 
 
-def run_video_sequence_ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    store_path: str,
-    report_path: str,
-    checkpoint_dir: str,
-    min_run: int = 3,
-    frame_df_cap: int | None = 16,
-) -> None:
-    """Drain currently-available media files through the sequence
-    ingest (Trigger.AvailableNow; 1 file = 1 micro-batch)."""
-    stream = (
-        spark.readStream.schema(MEDIA_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .json(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(
-            make_video_sequence_ingest_processor(
-                store_path, report_path, min_run, frame_df_cap
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+VIDEO_SEQUENCE_INGEST = FileIngest(
+    MEDIA_STREAM_SCHEMA, make_video_sequence_ingest_processor,
+    one_file_per_batch=True,
+)
 
 
 def read_video_seq_report(spark: SparkSession, report_path: str) -> DataFrame:

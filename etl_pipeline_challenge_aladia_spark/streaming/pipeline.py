@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_challenge_aladia_spark.operators.structure import parse_envelope
 from etl_pipeline_challenge_aladia_spark.pipeline import envelopes_to_warehouse
 from etl_pipeline_challenge_aladia_spark.sinks import merge_warehouse_batch
+from etl_pipeline_challenge_aladia_spark.streaming.store import drain_stream
 
 
 def streaming_envelopes_from_json(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -145,17 +146,12 @@ def run_cdc_file_stream(
     micro-batch behind — the streaming half of the reference's analytics
     story (SURVEY §2-A1) without a per-query fact scan.
     """
-    envelopes = streaming_envelopes_from_json(spark, input_dir)
-    (
-        envelopes.writeStream.foreachBatch(
-            make_cdc_batch_processor(
-                warehouse_path, quarantine_path, view_path=view_path
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_stream(
+        streaming_envelopes_from_json(spark, input_dir),
+        make_cdc_batch_processor(
+            warehouse_path, quarantine_path, view_path=view_path
+        ),
+        checkpoint_dir,
     )
 
 
@@ -267,16 +263,12 @@ def run_cdc_kafka_stream(
         )
     else:
         envelopes = decode_kafka_records(records)
-    writer = (
-        observe_decode_health(envelopes)
-        .writeStream.foreachBatch(
-            make_cdc_batch_processor(warehouse_path, quarantine_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
+    drain_stream(
+        observe_decode_health(envelopes),
+        make_cdc_batch_processor(warehouse_path, quarantine_path),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    writer.start().awaitTermination()
 
 
 def make_jdbc_batch_processor(

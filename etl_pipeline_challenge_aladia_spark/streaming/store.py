@@ -56,6 +56,14 @@ protocol, stated once:
   contribution; such stores document a rebuild-from-live-corpus path
   instead of pretending deletion composes.
 
+- **One stream driver** (``drain_stream``): the only place the
+  source -> checkpointed ``foreachBatch(processor)`` -> drain chain is
+  written. Each file-fed ingest is a ``FileIngest`` declared next to
+  its processor factory and run with ``drain_files``. One file per
+  micro-batch is the grain of every ingest whose batch screens against,
+  or monitors, everything before it (one all-files batch would screen
+  against an empty store); the rest drain all files in one batch.
+
 Reference analog: none (the reference pipeline keeps no cross-message
 state, SURVEY.md §2.12); this is the north-star streaming layer's
 storage discipline, factored out after five processors had each
@@ -66,7 +74,8 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -388,3 +397,46 @@ def erase_keys(
         os.rename(tmp, d)
         removed += n
     return removed
+
+
+class FileIngest(NamedTuple):
+    """A file-fed ingest: its input files' ``schema`` and ``fmt``, its
+    ``foreachBatch`` processor factory and its batch grain."""
+
+    schema: str
+    make_processor: Callable[..., Callable[[DataFrame, int], None]]
+    fmt: str = "json"
+    one_file_per_batch: bool = False
+
+
+def drain_stream(
+    stream: DataFrame,
+    processor: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool = True,
+) -> None:
+    """Run ``processor`` as ``stream``'s checkpointed ``foreachBatch``
+    body until the input available at start is drained
+    (Trigger.AvailableNow) or, unless ``available_now``, until stopped."""
+    writer = stream.writeStream.foreachBatch(processor)
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    writer.start().awaitTermination()
+
+
+def drain_files(
+    spark: SparkSession,
+    ingest: FileIngest,
+    input_dir: str,
+    checkpoint_dir: str,
+    *args,
+    **kwargs,
+) -> None:
+    """Drain the files available under ``input_dir`` through
+    ``ingest``; ``args``/``kwargs`` build its processor."""
+    reader = spark.readStream.schema(ingest.schema).format(ingest.fmt)
+    if ingest.one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    stream = reader.load(input_dir)
+    drain_stream(stream, ingest.make_processor(*args, **kwargs), checkpoint_dir)

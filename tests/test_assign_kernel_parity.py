@@ -81,14 +81,20 @@ def test_grouped_pq_parity(monkeypatch, planted):
 
 
 def test_assign_to_centroids_parity(monkeypatch, planted):
+    empty_schemas = []
+
     def run():
         _, cents = sim.kmeans_with_centroids(planted, k=5, iters=2)
-        return sim.assign_to_centroids(
-            planted.filter(F.col("vec_id") % 2 == 0), cents
-        )
+        delta = planted.filter(F.col("vec_id") % 2 == 0)
+        # an empty centroid table routes nothing, on either path
+        empty = sim.assign_to_centroids(delta, cents.limit(0))
+        assert empty.collect() == []
+        empty_schemas.append([(f.name, f.dataType) for f in empty.schema])
+        return sim.assign_to_centroids(delta, cents)
 
     a, b = _both(monkeypatch, run)
     assert a == b and len(a) > 0
+    assert empty_schemas[0] == empty_schemas[1]
 
 
 def test_semantic_dedup_pair_sweep_parity(monkeypatch, planted):

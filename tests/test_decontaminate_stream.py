@@ -10,6 +10,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
+
 
 def _vecs(spark, rows):
     return spark.createDataFrame(
@@ -25,9 +27,9 @@ def test_decontamination_ingest_screens_against_frozen_eval_index(
         semantic_decontaminate,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        DECONTAMINATION_INGEST,
         build_eval_index,
         read_decontamination_report,
-        run_decontamination_ingest_stream,
     )
 
     # eval set: 10 directions 0.5 rad apart (neighbor cosine ~0.88 —
@@ -41,8 +43,8 @@ def test_decontamination_ingest_screens_against_frozen_eval_index(
     os.makedirs(in_dir)
 
     def drain():
-        run_decontamination_ingest_stream(
-            spark, in_dir, cells, cents, rep, ckpt
+        drain_files(
+            spark, DECONTAMINATION_INGEST, in_dir, ckpt, cells, cents, rep,
         )
 
     def rows(df):

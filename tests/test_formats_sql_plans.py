@@ -187,12 +187,29 @@ def test_fan_out_never_probes_non_scan_inputs(spark, sf_dir, monkeypatch):
         .groupBy("l_returnflag")
         .count()
     )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag"
+    )
+    half = li.filter(li["l_orderkey"] % 2 == 0)
+    by_flag = li.groupBy("l_returnflag")
+    other_shuffles = [
+        by_flag.applyInPandas(lambda pdf: pdf, li.schema),
+        by_flag.cogroup(half.groupBy("l_returnflag")).applyInPandas(
+            lambda a, b: a, li.schema
+        ),
+        li.intersect(half),
+        li.exceptAll(half),
+        li.subtract(half),
+        li.hint("rebalance"),
+    ]
 
     def _boom(self):
         raise AssertionError("fan_out probed .rdd on a non-scan input")
 
     monkeypatch.setattr(cdf.DataFrame, "rdd", property(_boom))
     out = fan_out(aggregated, partitions=8)
+    for df in other_shuffles:
+        fan_out(df, partitions=8)
     monkeypatch.undo()
     assert out.rdd.getNumPartitions() == 8
 

@@ -16,6 +16,7 @@ import pytest
 
 from etl_pipeline_challenge_aladia_spark.sinks import read_warehouse
 from etl_pipeline_challenge_aladia_spark.streaming.pipeline import run_cdc_file_stream
+from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
 
 
 def envelope(op, doc, version, watched=30, duration=61, video="video_1", session="session_1"):
@@ -418,7 +419,7 @@ def test_incremental_dedup_stream_screens_against_growing_corpus(spark, tmp_path
     flagged because the corpus ACCUMULATES micro-batch by micro-batch;
     clean docs pass. Replays are idempotent (batch-keyed overwrite)."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        run_incremental_dedup_stream,
+        INCREMENTAL_DEDUP_INGEST,
     )
 
     in_dir = str(tmp_path / "in")
@@ -437,10 +438,10 @@ def test_incremental_dedup_stream_screens_against_growing_corpus(spark, tmp_path
 
     write_batch("b1.jsonl", [{"doc_id": 1, "text": base_text},
                              {"doc_id": 2, "text": clean}])
-    run_incremental_dedup_stream(spark, in_dir, corpus, report, ckpt)
+    drain_files(spark, INCREMENTAL_DEDUP_INGEST, in_dir, ckpt, corpus, report)
     write_batch("b2.jsonl", [{"doc_id": 10, "text": near_dup},
                              {"doc_id": 11, "text": "completely unrelated words here"}])
-    run_incremental_dedup_stream(spark, in_dir, corpus, report, ckpt)
+    drain_files(spark, INCREMENTAL_DEDUP_INGEST, in_dir, ckpt, corpus, report)
 
     pairs = {
         (r["delta_id"], r["corpus_id"])
@@ -449,7 +450,7 @@ def test_incremental_dedup_stream_screens_against_growing_corpus(spark, tmp_path
     assert pairs == {(10, 1)}
     assert spark.read.parquet(corpus).count() == 4
     # replay with no new input: nothing reprocesses, outputs unchanged
-    run_incremental_dedup_stream(spark, in_dir, corpus, report, ckpt)
+    drain_files(spark, INCREMENTAL_DEDUP_INGEST, in_dir, ckpt, corpus, report)
     assert spark.read.parquet(corpus).count() == 4
 
 
@@ -464,8 +465,8 @@ def test_sigstore_ingest_stream_matches_recompute_and_accumulates(spark, tmp_pat
         minhash_incremental_pairs,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        SIGSTORE_INGEST,
         read_near_dup_report,
-        run_sigstore_ingest_stream,
     )
 
     in_dir = str(tmp_path / "in")
@@ -490,11 +491,11 @@ def test_sigstore_ingest_stream_matches_recompute_and_accumulates(spark, tmp_pat
     b2 = [(10, b2_dup_of_b1), (11, "completely unrelated words here")]
 
     write_batch("b1.jsonl", [{"doc_id": i, "text": t} for i, t in b1])
-    run_sigstore_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, SIGSTORE_INGEST, in_dir, ckpt, store, report)
     assert read_near_dup_report(spark, report).count() == 0  # empty store
 
     write_batch("b2.jsonl", [{"doc_id": i, "text": t} for i, t in b2])
-    run_sigstore_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, SIGSTORE_INGEST, in_dir, ckpt, store, report)
 
     got = {
         tuple(r)
@@ -516,7 +517,7 @@ def test_sigstore_ingest_stream_matches_recompute_and_accumulates(spark, tmp_pat
     ).count() == 4
 
     # drained rerun: nothing reprocesses
-    run_sigstore_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, SIGSTORE_INGEST, in_dir, ckpt, store, report)
     assert {
         tuple(r) for r in read_near_dup_report(spark, report).collect()
     } == got
@@ -1251,9 +1252,9 @@ def test_embedding_ingest_stream_routes_onto_frozen_index(spark, tmp_path):
         kmeans_with_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        EMBEDDING_INGEST,
         read_index,
         read_ingest_stats,
-        run_embedding_ingest_stream,
     )
 
     def vecs(lo, hi):
@@ -1274,9 +1275,9 @@ def test_embedding_ingest_stream_routes_onto_frozen_index(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(in_dir)
     vecs(1000, 1150).coalesce(1).write.mode("append").parquet(in_dir)
-    run_embedding_ingest_stream(spark, in_dir, cents, idx, stats, ckpt)
+    drain_files(spark, EMBEDDING_INGEST, in_dir, ckpt, cents, idx, stats)
     vecs(1150, 1250).coalesce(1).write.mode("append").parquet(in_dir)
-    run_embedding_ingest_stream(spark, in_dir, cents, idx, stats, ckpt)
+    drain_files(spark, EMBEDDING_INGEST, in_dir, ckpt, cents, idx, stats)
 
     index = read_index(spark, idx)
     assert index.count() == 250
@@ -1300,7 +1301,7 @@ def test_embedding_ingest_stream_routes_onto_frozen_index(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(cell" in plan
 
     # drained rerun: nothing reprocesses
-    run_embedding_ingest_stream(spark, in_dir, cents, idx, stats, ckpt)
+    drain_files(spark, EMBEDDING_INGEST, in_dir, ckpt, cents, idx, stats)
     assert read_index(spark, idx).count() == 250
 
 
@@ -1316,8 +1317,8 @@ def test_cell_partitioned_index_probe_scans_only_probed_cells(spark, tmp_path):
         kmeans_with_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        EMBEDDING_INGEST,
         read_index,
-        run_embedding_ingest_stream,
     )
 
     def vecs(lo, hi):
@@ -1337,9 +1338,9 @@ def test_cell_partitioned_index_probe_scans_only_probed_cells(spark, tmp_path):
     os.makedirs(in_dir)
     # two ingest batches -> cell=<id> directories under two batch dirs
     vecs(1000, 1100).coalesce(1).write.mode("append").parquet(in_dir)
-    run_embedding_ingest_stream(spark, in_dir, cents, idx, stats, ckpt)
+    drain_files(spark, EMBEDDING_INGEST, in_dir, ckpt, cents, idx, stats)
     vecs(1100, 1200).coalesce(1).write.mode("append").parquet(in_dir)
-    run_embedding_ingest_stream(spark, in_dir, cents, idx, stats, ckpt)
+    drain_files(spark, EMBEDDING_INGEST, in_dir, ckpt, cents, idx, stats)
 
     def disk_files(cell=None):
         out = []
@@ -1384,9 +1385,9 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(
         semantic_dedup_screen,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        SEMANTIC_DEDUP_INGEST,
         read_dedup_report,
         read_index,
-        run_semantic_dedup_ingest_stream,
     )
 
     def vecs(rows):
@@ -1422,7 +1423,9 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(
     os.makedirs(in_dir)
 
     def drain():
-        run_semantic_dedup_ingest_stream(spark, in_dir, cents, idx, rep, ckpt)
+        drain_files(
+            spark, SEMANTIC_DEDUP_INGEST, in_dir, ckpt, cents, idx, rep,
+        )
 
     def rows(df):
         return {tuple(r) for r in df.collect()}
@@ -1499,11 +1502,11 @@ def test_drift_monitored_ingest_retrains_and_swaps_atomically(spark, tmp_path):
         kmeans_with_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        MONITORED_INGEST,
         current_quantizer_version,
         load_quantizer,
         read_index,
         read_monitor_stats,
-        run_monitored_ingest_stream,
         train_and_save_quantizer,
     )
 
@@ -1528,8 +1531,8 @@ def test_drift_monitored_ingest_retrains_and_swaps_atomically(spark, tmp_path):
     assert current_quantizer_version(store) == 1
 
     def drain():
-        run_monitored_ingest_stream(
-            spark, in_dir, store, idx, stats, ckpt,
+        drain_files(
+            spark, MONITORED_INGEST, in_dir, ckpt, store, idx, stats,
             drift_threshold_permille=100,
         )
 
@@ -1614,10 +1617,10 @@ def test_rebuild_index_consolidates_onto_current_generation(spark, tmp_path):
         assign_to_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        MONITORED_INGEST,
         load_quantizer,
         read_index,
         rebuild_index,
-        run_monitored_ingest_stream,
         train_and_save_quantizer,
     )
 
@@ -1640,13 +1643,15 @@ def test_rebuild_index_consolidates_onto_current_generation(spark, tmp_path):
     train_and_save_quantizer(corpus, k=2, store_path=store)
 
     corpus.coalesce(1).write.mode("append").parquet(in_dir)
-    run_monitored_ingest_stream(
-        spark, in_dir, store, idx, stats, ckpt, drift_threshold_permille=100
+    drain_files(
+        spark, MONITORED_INGEST, in_dir, ckpt, store, idx, stats,
+        drift_threshold_permille=100,
     )
     # lopsided drift batch -> retrain publishes generation 2
     vecs(1000, 1100, 10, 0).coalesce(1).write.mode("append").parquet(in_dir)
-    run_monitored_ingest_stream(
-        spark, in_dir, store, idx, stats, ckpt, drift_threshold_permille=100
+    drain_files(
+        spark, MONITORED_INGEST, in_dir, ckpt, store, idx, stats,
+        drift_threshold_permille=100,
     )
     new_cents, _, ver = load_quantizer(spark, store)
     assert ver == 2
@@ -1777,7 +1782,7 @@ def test_budget_admission_stream_single_batch_equals_batch_operator(spark, tmp_p
         token_budget_sample,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        run_budget_admission_stream,
+        BUDGET_ADMISSION_INGEST,
     )
 
     rows = [
@@ -1790,7 +1795,10 @@ def test_budget_admission_stream_single_batch_equals_batch_operator(spark, tmp_p
     admitted = str(tmp_path / "admitted")
     state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    run_budget_admission_stream(spark, in_dir, admitted, state, ckpt, budget=40)
+    drain_files(
+        spark, BUDGET_ADMISSION_INGEST, in_dir, ckpt, admitted, state,
+        budget=40,
+    )
 
     got = {r["doc_id"] for r in spark.read.parquet(admitted).collect()}
     docs = spark.createDataFrame(
@@ -1810,7 +1818,7 @@ def test_budget_admission_stream_budget_persists_across_batches(spark, tmp_path)
     are dropped, and per-source admitted totals never exceed the budget.
     A drained rerun (replay with no new input) changes nothing."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        run_budget_admission_stream,
+        BUDGET_ADMISSION_INGEST,
     )
 
     in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
@@ -1828,20 +1836,32 @@ def test_budget_admission_stream_budget_persists_across_batches(spark, tmp_path)
 
     # budget 45 tokens; each doc is 10 -> 4 docs max, ever
     write_batch("b1.jsonl", range(3))       # admits all 3 (30 <= 45)
-    run_budget_admission_stream(spark, in_dir, admitted, state, ckpt, budget=45)
+    drain_files(
+        spark, BUDGET_ADMISSION_INGEST, in_dir, ckpt, admitted, state,
+        budget=45,
+    )
     assert spark.read.parquet(admitted).count() == 3
 
     write_batch("b2.jsonl", range(10, 16))  # only 1 more fits (40 <= 45)
-    run_budget_admission_stream(spark, in_dir, admitted, state, ckpt, budget=45)
+    drain_files(
+        spark, BUDGET_ADMISSION_INGEST, in_dir, ckpt, admitted, state,
+        budget=45,
+    )
     out = spark.read.parquet(admitted)
     assert out.count() == 4
     assert sum(r["n_tokens"] for r in out.collect()) == 40
 
     write_batch("b3.jsonl", range(20, 25))  # budget spent: nothing admitted
-    run_budget_admission_stream(spark, in_dir, admitted, state, ckpt, budget=45)
+    drain_files(
+        spark, BUDGET_ADMISSION_INGEST, in_dir, ckpt, admitted, state,
+        budget=45,
+    )
     assert spark.read.parquet(admitted).count() == 4
     # drained replay: no new input, outputs unchanged
-    run_budget_admission_stream(spark, in_dir, admitted, state, ckpt, budget=45)
+    drain_files(
+        spark, BUDGET_ADMISSION_INGEST, in_dir, ckpt, admitted, state,
+        budget=45,
+    )
     assert spark.read.parquet(admitted).count() == 4
 
 
@@ -1852,9 +1872,9 @@ def test_text_drift_loop_rebaselines_on_distribution_shift(spark, tmp_path):
     whose baseline equals a from-scratch derivation over the accumulated
     ingest. A drained replay changes nothing."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        TEXT_DRIFT_INGEST,
         _text_vocab_counts,
         load_text_baseline,
-        run_text_drift_ingest_stream,
         train_and_save_text_baseline,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
@@ -1882,8 +1902,8 @@ def test_text_drift_loop_rebaselines_on_distribution_shift(spark, tmp_path):
             f.write("\n".join(json.dumps(r) for r in rows) + "\n")
 
     def run():
-        run_text_drift_ingest_stream(
-            spark, in_dir, store, ingest, stats, ckpt,
+        drain_files(
+            spark, TEXT_DRIFT_INGEST, in_dir, ckpt, store, ingest, stats,
             drift_threshold_permille=100, min_evidence_permille=200,
             vocab_size=5,
         )
@@ -1926,7 +1946,7 @@ def test_streaming_curation_composes_quality_budget_and_dedup(spark, tmp_path):
     accounting (duplicates never consume budget), the token budget
     persists across batches, and a drained replay changes nothing."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        run_streaming_curation,
+        CURATION_INGEST,
     )
 
     in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
@@ -1946,9 +1966,9 @@ def test_streaming_curation_composes_quality_budget_and_dedup(spark, tmp_path):
             f.write("\n".join(json.dumps(r) for r in rows) + "\n")
 
     def run():
-        run_streaming_curation(
-            spark, in_dir, admitted, budget_state, sig_store, report, ckpt,
-            budget=200, quality_min=0.5, threshold=0.8,
+        drain_files(
+            spark, CURATION_INGEST, in_dir, ckpt, admitted, budget_state,
+            sig_store, report, budget=200, quality_min=0.5, threshold=0.8,
         )
 
     write_batch("b1.jsonl", [
@@ -2007,7 +2027,7 @@ def test_streaming_curation_one_shot_run_still_screens_across_files(spark, tmp_p
     import time
 
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        run_streaming_curation,
+        CURATION_INGEST,
     )
 
     in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
@@ -2020,11 +2040,11 @@ def test_streaming_curation_one_shot_run_still_screens_across_files(spark, tmp_p
             f.write(json.dumps({"doc_id": doc_id, "source": "s", "text": text}) + "\n")
         time.sleep(0.05)  # distinct mtimes -> deterministic file order
 
-    run_streaming_curation(
-        spark, in_dir,
+    drain_files(
+        spark, CURATION_INGEST, in_dir, str(tmp_path / "ckpt"),
         str(tmp_path / "admitted"), str(tmp_path / "bstate"),
-        str(tmp_path / "sigs"), str(tmp_path / "report"),
-        str(tmp_path / "ckpt"), budget=500, quality_min=0.5,
+        str(tmp_path / "sigs"), str(tmp_path / "report"), budget=500,
+        quality_min=0.5,
     )
     pairs = {
         (r["delta_id"], r["corpus_id"])
@@ -2274,10 +2294,10 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
         segment_fingerprint_store,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        SEGMENT_STORE_INGEST,
         compact_segment_store,
         make_segment_store_ingest_processor,
         read_segment_dedup_report,
-        run_segment_store_ingest_stream,
     )
 
     in_dir = str(tmp_path / "in")
@@ -2306,7 +2326,7 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
     ]
 
     write_batch("b1.jsonl", b1)
-    run_segment_store_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, SEGMENT_STORE_INGEST, in_dir, ckpt, store, report)
     r0 = read_segment_dedup_report(spark, report).collect()
     assert {r["source"]: r["n_removed_segments"] for r in r0} == {
         "s1": 0,
@@ -2314,7 +2334,7 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
     }  # empty store: nothing removed
 
     write_batch("b2.jsonl", b2)
-    run_segment_store_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, SEGMENT_STORE_INGEST, in_dir, ckpt, store, report)
     got = {
         tuple(r)
         for r in read_segment_dedup_report(spark, report)
@@ -2345,7 +2365,7 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
 
     # drained rerun: no new files -> nothing changes
     before = {tuple(r) for r in read_segment_dedup_report(spark, report).collect()}
-    run_segment_store_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, SEGMENT_STORE_INGEST, in_dir, ckpt, store, report)
     after = {tuple(r) for r in read_segment_dedup_report(spark, report).collect()}
     assert after == before
 
@@ -2370,7 +2390,7 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
     with open(os.path.join(in2, "b3.jsonl"), "w") as f:
         f.write(json.dumps(
             {"doc_id": 20, "source": "s1", "text": seg_z}) + "\n")
-    run_segment_store_ingest_stream(spark, in2, store2, report2, ckpt2)
+    drain_files(spark, SEGMENT_STORE_INGEST, in2, ckpt2, store2, report2)
     r3 = read_segment_dedup_report(spark, report2).collect()
     assert len(r3) == 1 and r3[0]["n_removed_segments"] == 1  # seg_z stored
 
@@ -2386,11 +2406,11 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     and a compacted store pointed at by a fresh checkpoint still
     answers with the full history inside its hard depth*width bound."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        COUNTMIN_INGEST,
         compact_countmin_store,
         countmin_estimate_from_store,
         make_countmin_ingest_processor,
         read_countmin_report,
-        run_countmin_ingest_stream,
     )
 
     in_dir = str(tmp_path / "in")
@@ -2410,7 +2430,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
             {"doc_id": 2, "text": "gamma"},
         ],
     )
-    run_countmin_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, COUNTMIN_INGEST, in_dir, ckpt, store, report)
     r0 = {
         r["tok"]: (r["batch_n"], r["hist_estimate"])
         for r in read_countmin_report(spark, report).collect()
@@ -2420,7 +2440,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     write_batch(
         "b2.jsonl", [{"doc_id": 10, "text": "alpha beta beta delta"}]
     )
-    run_countmin_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, COUNTMIN_INGEST, in_dir, ckpt, store, report)
     r1 = {
         r["tok"]: (r["batch_n"], r["hist_estimate"])
         for r in read_countmin_report(spark, report)
@@ -2444,7 +2464,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     before = {
         tuple(r) for r in read_countmin_report(spark, report).collect()
     }
-    run_countmin_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, COUNTMIN_INGEST, in_dir, ckpt, store, report)
     assert {
         tuple(r) for r in read_countmin_report(spark, report).collect()
     } == before
@@ -2479,7 +2499,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
         f.write(json.dumps({"doc_id": 20, "text": "alpha omega"}) + "\n")
     report2 = str(tmp_path / "report2")
     ckpt2 = str(tmp_path / "ckpt2")
-    run_countmin_ingest_stream(spark, in2, store2, report2, ckpt2)
+    drain_files(spark, COUNTMIN_INGEST, in2, ckpt2, store2, report2)
     r3 = {
         r["tok"]: (r["batch_n"], r["hist_estimate"])
         for r in read_countmin_report(spark, report2).collect()
@@ -2506,10 +2526,10 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
         segment_fingerprint_store,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        CDC_CHUNK_INGEST,
         compact_cdc_chunk_store,
         make_cdc_chunk_ingest_processor,
         read_cdc_chunk_dedup_report,
-        run_cdc_chunk_ingest_stream,
     )
 
     in_dir = str(tmp_path / "in")
@@ -2536,7 +2556,7 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
             f"f{i}" for i in range(40))},
     ]
     write_batch("b1.jsonl", b1)
-    run_cdc_chunk_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, CDC_CHUNK_INGEST, in_dir, ckpt, store, report)
     r0 = read_cdc_chunk_dedup_report(spark, report).collect()
     assert {r["source"]: r["n_removed_chunks"] for r in r0} == {
         "s1": 0,
@@ -2544,7 +2564,7 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
     }  # empty store: nothing removed
 
     write_batch("b2.jsonl", b2)
-    run_cdc_chunk_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, CDC_CHUNK_INGEST, in_dir, ckpt, store, report)
     got = {
         tuple(r)
         for r in read_cdc_chunk_dedup_report(spark, report)
@@ -2585,7 +2605,7 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
     before = {
         tuple(r) for r in read_cdc_chunk_dedup_report(spark, report).collect()
     }
-    run_cdc_chunk_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, CDC_CHUNK_INGEST, in_dir, ckpt, store, report)
     after = {
         tuple(r) for r in read_cdc_chunk_dedup_report(spark, report).collect()
     }
@@ -2610,7 +2630,7 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
     with open(os.path.join(in2, "b3.jsonl"), "w") as f:
         f.write(json.dumps(
             {"doc_id": 20, "source": "s1", "text": big}) + "\n")
-    run_cdc_chunk_ingest_stream(spark, in2, store2, report2, ckpt2)
+    drain_files(spark, CDC_CHUNK_INGEST, in2, ckpt2, store2, report2)
     r3 = read_cdc_chunk_dedup_report(spark, report2).collect()
     assert len(r3) == 1 and r3[0]["n_removed_chunks"] > 0
     assert r3[0]["tokens_kept"] == 0  # exact re-ingest: everything stored

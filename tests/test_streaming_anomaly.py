@@ -10,11 +10,12 @@ import os
 from pyspark.sql import functions as F  # noqa: F401
 
 from etl_pipeline_challenge_aladia_spark.streaming.anomaly import (
+    MAD_MONITOR_INGEST,
     make_mad_monitor_processor,
     read_day_store,
     read_mad_report,
-    run_mad_monitor_stream,
 )
+from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
 
 
 def _events(spark, rows):
@@ -128,7 +129,7 @@ def test_file_stream_end_to_end(spark, tmp_path):
     store = str(tmp_path / "store")
     report = str(tmp_path / "report")
     ckpt = str(tmp_path / "ckpt")
-    run_mad_monitor_stream(spark, str(in_dir), store, report, ckpt)
+    drain_files(spark, MAD_MONITOR_INGEST, str(in_dir), ckpt, store, report)
     rep = read_mad_report(spark, report).collect()
     assert {r["day"] for r in rep} == {"2024-01-09"}
     assert os.path.isdir(os.path.join(store, "batch=0"))

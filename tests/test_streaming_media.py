@@ -14,6 +14,7 @@ from etl_pipeline_challenge_aladia_spark.operators.codecs import (
     encode_ppm,
     encode_wav_pcm16,
 )
+from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
 
 
 def _img(seed, blot=False):
@@ -41,12 +42,12 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
         image_ahash,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.media import (
+        MEDIA_FINGERPRINT_INGEST,
         _delta_media_frame,
         compact_media_sig_store,
         make_media_fingerprint_ingest_processor,
         read_media_near_dup_report,
         read_media_sig_store,
-        run_media_fingerprint_ingest_stream,
     )
 
     in_dir = str(tmp_path / "in")
@@ -88,11 +89,11 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
         _row(12, near_wav, modality="audio"),
     ]
     write_batch("b1.jsonl", b1)
-    run_media_fingerprint_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, MEDIA_FINGERPRINT_INGEST, in_dir, ckpt, store, report)
     assert read_media_near_dup_report(spark, report).count() == 0
 
     write_batch("b2.jsonl", b2)
-    run_media_fingerprint_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, MEDIA_FINGERPRINT_INGEST, in_dir, ckpt, store, report)
     rep_rows = (
         read_media_near_dup_report(spark, report)
         .filter("batch_id = 1")
@@ -131,7 +132,7 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
         return s, r
 
     before = snapshot()
-    run_media_fingerprint_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, MEDIA_FINGERPRINT_INGEST, in_dir, ckpt, store, report)
     assert snapshot() == before
     b2_df = spark.createDataFrame(
         [(r["media_id"], r["modality"], r["content_b64"]) for r in b2],
@@ -149,8 +150,9 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
     os.makedirs(in2)
     with open(os.path.join(in2, "b3.jsonl"), "w") as f:
         f.write(json.dumps(_row(20, a)) + "\n")  # exact re-ingest of image 1
-    run_media_fingerprint_ingest_stream(
-        spark, in2, store2, str(tmp_path / "report2"), str(tmp_path / "ckpt2")
+    drain_files(
+        spark, MEDIA_FINGERPRINT_INGEST, in2, str(tmp_path / "ckpt2"), store2,
+        str(tmp_path / "report2"),
     )
     r3 = {
         (r["delta_id"], r["corpus_id"]): r["hamming"]
@@ -193,12 +195,12 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
         video_frame_hashes,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.media import (
+        VIDEO_SEQUENCE_INGEST,
         _delta_media_frame,
         erase_video_seq_keys,
         make_video_sequence_ingest_processor,
         read_video_seq_report,
         read_video_seq_store,
-        run_video_sequence_ingest_stream,
     )
 
     A, B, C, D, E = (_onehot16(v) for v in range(5))
@@ -216,13 +218,13 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
     ]
     with open(os.path.join(in_dir, "b1.jsonl"), "w") as f:
         f.write(json.dumps(b1[0]) + "\n")
-    run_video_sequence_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, VIDEO_SEQUENCE_INGEST, in_dir, ckpt, store, report)
     assert read_video_seq_report(spark, report).count() == 0
     assert read_video_seq_store(spark, store).count() == 5  # 5 frames
 
     with open(os.path.join(in_dir, "b2.jsonl"), "w") as f:
         f.write("\n".join(json.dumps(r) for r in b2) + "\n")
-    run_video_sequence_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, VIDEO_SEQUENCE_INGEST, in_dir, ckpt, store, report)
     got = {
         (r.delta_id, r.corpus_id): (r.longest_run, r.n_runs)
         for r in read_video_seq_report(spark, report).collect()
@@ -254,7 +256,7 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
         return s, r
 
     before = snapshot()
-    run_video_sequence_ingest_stream(spark, in_dir, store, report, ckpt)
+    drain_files(spark, VIDEO_SEQUENCE_INGEST, in_dir, ckpt, store, report)
     assert snapshot() == before
     make_video_sequence_ingest_processor(store, report)(df2, 1)
     assert snapshot() == before
