@@ -31,7 +31,7 @@ import shutil
 import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.operators.dedup import latest_per_key
@@ -210,6 +210,12 @@ def _read_manifest(path: str) -> dict | None:
         return json.load(fh)
 
 
+def _table_version(path: str) -> int:
+    """The committed snapshot version (0 for a table with no manifest)."""
+    manifest = _read_manifest(path)
+    return int(manifest["version"]) if manifest else 0
+
+
 def _commit_manifest(path: str, manifest: dict) -> None:
     """The ONE atomic visibility switch: fsync a temp file, then rename it
     over the manifest (POSIX rename is atomic; object stores use a
@@ -325,7 +331,12 @@ def merge_warehouse_batch(
     A directory without a manifest is only started as a fresh table when
     it holds nothing but ``._*`` staging leftovers; anything else raises
     ``ValueError`` with the files untouched, so a stored table is never
-    silently discarded. Returns the number of buckets written.
+    silently discarded.
+
+    The batch is read once: one eager ``localCheckpoint`` materializes it
+    with its bucket ids, and an ``Observation`` on that same job yields
+    the touched-bucket set, so neither a separate collect nor the write
+    re-runs the batch's plan. Returns the number of buckets written.
     """
     manifest = _read_manifest(path)
     if manifest is None:
@@ -354,11 +365,14 @@ def merge_warehouse_batch(
     bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast(
         "int"
     )
-    b = batch.withColumn("_bucket", bucket)
-    # bounded by num_buckets — a driver-safe collect by construction
-    touched = sorted(
-        r["_bucket"] for r in b.select("_bucket").distinct().collect()
+    # the observed set is bounded by num_buckets, whatever the batch size
+    seen = Observation()
+    b = (
+        batch.withColumn("_bucket", bucket)
+        .observe(seen, F.collect_set("_bucket").alias("touched"))
+        .localCheckpoint(eager=True)
     )
+    touched = sorted(seen.get["touched"])
     if not touched:
         _commit_manifest(path, {**manifest, "garbage": []})
         return 0

@@ -15,13 +15,14 @@ dependency-free: the write happens on the DRIVER's listener bus thread
 production deployment would point the same hook at a metrics system.
 ``corrupt_ratio()`` is the alert predicate the docstring promised.
 
-Counting caveat: inside a ``foreachBatch`` micro-batch the body may run
-several ACTIONS over the same batch frame (quarantine write + upsert),
-and ``observe`` counters accumulate across those plan re-executions —
-totals arrive as exact multiples of the true batch size. The RATIO
-(``corrupt_ratio``) is invariant to that and is the signal to alert on;
-absolute message rates come from ``num_input_rows``, which Spark reports
-once per batch at the source.
+Counting: ``observe`` counters accumulate over every execution of the
+observed plan. The CDC ``foreachBatch`` bodies materialize the decoded
+batch once before any action (``_split_off_quarantine`` in
+streaming/pipeline.py), so ``n_messages`` equals the messages delivered
+in the batch. A processor that runs several actions straight over the
+raw batch frame re-executes the plan per action, and its totals arrive
+as exact multiples of the batch size; ``corrupt_ratio`` is invariant to
+that.
 """
 
 from __future__ import annotations

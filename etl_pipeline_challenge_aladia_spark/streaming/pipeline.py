@@ -28,7 +28,10 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.operators.structure import parse_envelope
 from etl_pipeline_challenge_aladia_spark.pipeline import envelopes_to_warehouse
-from etl_pipeline_challenge_aladia_spark.sinks import merge_warehouse_batch
+from etl_pipeline_challenge_aladia_spark.sinks import (
+    _table_version,
+    merge_warehouse_batch,
+)
 from etl_pipeline_challenge_aladia_spark.streaming.store import drain_stream
 
 
@@ -141,7 +144,8 @@ def run_cdc_file_stream(
 
     ``view_path`` additionally maintains the materialized per-video stats
     view (views.py) INSIDE each micro-batch: after the upsert commits, the
-    view refreshes incrementally from the change feed, so downstream
+    view recomputes the groups of the batch's ``video_id``s (or, after an
+    out-of-band commit, of the change feed since the view), so downstream
     dashboards read a pre-aggregated table that is never more than one
     micro-batch behind — the streaming half of the reference's analytics
     story (SURVEY §2-A1) without a per-query fact scan.
@@ -159,12 +163,18 @@ def _split_off_quarantine(
     batch: DataFrame, quarantine_path: str | None
 ) -> DataFrame:
     """The shared dead-letter split of every CDC sink's foreachBatch body:
-    append corrupt rows' ORIGINAL message text to the quarantine (its
-    purpose is inspection/replay, not a row of NULL envelope fields) and
-    return the clean envelopes. The append is unconditional: an empty
-    append is one cheap no-row task, while probing emptiness first
-    (limit(1).count()) costs a full extra job on EVERY micro-batch of
-    the hot path."""
+    materialize the decoded batch once, append corrupt rows' ORIGINAL
+    message text to the quarantine (its purpose is inspection/replay, not
+    a row of NULL envelope fields) and return the clean envelopes.
+
+    The eager ``localCheckpoint`` is the batch's one read and parse of its
+    source: every later action (the quarantine append, the sink's writes,
+    the view refresh) reads the materialized rows, and the
+    ``decode_health`` counters count each message once. The append is
+    unconditional: an empty append is one cheap no-row task, while probing
+    emptiness first (limit(1).count()) costs a full extra job on EVERY
+    micro-batch of the hot path."""
+    batch = batch.localCheckpoint(eager=True)
     if quarantine_path is not None:
         bad = batch.filter(batch["_corrupt"]).select(
             F.col("_raw").alias("raw"),
@@ -190,17 +200,20 @@ def make_cdc_batch_processor(
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         ok = _split_off_quarantine(batch, quarantine_path)
         rows = envelopes_to_warehouse(ok, with_ingestion_time=True)
+        base_version = _table_version(warehouse_path)
         merge_warehouse_batch(batch.sparkSession, rows, warehouse_path)
         if view_path is not None:
             from etl_pipeline_challenge_aladia_spark.views import (
                 refresh_video_stats_view,
             )
 
-            # incremental: change feed since the view's source version ->
-            # dirty groups only; idempotent on redelivery (a replayed
-            # batch leaves the table version unchanged -> no-op refresh)
+            # dirty groups only: this batch's video_ids when its merge made
+            # the only commit since the view. A replayed batch (crash
+            # between merge and refresh) commits a new version again, so
+            # the view is two behind and refreshes from the change feed.
             refresh_video_stats_view(
-                batch.sparkSession, warehouse_path, view_path
+                batch.sparkSession, warehouse_path, view_path,
+                changed=(base_version, rows),
             )
 
     return process_batch

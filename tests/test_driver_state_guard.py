@@ -65,8 +65,6 @@ ALLOWED_COLLECTS = {
         "the cell count (the same bound the old per-step counts had)",
     ("operators/skew.py", 'top = top_key_skew(diag, on, n=1).collect()'):
         "n=1 hottest-key diagnostic row for the salting decision",
-    ("sinks.py", 'r["_bucket"] for r in b.select("_bucket").distinct().collect()'):
-        "distinct bucket ids — num_buckets-bounded maintenance list",
     ("sinks.py", 'days = [r["_day"] for r in current.select("_day").distinct().collect()]'):
         "distinct partition days — partition-count-bounded maintenance",
     ("sinks.py", 'r["_bucket"] for r in tagged.select("_bucket").distinct().collect()'):

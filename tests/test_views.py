@@ -171,3 +171,23 @@ def test_streaming_pipeline_maintains_view(spark, tmp_path):
     assert v2["video_b"] == v1["video_b"]  # untouched group identical
     want = _as_sorted(video_stats(read_warehouse(spark, d["wh"])))
     assert _as_sorted(read_view(spark, d["view"])) == want
+
+    # an out-of-band erase leaves the view one version behind, then a
+    # batch of one corrupt line merges nothing: the view must still drop
+    # the erased group, not stamp itself current from the empty batch
+    erase_warehouse_keys(
+        spark,
+        spark.createDataFrame(
+            [("d3", "video_b", "s_d3")],
+            ["original_id", "video_id", "session_id"],
+        ),
+        d["wh"],
+    )
+    with open(os.path.join(d["in"], "b3.json"), "w") as f:
+        f.write("corrupt {not json\n")
+    run_cdc_file_stream(
+        spark, d["in"], d["wh"], d["ckpt"], view_path=d["view"]
+    )
+    want = _as_sorted(video_stats(read_warehouse(spark, d["wh"])))
+    assert [r[0] for r in want] == ["video_a"]
+    assert _as_sorted(read_view(spark, d["view"])) == want
