@@ -8,10 +8,14 @@ dedup (SURVEY.md §2.1-S5, §1.4). Spark-first equivalents:
   analytics (the layout the reference README wished for but didn't build).
 - ``merge_warehouse_batch``: dedup-on-write for ``foreachBatch`` — merges
   a micro-batch into the bucketed stored table keeping the latest version
-  per key, rewriting only the buckets the batch's keys hash into. Paired
-  with Structured Streaming checkpointing this gives effectively
-  exactly-once (at-least-once redelivery collapses on the dedup key), the
-  engine's answer to the reference's ack/requeue + ReplacingMergeTree.
+  per key, rewriting only the buckets the batch's keys hash into. The
+  bucket count follows the data: a table starts at one bucket and doubles
+  (or more) when its largest bucket outgrows one scan split
+  (``spark.sql.files.maxPartitionBytes``), so a batch rewrites at most
+  about one split per key-bucket it hits. Paired with Structured Streaming
+  checkpointing this gives effectively exactly-once (at-least-once
+  redelivery collapses on the dedup key), the engine's answer to the
+  reference's ack/requeue + ReplacingMergeTree.
 
 The merge sink commits through an atomic snapshot manifest, which grows
 into a small transactional table format: ``read_warehouse(version=)`` /
@@ -291,28 +295,134 @@ def vacuum_warehouse(path: str, keep_snapshots: int = 0) -> int:
     return _gc_unreferenced(path, trimmed)
 
 
+def _bucket_of(keys: Sequence[str], num_buckets: int):
+    """The routing expression every reader and writer of a merge table
+    shares: ``pmod(xxhash64(keys), num_buckets)``."""
+    return F.pmod(
+        F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)
+    ).cast("int")
+
+
+def _tag_buckets(frame: DataFrame, bucket) -> tuple[DataFrame, list[int]]:
+    """Materialize ``frame`` with its ``_bucket`` ids in one eager
+    ``localCheckpoint``; an ``Observation`` on that same job yields the
+    touched-bucket set (bounded by the bucket count, whatever the frame's
+    size), so neither a separate collect nor the later write re-runs the
+    frame's plan."""
+    seen = Observation()
+    tagged = (
+        frame.withColumn("_bucket", bucket)
+        .observe(seen, F.collect_set("_bucket").alias("touched"))
+        .localCheckpoint(eager=True)
+    )
+    return tagged, sorted(seen.get["touched"])
+
+
+def _split_bytes(spark: SparkSession) -> int:
+    """One scan split: ``spark.sql.files.maxPartitionBytes`` in bytes."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
+def _grown_bucket_count(num_buckets: int, bucket_bytes: dict, split: int) -> int:
+    """The bucket count the next commit writes: unchanged while the largest
+    bucket fits one scan split, else the smallest power-of-two multiple of
+    it that brings the largest bucket under the split (hashing spreads a
+    bucket's rows evenly over its ``m`` children)."""
+    largest = max(bucket_bytes.values(), default=0)
+    m = 1
+    while largest > m * split:
+        m *= 2
+    return num_buckets * m
+
+
+def _data_bytes(d: str) -> int:
+    """Bytes of the data files in a bucket directory (Spark skips ``.`` and
+    ``_`` files — checksums, markers — when it scans, so they do not count)."""
+    return sum(
+        e.stat().st_size for e in os.scandir(d) if not e.name.startswith((".", "_"))
+    )
+
+
+def _publish(
+    path: str,
+    staged: str,
+    touched: Sequence[int],
+    manifest: dict,
+    num_buckets: int,
+    retain_snapshots: int,
+) -> int:
+    """Install the staged ``_bucket=N`` directories of every touched bucket
+    as version directories and publish them in one manifest commit. A
+    touched bucket with nothing staged has no rows left and leaves the
+    manifest. Each installed bucket's data bytes go into the manifest's
+    ``bucket_bytes`` for the next merge's split decision (a driver-side
+    stat of the files just renamed). Returns the directories installed."""
+    version = int(manifest["version"]) + 1
+    buckets = dict(manifest["buckets"])
+    sizes = dict(manifest.get("bucket_bytes", {}))
+    replaced = []
+    written = 0
+    for bk in touched:
+        key = str(bk)
+        if key in buckets:
+            replaced.append(buckets[key])
+        src = os.path.join(staged, f"_bucket={bk}")
+        if os.path.exists(src):
+            new_dir = os.path.join(path, _bucket_dirname(bk, version))
+            os.rename(src, new_dir)
+            buckets[key] = os.path.basename(new_dir)
+            sizes[key] = _data_bytes(new_dir)
+            written += 1
+        else:
+            buckets.pop(key, None)
+            sizes.pop(key, None)
+    _commit_manifest(
+        path,
+        {"version": version, "num_buckets": num_buckets, "buckets": buckets,
+         "bucket_bytes": sizes, "garbage": replaced,
+         "history": _rotate_history(manifest, retain_snapshots)},
+    )
+    shutil.rmtree(staged, ignore_errors=True)
+    return written
+
+
 def merge_warehouse_batch(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     keys: Sequence[str] = tuple(DEDUP_KEY),
     order_col: str = "version",
     retain_snapshots: int = 1,
 ) -> int:
-    """MERGE-style upsert with I/O proportional to the batch, not the table,
-    and SNAPSHOT-ATOMIC visibility for concurrent readers.
+    """MERGE-style upsert that rewrites only the buckets a batch's keys hash
+    into, with SNAPSHOT-ATOMIC visibility for concurrent readers.
 
     Layout: one directory per bucket (``_bucket = pmod(xxhash64(keys), N)``)
-    per version, resolved through ``_manifest.json``. A micro-batch only
-    touches the buckets its keys hash into, so the merge reads and rewrites
-    just those — at 100 TB a small batch rewrites batch_buckets/N of the
-    table instead of all of it. All touched buckets are staged as NEW
+    per version, resolved through ``_manifest.json``. A micro-batch reads
+    and rewrites just the buckets its keys hash into, and each bucket holds
+    at most about one scan split (``spark.sql.files.maxPartitionBytes``),
+    so a batch's I/O is bounded by (buckets it touches) x (one split) —
+    whatever the table's size. All touched buckets are staged as NEW
     version directories first, then published by one atomic manifest rename
     (``_commit_manifest``): a reader resolving the manifest before the
     commit sees the complete old snapshot, after it the complete new one,
     never a mix. This is the plain-parquet equivalent of Delta/Iceberg
     ``MERGE INTO``.
+
+    Bucket count: a new table starts at ``num_buckets`` buckets (default 1:
+    a small table is one file, and a batch writes one file and lists one
+    directory). The manifest then owns the count — a later caller's
+    ``num_buckets`` is ignored, since a drifting count would split keys
+    across buckets — and records each bucket's data bytes, measured by the
+    commit. When the largest bucket exceeds one scan split, the next merge
+    re-buckets the whole table in its one atomic commit: the count grows
+    to the smallest power-of-two multiple that brings the largest bucket
+    under the split. As ``pmod(h, m*N) = pmod(h, N) mod N``, old bucket
+    ``b``'s rows land only in new buckets ``b + k*N``; the rewrite is this
+    same touched-bucket path with every bucket touched under the new
+    modulus. The decision reads only the manifest: no Spark job, no
+    listing.
 
     Crash safety: a crash before the manifest commit leaves only
     unreferenced new-version directories — the table still reads as the old
@@ -325,18 +435,13 @@ def merge_warehouse_batch(
     until ``vacuum_warehouse`` expires it: the knob Iceberg calls
     snapshot expiry, Delta ``VERSION AS OF`` + ``VACUUM``.
 
-    ``num_buckets`` is pinned in the manifest at table creation; later
-    calls use the pinned value (a caller drifting the bucket count would
-    otherwise split keys across buckets and break the merge locality).
     A directory without a manifest is only started as a fresh table when
     it holds nothing but ``._*`` staging leftovers; anything else raises
     ``ValueError`` with the files untouched, so a stored table is never
     silently discarded.
 
-    The batch is read once: one eager ``localCheckpoint`` materializes it
-    with its bucket ids, and an ``Observation`` on that same job yields
-    the touched-bucket set, so neither a separate collect nor the write
-    re-runs the batch's plan. Returns the number of buckets written.
+    The batch is read once (``_tag_buckets``). Returns the number of
+    buckets written.
     """
     manifest = _read_manifest(path)
     if manifest is None:
@@ -353,32 +458,30 @@ def merge_warehouse_batch(
         os.makedirs(path, exist_ok=True)
         # version 0 is committed before any bucket is staged, so a crash
         # mid-way leaves a manifest whose entry GC collects the strays
-        manifest = {"version": 0, "num_buckets": num_buckets, "buckets": {},
+        manifest = {"version": 0, "num_buckets": num_buckets or 1, "buckets": {},
                     "garbage": []}
         _commit_manifest(path, manifest)
-    num_buckets = int(manifest["num_buckets"])
+    old_n = int(manifest["num_buckets"])
+    num_buckets = _grown_bucket_count(
+        old_n, manifest.get("bucket_bytes", {}), _split_bytes(spark)
+    )
 
     # entry GC: unreferenced versions are aged-out garbage (replaced a
     # full commit ago — lag-1 retention) or crashed pre-commit strays
     _gc_unreferenced(path, manifest)
 
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast(
-        "int"
-    )
-    # the observed set is bounded by num_buckets, whatever the batch size
-    seen = Observation()
-    b = (
-        batch.withColumn("_bucket", bucket)
-        .observe(seen, F.collect_set("_bucket").alias("touched"))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(seen.get["touched"])
+    bucket = _bucket_of(keys, num_buckets)
+    b, touched = _tag_buckets(batch, bucket)
+    if num_buckets != old_n:
+        touched = list(range(num_buckets))  # the split rewrites every bucket
     if not touched:
         _commit_manifest(path, {**manifest, "garbage": []})
         return 0
+    # new bucket t holds rows of old bucket t mod old_n (the same bucket
+    # when the count is unchanged)
     current_dirs = [
         os.path.join(path, manifest["buckets"][str(bk)])
-        for bk in touched
+        for bk in sorted({t % old_n for t in touched})
         if str(bk) in manifest["buckets"]
     ]
     if current_dirs:
@@ -401,30 +504,7 @@ def merge_warehouse_batch(
     if os.path.exists(staged):
         shutil.rmtree(staged)
     merged.write.mode("overwrite").partitionBy("_bucket").parquet(staged)
-
-    version = int(manifest["version"]) + 1
-    buckets = dict(manifest["buckets"])
-    replaced = []
-    written = 0
-    for bk in touched:
-        src = os.path.join(staged, f"_bucket={bk}")
-        if not os.path.exists(src):
-            continue
-        new_name = _bucket_dirname(bk, version)
-        os.rename(src, os.path.join(path, new_name))
-        old = buckets.get(str(bk))
-        if old is not None:
-            replaced.append(old)
-        buckets[str(bk)] = new_name
-        written += 1
-    _commit_manifest(
-        path,
-        {"version": version, "num_buckets": num_buckets, "buckets": buckets,
-         "garbage": replaced,
-         "history": _rotate_history(manifest, retain_snapshots)},
-    )
-    shutil.rmtree(staged, ignore_errors=True)
-    return written
+    return _publish(path, staged, touched, manifest, num_buckets, retain_snapshots)
 
 
 def read_warehouse_key(
@@ -435,9 +515,10 @@ def read_warehouse_key(
 ) -> DataFrame:
     """Point lookup on a MERGE-sink table: hash the key to its bucket and
     scan ONLY that bucket's directory (resolved through the manifest) —
-    I/O is 1/num_buckets of the table regardless of size, the read-side
-    payoff of the bucketed layout. Falls back to a filtered full scan on
-    non-manifest tables. The returned frame is already filtered to the key.
+    I/O is one bucket, at most about one scan split, regardless of the
+    table's size: the read-side payoff of the bucketed layout. Falls back
+    to a filtered full scan on non-manifest tables. The returned frame is
+    already filtered to the key.
     """
     manifest = _read_manifest(path)
     cond = None
@@ -447,17 +528,19 @@ def read_warehouse_key(
     if manifest is None:
         return read_warehouse(spark, path).filter(cond)
     num_buckets = int(manifest["num_buckets"])
-    # same deterministic route the writer used — computed driver-side on
-    # the literal key, no Spark job needed to find the bucket
-    bk = (
-        spark.range(1)
-        .select(
-            F.pmod(
-                F.xxhash64(*[F.lit(v) for v in key_values]), F.lit(num_buckets)
-            ).cast("int")
+    # same deterministic route the writer used, evaluated on the literal
+    # key: a one-row Spark job, skipped when one bucket holds every key
+    bk = 0
+    if num_buckets > 1:
+        bk = (
+            spark.range(1)
+            .select(
+                F.pmod(
+                    F.xxhash64(*[F.lit(v) for v in key_values]), F.lit(num_buckets)
+                ).cast("int")
+            )
+            .first()[0]
         )
-        .first()[0]
-    )
     dirname = manifest["buckets"].get(str(bk))
     if dirname is None:  # bucket never written -> key cannot exist
         return read_warehouse(spark, path).filter(cond).limit(0)
@@ -606,19 +689,19 @@ def table_changes(
     warehouse semantics). Emitted columns are the NEW side for
     insert/update and the OLD side for delete.
 
-    Cost: a keyed join of exactly the two snapshots — at 100 TB both
-    sides share the sinks' bucket layout, and for merge tables the join
-    could be further restricted to buckets whose directory names differ
-    between the snapshots (version-named directories make the unchanged
-    ones trivially identical).
+    Cost: a keyed join of exactly the two snapshots. Each snapshot already
+    holds one row per key (every merge commit writes ``latest_per_key``
+    output and erasure only removes rows), so neither side is re-deduped.
+    At 100 TB the join could be further restricted to buckets whose
+    directory names differ between the snapshots when both share a bucket
+    count (version-named directories make the unchanged ones trivially
+    identical).
     """
-    old = read_warehouse(spark, path, version=from_version)
-    new = read_warehouse(
+    o_df = read_warehouse(spark, path, version=from_version)
+    n_df = read_warehouse(
         spark, path, version=to_version
     )  # None -> current snapshot
     key_cols = list(keys)
-    o_df = latest_per_key(old, keys=keys, order_col=order_col)
-    n_df = latest_per_key(new, keys=keys, order_col=order_col)
     # Schema evolution: the old snapshot may predate columns added by a
     # later mergeSchema write — patch them in as typed NULLs (from the new
     # side's schema) so the diff projection resolves on both sides.
@@ -689,15 +772,9 @@ def erase_warehouse_keys(
     if manifest is None:
         raise ValueError(f"{path} has no snapshot manifest; nothing to erase from")
     key_cols = list(keys)
-    erase = keys_df.select(*key_cols).distinct()
     num_buckets = int(manifest["num_buckets"])
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(num_buckets)
-    ).cast("int")
-    tagged = erase.withColumn("_bucket", bucket)
-    touched = sorted(
-        r["_bucket"] for r in tagged.select("_bucket").distinct().collect()
-    )
+    bucket = _bucket_of(key_cols, num_buckets)
+    erase, touched = _tag_buckets(keys_df.select(*key_cols).distinct(), bucket)
     touched = [bk for bk in touched if str(bk) in manifest["buckets"]]
     if not touched:
         return 0
@@ -709,31 +786,11 @@ def erase_warehouse_keys(
         .parquet(*current_dirs)
         .withColumn("_bucket", bucket)
     )
-    kept = current.join(erase, key_cols, "left_anti")
+    kept = current.join(erase.select(*key_cols), key_cols, "left_anti")
     staged = path + "._erase_tmp"
     if os.path.exists(staged):
         shutil.rmtree(staged)
     kept.write.mode("overwrite").partitionBy("_bucket").parquet(staged)
-
-    version = int(manifest["version"]) + 1
-    buckets = dict(manifest["buckets"])
-    replaced = []
-    written = 0
-    for bk in touched:
-        src = os.path.join(staged, f"_bucket={bk}")
-        replaced.append(buckets[str(bk)])
-        if os.path.exists(src):
-            new_name = _bucket_dirname(bk, version)
-            os.rename(src, os.path.join(path, new_name))
-            buckets[str(bk)] = new_name
-        else:
-            del buckets[str(bk)]  # bucket fully erased
-        written += 1
-    _commit_manifest(
-        path,
-        {"version": version, "num_buckets": num_buckets, "buckets": buckets,
-         "garbage": replaced,
-         "history": _rotate_history(manifest, retain_snapshots)},
-    )
-    shutil.rmtree(staged, ignore_errors=True)
-    return written
+    # a touched bucket with nothing staged was fully erased
+    _publish(path, staged, touched, manifest, num_buckets, retain_snapshots)
+    return len(touched)

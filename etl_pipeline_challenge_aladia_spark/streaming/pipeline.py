@@ -140,7 +140,8 @@ def run_cdc_file_stream(
     runs continuously; nothing else changes.
 
     Every micro-batch upserts through ``merge_warehouse_batch`` (bucketed
-    MERGE, I/O proportional to the batch).
+    MERGE: a batch rewrites the buckets its keys hash into, each at most
+    about one scan split).
 
     ``view_path`` additionally maintains the materialized per-video stats
     view (views.py) INSIDE each micro-batch: after the upsert commits, the

@@ -67,8 +67,6 @@ ALLOWED_COLLECTS = {
         "n=1 hottest-key diagnostic row for the salting decision",
     ("sinks.py", 'days = [r["_day"] for r in current.select("_day").distinct().collect()]'):
         "distinct partition days — partition-count-bounded maintenance",
-    ("sinks.py", 'r["_bucket"] for r in tagged.select("_bucket").distinct().collect()'):
-        "distinct bucket ids — num_buckets-bounded maintenance list",
 }
 
 BANNED = {

@@ -414,6 +414,176 @@ def test_vacuum_and_num_buckets_pinning(spark, tmp_path):
     assert vacuum_warehouse(path) == 0  # idempotent
 
 
+def test_merge_sink_sizes_buckets_to_the_data(spark, tmp_path):
+    """A table created with the default count is one bucket. When its
+    largest bucket outgrows one scan split (spark.sql.files.maxPartitionBytes,
+    forced small here), the next merge re-buckets the whole table into a
+    power-of-two multiple in one commit; every reader that routes by
+    num_buckets, time travel to the pre-split snapshot, the change feed
+    across the split, erasure and vacuum keep working, and a further small
+    batch does not split again."""
+    from pyspark.sql import functions as F
+
+    from etl_pipeline_challenge_aladia_spark.sinks import (
+        _read_manifest,
+        erase_warehouse_keys,
+        merge_warehouse_batch,
+        read_warehouse,
+        read_warehouse_key,
+        table_changes,
+        table_history,
+        vacuum_warehouse,
+    )
+
+    def rows_of(frame):
+        # a 1 KB hex payload per row: bucket bytes come from the data, not
+        # from parquet's fixed per-file overhead
+        payload = F.concat(*[
+            F.sha2(F.concat("original_id", F.lit(str(i))), 512) for i in range(8)
+        ])
+        return frame.withColumn("payload", payload)
+
+    def state_of(df):
+        return {r["original_id"]: (r["version"], r["watched_seconds"])
+                for r in df.collect()}
+
+    path = str(tmp_path / "wh")
+    merge_warehouse_batch(
+        spark, rows_of(_merge_base_frame(spark, n=400)), path, retain_snapshots=3
+    )
+    m1 = _read_manifest(path)
+    assert m1["num_buckets"] == 1 and set(m1["bucket_bytes"]) == {"0"}
+    pre_split = m1["version"]
+    want = {f"doc_{i}": (1, i * 10) for i in range(400)}
+    assert state_of(read_warehouse(spark, path)) == want
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    split = int(m1["bucket_bytes"]["0"] / 2.7)  # the bucket is ~2.7 splits
+    spark.conf.set(key, str(split))
+    try:
+        # updates doc_0..doc_9, inserts doc_400..doc_409
+        batch2 = rows_of(_merge_base_frame(spark, n=410, version=2, watched=7)).filter(
+            "cast(substr(original_id, 5) as int) < 10 "
+            "or cast(substr(original_id, 5) as int) >= 400"
+        )
+        written = merge_warehouse_batch(spark, batch2, path, retain_snapshots=3)
+        m2 = _read_manifest(path)
+        n = m2["num_buckets"]
+        assert n == 4  # smallest power of two bringing ~2.7 splits under one
+        assert written == len(m2["buckets"]) == len(m2["bucket_bytes"]) == n
+        assert max(m2["bucket_bytes"].values()) <= split
+        assert set(m2["garbage"]) == set(m1["buckets"].values())
+        for i in [*range(10), *range(400, 410)]:
+            want[f"doc_{i}"] = (2, 7)
+        now = read_warehouse(spark, path)
+        assert state_of(now) == want
+        # every row sits in the bucket its key routes to under the new count
+        routed = now.select(
+            F.pmod(F.xxhash64("original_id", "video_id", "session_id"), F.lit(n))
+            .alias("bk"),
+            F.regexp_extract(F.input_file_name(), r"/b(\d{5})_v", 1).cast("int")
+            .alias("dir_bk"),
+        )
+        assert routed.filter("bk != dir_bk").count() == 0
+        for doc in ("doc_3", "doc_123", "doc_405"):
+            got = state_of(read_warehouse_key(spark, path, [doc, "v", "s"]))
+            assert got == {doc: want[doc]}
+
+        old = {f"doc_{i}": (1, i * 10) for i in range(400)}
+        assert state_of(read_warehouse(spark, path, version=pre_split)) == old
+        stamp = {s["version"]: s["committed_at"] for s in table_history(path)}
+        assert state_of(read_warehouse(spark, path, as_of=stamp[pre_split])) == old
+        feed = {
+            r["original_id"]: r["_change_type"]
+            for r in table_changes(spark, path, from_version=pre_split).collect()
+        }
+        assert feed == {
+            **{f"doc_{i}": "update" for i in range(10)},
+            **{f"doc_{i}": "insert" for i in range(400, 410)},
+        }
+
+        doomed = spark.createDataFrame(
+            [("doc_5", "v", "s"), ("doc_250", "v", "s")],
+            ["original_id", "video_id", "session_id"],
+        )
+        assert 1 <= erase_warehouse_keys(spark, doomed, path, retain_snapshots=3) <= 2
+        del want["doc_5"], want["doc_250"]
+        assert state_of(read_warehouse(spark, path)) == want
+        assert _read_manifest(path)["num_buckets"] == n
+
+        small = rows_of(_merge_base_frame(spark, n=3, version=3, watched=9))
+        assert merge_warehouse_batch(spark, small, path, retain_snapshots=3) <= 3
+        assert _read_manifest(path)["num_buckets"] == n  # no second split
+        for i in range(3):
+            want[f"doc_{i}"] = (3, 9)
+        assert state_of(read_warehouse(spark, path)) == want
+    finally:
+        spark.conf.set(key, prev)
+
+    assert vacuum_warehouse(path) > 0
+    assert state_of(read_warehouse(spark, path)) == want
+    live = set(_read_manifest(path)["buckets"].values())
+    assert {d for d in os.listdir(path) if d.startswith("b")} == live
+
+
+def test_cdc_batch_merge_and_refresh_job_counts(spark, tmp_path, monkeypatch):
+    """The Spark jobs one CDC micro-batch's merge and view refresh start,
+    pinned: a change that adds a per-bucket, listing or counting job fails
+    here as a number, not as a slower benchmark. Two batch frames go
+    through the processor, as the benchmark's warehouse build feeds it;
+    the second (a refresh from the merged batch) is the one counted."""
+    import uuid
+
+    from etl_pipeline_challenge_aladia_spark import views
+    from etl_pipeline_challenge_aladia_spark.operators.structure import parse_envelope
+    from etl_pipeline_challenge_aladia_spark.streaming import pipeline
+
+    sc = spark.sparkContext
+    run = uuid.uuid4().hex
+    groups: list[str] = []
+
+    def in_group(name, fn):
+        def grouped(*args, **kwargs):
+            group = f"{name}-{run}-{len(groups)}"
+            groups.append(group)
+            sc.setJobGroup(group, group)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+
+        return grouped
+
+    # the processor looks both up by name at call time
+    monkeypatch.setattr(
+        pipeline, "merge_warehouse_batch", in_group("merge", pipeline.merge_warehouse_batch)
+    )
+    monkeypatch.setattr(
+        views, "refresh_video_stats_view", in_group("refresh", views.refresh_video_stats_view)
+    )
+    process = pipeline.make_cdc_batch_processor(
+        str(tmp_path / "wh"), quarantine_path=str(tmp_path / "quar"), sink="merge",
+        view_path=str(tmp_path / "view"),
+    )
+    batches = [
+        [envelope("insert", f"doc_{i}", 1, video=f"video_{i % 7}") for i in range(60)],
+        [envelope("update", f"doc_{i}", 2, watched=5, video=f"video_{i % 7}")
+         for i in range(0, 60, 6)]
+        + [envelope("insert", "doc_60", 3, video="video_9"), "{not json"],
+    ]
+    for bid, lines in enumerate(batches):
+        f = str(tmp_path / f"batch-{bid}.json")
+        write_lines(f, lines)
+        process(parse_envelope(spark.read.text(f), json_col="value"), bid)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    merge_jobs, refresh_jobs = (len(tracker.getJobIdsForGroup(g)) for g in groups[2:])
+    assert (merge_jobs, refresh_jobs) == (4, 7)
+    assert state(spark, str(tmp_path / "wh"))[("doc_6", "video_6", "session_1")] == (5, 2)
+
+
 def test_incremental_dedup_stream_screens_against_growing_corpus(spark, tmp_path):
     """Streaming ingest dedup: batch 2's near-dup of a batch-1 doc is
     flagged because the corpus ACCUMULATES micro-batch by micro-batch;
