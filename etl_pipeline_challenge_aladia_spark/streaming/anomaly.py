@@ -30,31 +30,29 @@ ClickHouse and leaves monitoring to ad-hoc queries,
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.functions.rounding import round_half_up
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
-    COMPACTED_DIR,
     FileIngest,
+    StoreSpec,
     append_batch,
-    compact_store,
-    read_batch_store,
     read_store,
 )
 
-#: per-batch day-grain fixed-point deltas (1e6-scaled value sums)
-DAY_STORE_SCHEMA = "day date, fx long, batch_id long"
-
-#: consolidated day-grain history (no batch_id — compacted rows are
-#: pre-history by definition and are read UNCONDITIONALLY, never
-#: filtered by the strictly-earlier predicate; see compact_day_store)
-COMPACTED_DAY_SCHEMA = "day date, fx long"
+#: per-batch day-grain fixed-point deltas (1e6-scaled value sums); an
+#: aggregate, so no erase key. Compaction sums same-day deltas into one
+#: row, so compacted rows read a NULL batch_id (pre-history)
+DAY_STORE = StoreSpec(
+    "day date, fx long, batch_id long",
+    compact=lambda d: d.groupBy("day").agg(
+        F.sum("fx").cast("long").alias("fx")
+    ),
+)
 
 #: per-batch anomaly report (days breaching the threshold AS OF that batch)
-MAD_REPORT_SCHEMA = (
+MAD_REPORT = StoreSpec(
     "day string, daily_total double, robust_z double, batch_id long"
 )
 
@@ -71,29 +69,6 @@ def _day_deltas(delta: DataFrame) -> DataFrame:
         F.sum(F.floor(F.col("value") * 1000000.0 + 0.5).cast("long"))
         .cast("long")
         .alias("fx")
-    )
-
-
-def _read_day_history(
-    spark: SparkSession, store_path: str, batch_id: int
-) -> DataFrame:
-    """Day-grain history a (possibly replayed) batch may see: live
-    ``batch=<id>`` rows with STRICTLY-EARLIER batch ids (enforced on
-    the directory ids by the shared store contract, streaming/store.py
-    — pruned batches are never even listed), plus the reserved
-    ``compacted/`` directory read UNCONDITIONALLY. The strictly-earlier
-    predicate applies only to live rows — compacted history predates
-    every live batch by the compaction contract (the store is quiesced
-    and live directories removed before the pointer swap), so no batch
-    id — not even the 0 a fresh-checkpoint restart replays at — can
-    ever filter it out (the batch=0 collision class)."""
-    return read_store(
-        spark,
-        store_path,
-        DAY_STORE_SCHEMA,
-        strictly_before=batch_id,
-        live_columns=("day", "fx"),
-        compacted_schema=COMPACTED_DAY_SCHEMA,
     )
 
 
@@ -139,9 +114,12 @@ def make_mad_monitor_processor(
         # time it replays, LATER batches' directories already exist.
         # The predicate lives on the directory ids (streaming/store.py)
         # so later batches are never even listed; the data-level
-        # batch_id column remains for provenance (read_day_store).
-        # Compacted history is read unconditionally (_read_day_history).
-        history = _read_day_history(spark, store_path, batch_id)
+        # batch_id column remains for provenance. Compacted history is
+        # read unconditionally: no batch id, not even the 0 a
+        # fresh-checkpoint restart replays at, can filter it out.
+        history = read_store(
+            spark, DAY_STORE, store_path, strictly_before=batch_id
+        ).select("day", "fx")
         totals = (
             history.unionByName(mine)
             .groupBy("day")
@@ -160,56 +138,3 @@ def make_mad_monitor_processor(
 MAD_MONITOR_INGEST = FileIngest(
     EVENTS_STREAM_SCHEMA, make_mad_monitor_processor, one_file_per_batch=True,
 )
-
-
-def read_mad_report(spark: SparkSession, report_path: str) -> DataFrame:
-    return read_batch_store(spark, report_path, MAD_REPORT_SCHEMA)
-
-
-def read_day_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """All accumulated day deltas: live ``batch=<id>`` rows plus the
-    reserved ``compacted/`` directory (compacted rows carry a NULL
-    batch_id — they are consolidated pre-history, not any batch's)."""
-    df = read_batch_store(spark, store_path, DAY_STORE_SCHEMA)
-    compacted = os.path.join(store_path, COMPACTED_DIR)
-    if os.path.isdir(compacted):
-        df = df.unionByName(
-            spark.read.schema(COMPACTED_DAY_SCHEMA)
-            .parquet(compacted)
-            .withColumn("batch_id", F.lit(None).cast("long"))
-        )
-    return df
-
-
-def compact_day_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Consolidate the day store's per-batch directories into ONE
-    day-grain frame under the reserved ``compacted/`` directory at a
-    fresh path — the small-files maintenance op every ``batch=<id>``
-    store in this engine ships with (compact_signature_store /
-    compact_segment_store pattern: publish to a fresh path, then point
-    the consumer). Beyond file count, compaction SHRINKS the store:
-    per-batch deltas for the same day collapse into one summed row.
-    Compacted rows carry NO batch_id: the monitor reads ``compacted/``
-    unconditionally and applies its strictly-earlier predicate only to
-    live ``batch=<id>`` rows, so no batch id — not even the 0 a
-    fresh-checkpoint restart replays at — can exclude or overwrite the
-    consolidated history (the batch=0 collision class,
-    streaming/docs.py COMPACTED_DIR). The trade is explicit: because
-    per-batch provenance is summed away, compaction FORECLOSES replay
-    of pre-compaction batches — it is an offline maintenance step run
-    on quiesced stores whose checkpoints have committed every
-    contributing batch (same operational contract as the other
-    compactors). Returns the number of compacted day rows."""
-    return compact_store(
-        spark,
-        store_path,
-        out_path,
-        DAY_STORE_SCHEMA,
-        transform=lambda d: d.groupBy("day").agg(
-            F.sum("fx").cast("long").alias("fx")
-        ),
-        live_columns=("day", "fx"),
-        compacted_schema=COMPACTED_DAY_SCHEMA,
-    )

@@ -40,6 +40,7 @@ from etl_pipeline_challenge_aladia_spark.operators.text import (
 )
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
     append_batch,
+    batch_dir,
     batch_dirs,
 )
 
@@ -91,7 +92,7 @@ def read_bpe_merges(
     if epoch < 0:
         raise FileNotFoundError(f"no trained BPE epoch under {store_path}")
     return spark.read.schema(BPE_MERGES_SCHEMA).parquet(
-        os.path.join(store_path, f"batch={epoch}")
+        batch_dir(store_path, epoch)
     )
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.operators.similarity import (
     minhash_incremental_pairs,
@@ -25,13 +26,16 @@ from etl_pipeline_challenge_aladia_spark.operators.similarity import (
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
     COMPACTED_DIR,
     FileIngest,
+    StoreSpec,
     append_batch,
-    compact_store,
     erase_keys,
-    read_store as _read_store,
+    read_store,
 )
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
+
+#: the incremental-dedup ingest's raw-text corpus
+DOC_CORPUS = StoreSpec(DOC_STREAM_SCHEMA, key="doc_id")
 
 
 def make_incremental_dedup_processor(
@@ -51,8 +55,8 @@ def make_incremental_dedup_processor(
     def process_batch(delta: DataFrame, batch_id: int) -> None:
         spark = delta.sparkSession
         delta = delta.localCheckpoint(eager=True)  # one computation per use
-        corpus = _read_store(
-            spark, corpus_path, DOC_STREAM_SCHEMA, strictly_before=batch_id
+        corpus = read_store(
+            spark, DOC_CORPUS, corpus_path, strictly_before=batch_id
         )
         pairs = minhash_incremental_pairs(corpus, delta, threshold=threshold)
         append_batch(pairs, report_path, batch_id)
@@ -64,10 +68,11 @@ def make_incremental_dedup_processor(
 INCREMENTAL_DEDUP_INGEST = FileIngest(DOC_STREAM_SCHEMA, make_incremental_dedup_processor)
 
 
-#: stored-index schemas (what the readers return before any ingest)
-BAND_STORE_SCHEMA = "id long, band int, band_hash string"
-SHINGLE_STORE_SCHEMA = "id long, shingles array<string>"
-NEAR_DUP_REPORT_SCHEMA = "delta_id long, corpus_id long, jaccard double"
+#: the signature store is two stores, each erased by doc id: the band
+#: index (``<store>/bands``) and the shingle sets (``<store>/shingles``)
+SIGNATURE_BANDS = StoreSpec("id long, band int, band_hash string", key="id")
+SIGNATURE_SHINGLES = StoreSpec("id long, shingles array<string>", key="id")
+NEAR_DUP_REPORT = StoreSpec("delta_id long, corpus_id long, jaccard double")
 
 
 def _screen_against_store(
@@ -87,12 +92,12 @@ def _screen_against_store(
     a mid-stream checkpoint replay must not screen against batches
     that ran after the replayed one). The shared screening leg of the
     sigstore ingest and the composed curation processor."""
-    stored_bands = _read_store(
-        spark, os.path.join(store_path, "bands"), BAND_STORE_SCHEMA,
+    stored_bands = read_store(
+        spark, SIGNATURE_BANDS, os.path.join(store_path, "bands"),
         strictly_before=batch_id,
     )
-    stored_shingles = _read_store(
-        spark, os.path.join(store_path, "shingles"), SHINGLE_STORE_SCHEMA,
+    stored_shingles = read_store(
+        spark, SIGNATURE_SHINGLES, os.path.join(store_path, "shingles"),
         strictly_before=batch_id,
     )
     from etl_pipeline_challenge_aladia_spark.operators.similarity import (
@@ -172,12 +177,8 @@ def make_sigstore_ingest_processor(
 SIGSTORE_INGEST = FileIngest(DOC_STREAM_SCHEMA, make_sigstore_ingest_processor)
 
 
-def read_near_dup_report(spark, report_path: str) -> DataFrame:
-    return _read_store(spark, report_path, NEAR_DUP_REPORT_SCHEMA)
-
-
-#: per-batch admission-state rows (what the budget reader returns pre-ingest)
-BUDGET_STATE_SCHEMA = "source string, tokens_admitted long"
+#: per-batch admission state: the tokens each source spent per batch
+BUDGET_STATE = StoreSpec("source string, tokens_admitted long")
 BUDGET_DOC_STREAM_SCHEMA = "doc_id long, source string, text string"
 
 
@@ -198,20 +199,16 @@ def _budget_admit(
     pre-existing ``n_tokens`` column (e.g. from ``with_text_stats``) is
     reused rather than recomputed."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from etl_pipeline_challenge_aladia_spark.operators.sampling import (
         hash_order_col,
     )
     from etl_pipeline_challenge_aladia_spark.operators.text import token_count_col
-    from etl_pipeline_challenge_aladia_spark.streaming.store import (
-        read_batch_store,
-    )
 
     spark = delta.sparkSession
     consumed = (
-        read_batch_store(
-            spark, state_path, BUDGET_STATE_SCHEMA, strictly_before=batch_id
+        read_store(
+            spark, BUDGET_STATE, state_path, strictly_before=batch_id
         )
         .groupBy(F.col("source").alias(group_col))
         .agg(F.sum("tokens_admitted").alias("_consumed"))
@@ -242,8 +239,6 @@ def _write_admission(
 ) -> None:
     """Persist an admission decision batch-keyed: the admitted rows and
     the per-group token-count state row this batch contributes."""
-    from pyspark.sql import functions as F
-
     append_batch(admitted, admitted_path, batch_id)
     append_batch(
         admitted.groupBy(F.col(group_col).alias("source")).agg(
@@ -319,16 +314,15 @@ BUDGET_ADMISSION_INGEST = FileIngest(
 #: tracked top-V — it still counts toward totals like any token, it just
 #: can never be tracked, keeping the baseline's sentinel row unique.
 TOTAL_SENTINEL = "<TOTAL>"
-TEXT_BASELINE_SCHEMA = "term string, n_occ long"
-TEXT_STATS_SCHEMA = "term string, n_occ long, batch_id long, baseline_version int"
+TEXT_STATS = StoreSpec(
+    "term string, n_occ long, batch_id long, baseline_version int"
+)
 
 
 def _text_vocab_counts(docs: DataFrame, vocab_size: int, text_col: str = "text"):
     """(term, n_occ) for the top-``vocab_size`` tokens plus the
     '<TOTAL>' sentinel row counting ALL tokens — the baseline payload.
     Top-k is orderBy+limit (TakeOrderedAndProject), ties by term."""
-    from pyspark.sql import functions as F
-
     from etl_pipeline_challenge_aladia_spark.operators.text import tokens_col
 
     tok = docs.select(F.explode(tokens_col(text_col)).alias("term"))
@@ -350,8 +344,6 @@ def save_text_baseline(counts: DataFrame, store_path: str, version: int) -> None
     CURRENT pointer atomically (same write-temp + rename publish as the
     embedding quantizer store — readers never see a half-written
     generation)."""
-    import os
-
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
         _flip_current,
     )
@@ -367,8 +359,6 @@ def load_text_baseline(
 ):
     """(baseline counts, version) of the CURRENT generation, or a PINNED
     one (checkpoint replays pin the generation they originally used)."""
-    import os
-
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
         current_quantizer_version,
     )
@@ -406,8 +396,6 @@ def text_drift_report(baseline: DataFrame, ingest_counts: DataFrame) -> DataFram
     doc_token_drift formula; aggregates vocab-bounded rows, never
     rescans text. Tokens the ingest never produced still report (their
     baseline share is the negative drift)."""
-    from pyspark.sql import functions as F
-
     def split(df, n_col):
         tot = (
             df.filter(F.col("term") == TOTAL_SENTINEL)
@@ -478,10 +466,6 @@ def make_text_drift_ingest_processor(
     Same evidence gate as the embedding loop (drift compares
     POPULATIONS; a fresh generation's first small batch is sampling
     noise), same replay pinning, same batch-keyed idempotence."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from etl_pipeline_challenge_aladia_spark.operators.text import tokens_col
 
     def process_batch(delta: DataFrame, batch_id: int) -> None:
@@ -489,9 +473,7 @@ def make_text_drift_ingest_processor(
         pinned = _baselined_version(spark, stats_path, batch_id)
         baseline, version = load_text_baseline(spark, store_path, version=pinned)
         delta = delta.localCheckpoint(eager=True)
-        delta.write.mode("overwrite").parquet(
-            os.path.join(ingest_path, f"batch={batch_id}")
-        )
+        append_batch(delta, ingest_path, batch_id)
         tracked = baseline.filter(F.col("term") != TOTAL_SENTINEL).select("term")
         tok = delta.select(F.explode(tokens_col(text_col)).alias("term"))
         hits = (
@@ -503,18 +485,14 @@ def make_text_drift_ingest_processor(
             F.lit(TOTAL_SENTINEL).alias("term"),
             F.count(F.lit(1)).cast("long").alias("n_occ"),
         )
-        (
+        append_batch(
             hits.unionByName(total)
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .withColumn("baseline_version", F.lit(version).cast("int"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(stats_path, f"batch={batch_id}"))
+            .withColumn("baseline_version", F.lit(version).cast("int")),
+            stats_path,
+            batch_id,
         )
-        from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
-            read_batch_store,
-        )
-
-        gen_stats = read_batch_store(spark, stats_path, TEXT_STATS_SCHEMA).filter(
+        gen_stats = read_store(spark, TEXT_STATS, stats_path).filter(
             F.col("baseline_version") == version
         )
         ingested = (
@@ -538,9 +516,7 @@ def make_text_drift_ingest_processor(
             or 0
         )
         if worst >= drift_threshold_permille:
-            docs = read_batch_store(
-                spark, ingest_path, f"doc_id long, source string, {text_col} string"
-            )
+            docs = read_store(spark, TEXT_DRIFT_DOCS, ingest_path)
             save_text_baseline(
                 _text_vocab_counts(docs, vocab_size, text_col),
                 store_path,
@@ -554,6 +530,9 @@ TEXT_DRIFT_INGEST = FileIngest(
     BUDGET_DOC_STREAM_SCHEMA, make_text_drift_ingest_processor,
     one_file_per_batch=True,
 )
+
+#: the text drift loop's accumulated ingest (what a rebaseline reads)
+TEXT_DRIFT_DOCS = StoreSpec(BUDGET_DOC_STREAM_SCHEMA, key="doc_id")
 
 
 def make_streaming_curation_processor(
@@ -575,9 +554,15 @@ def make_streaming_curation_processor(
        admission never re-derives it);
     2. DEDUP SCREEN: screen survivors against the persisted signature
        store (``_screen_against_store`` — corpus text never re-read),
-       report near-dup hits, and DROP the reported documents — like the
-       batch pipeline's survivor anti-join, so duplicates never consume
-       token budget (the stored corpus doc stays the representative);
+       then screen the documents it kept against EACH OTHER with the
+       batch pipeline's own legs (``minhash_near_dup_pairs`` ->
+       ``dedup_clusters``: each near-dup component keeps its minimum
+       doc_id, its ``cluster_id``). Every dropped document is reported
+       — against the stored document it matched, or against its
+       component's ``cluster_id`` (``jaccard`` NULL when the two are
+       linked only through other batch-mates) — and DROPPED before
+       admission, like the batch pipeline's survivor anti-join, so
+       duplicates never consume token budget;
     3. BUDGET: prefix-admit the deduplicated survivors per source until
        the persistent token budget is spent (``_budget_admit`` — the
        exact admission core of ``make_budget_admission_processor``),
@@ -587,12 +572,16 @@ def make_streaming_curation_processor(
     Outputs (all ``batch=<id>`` overwrite — the layer's replay-idempotent
     contract): admitted rows, per-batch budget state, the near-dup
     report, and the growing signature store. At 100 TB each gate keeps
-    its batch shape: the quality filter and admission window touch only
-    the delta; the screen joins the delta's bands against the stored
-    index.
+    its batch shape: the quality filter, the within-batch screen and the
+    admission window touch only the delta; the store screen joins the
+    delta's bands against the stored index.
     """
-    from pyspark.sql import functions as F
-
+    from etl_pipeline_challenge_aladia_spark.operators.dedup import (
+        dedup_clusters,
+    )
+    from etl_pipeline_challenge_aladia_spark.operators.similarity import (
+        minhash_near_dup_pairs,
+    )
     from etl_pipeline_challenge_aladia_spark.operators.text import with_text_stats
 
     def process_batch(delta: DataFrame, batch_id: int) -> None:
@@ -603,13 +592,33 @@ def make_streaming_curation_processor(
             .select(*delta.columns, "n_tokens")
             .localCheckpoint(eager=True)
         )
-        report = _screen_against_store(
+        stored = _screen_against_store(
             spark, sig_store_path, passing, batch_id,
             threshold=threshold, text_col=text_col,
         ).localCheckpoint(eager=True)
-        report.write.mode("overwrite").parquet(
-            os.path.join(report_path, f"batch={batch_id}")
+        fresh = passing.join(
+            stored.select(F.col("delta_id").alias("doc_id")), "doc_id", "left_anti"
         )
+        pairs = minhash_near_dup_pairs(
+            fresh, text_col=text_col, threshold=threshold
+        ).localCheckpoint(eager=True)
+        within = (
+            dedup_clusters(pairs)
+            .filter(F.col("id") != F.col("cluster_id"))
+            .join(
+                pairs,
+                (F.col("cluster_id") == F.col("doc_id_a"))
+                & (F.col("id") == F.col("doc_id_b")),
+                "left",
+            )
+            .select(
+                F.col("id").alias("delta_id"),
+                F.col("cluster_id").alias("corpus_id"),
+                "jaccard",
+            )
+        )
+        report = stored.unionByName(within).localCheckpoint(eager=True)
+        append_batch(report, report_path, batch_id)
         survivors = passing.join(
             report.select(F.col("delta_id").alias("doc_id")).distinct(),
             "doc_id",
@@ -630,58 +639,14 @@ CURATION_INGEST = FileIngest(
 )
 
 
-def compact_signature_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Consolidate a signature store's per-batch directories into ONE
-    reserved ``compacted/`` layout at a fresh path — the small-files
-    maintenance op a long-running ingest needs (thousands of
-    micro-batch directories otherwise accumulate one parquet footer
-    each; at 100 TB the listing alone dominates screen latency). Same
-    publish-then-point pattern as the embedding ``rebuild_index``:
-    reads a snapshot of the batch directories (folding in any prior
-    ``compacted/`` layer, so re-compaction composes), writes to a fresh
-    path, never blocks ingest; the caller points a CONTINUING ingest at
-    ``out_path`` when done (a replayed old batch against the ORIGINAL
-    path stays correct meanwhile). The consolidated data deliberately
-    does NOT live in a ``batch=<id>`` directory: a fresh checkpoint
-    restarts micro-batch ids at 0, and a ``batch=0`` layout would let
-    that first batch both exclude the entire history from its screen
-    and overwrite it on append. ``compacted/`` is read unconditionally
-    and can never collide with an ingest batch id. Returns the number
-    of stored documents."""
-    compact_store(
-        spark, os.path.join(store_path, "bands"),
-        os.path.join(out_path, "bands"), BAND_STORE_SCHEMA,
-    )
-    return compact_store(
-        spark, os.path.join(store_path, "shingles"),
-        os.path.join(out_path, "shingles"), SHINGLE_STORE_SCHEMA,
-    )
-
-
-def erase_signature_keys(
-    spark: SparkSession, store_path: str, doc_ids
-) -> int:
-    """Right-to-be-forgotten for the MinHash signature store (VERDICT
-    r9 #2): physically rewrite both sub-stores (band index + shingle
-    sets) without the keyed documents and denylist the ids against
-    replay (streaming/store.py:erase_keys) — post-erase, near-dup
-    screens behave as if the documents were never ingested. Returns
-    total physical rows removed."""
-    return erase_keys(
-        spark, os.path.join(store_path, "bands"), "id", doc_ids
-    ) + erase_keys(
-        spark, os.path.join(store_path, "shingles"), "id", doc_ids
-    )
-
-
 # --------------------------------------------------------------------------
 # Segment-fingerprint store ingest (paragraph-level incremental dedup)
 # --------------------------------------------------------------------------
 
-SEGMENT_STORE_SCHEMA = "seg string"
-SEGMENT_REPORT_SCHEMA = (
+#: distinct segment fingerprints, content-keyed; compaction keeps one
+#: row per segment however many batches ingested it
+SEGMENT_STORE = StoreSpec("seg string", key="seg", compact=DataFrame.distinct)
+SEGMENT_REPORT = StoreSpec(
     "source string, n_docs long, n_segments long, n_removed_segments long,"
     " tokens_removed long, tokens_kept long, removed_permille long,"
     " batch_id long"
@@ -732,16 +697,14 @@ def make_segment_store_ingest_processor(
     STRICTLY-EARLIER batches only (a replayed batch sees neither its
     own half-written output nor later batches' fingerprints). A
     compacted history under the reserved ``compacted/`` directory is
-    read unconditionally (``_read_store`` — same fresh-checkpoint
-    batch-0 safety as the signature store)."""
+    read unconditionally (same fresh-checkpoint batch-0 safety as the
+    signature store)."""
 
     def process_batch(delta: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         spark = delta.sparkSession
         delta = delta.localCheckpoint(eager=True)
-        store = _read_store(
-            spark, store_path, SEGMENT_STORE_SCHEMA, strictly_before=batch_id
+        store = read_store(
+            spark, SEGMENT_STORE, store_path, strictly_before=batch_id
         )
         from etl_pipeline_challenge_aladia_spark.operators.text import (
             segment_dedup_from_store,
@@ -760,26 +723,6 @@ SEGMENT_STORE_INGEST = FileIngest(
     BUDGET_DOC_STREAM_SCHEMA, make_segment_store_ingest_processor,
     one_file_per_batch=True,
 )
-
-
-def read_segment_dedup_report(spark, report_path: str) -> DataFrame:
-    return _read_store(spark, report_path, SEGMENT_REPORT_SCHEMA)
-
-
-def compact_segment_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Consolidate a segment store's per-batch directories into ONE
-    reserved ``compacted/`` layout at a fresh path — same
-    publish-then-point pattern and batch-0 safety as
-    ``compact_signature_store``, plus a global DISTINCT: segments
-    ingested by many batches collapse to one stored row, so compaction
-    also shrinks the store, not just the file count. Returns the number
-    of stored distinct segments."""
-    return compact_store(
-        spark, store_path, out_path, SEGMENT_STORE_SCHEMA,
-        transform=lambda d: d.distinct(),
-    )
 
 
 def erase_segments_of_docs(
@@ -813,7 +756,7 @@ def erase_segments_of_docs(
             retained_docs, segment_tokens=segment_tokens, text_col=text_col
         )
         gone = gone.join(keep, "seg", "left_anti")
-    return erase_keys(spark, store_path, "seg", gone)
+    return erase_keys(spark, SEGMENT_STORE, store_path, gone)
 
 
 
@@ -821,8 +764,11 @@ def erase_segments_of_docs(
 # CDC-chunk store ingest (insertion-robust incremental dedup)
 # --------------------------------------------------------------------------
 
-CDC_CHUNK_STORE_SCHEMA = "chunk string"
-CDC_CHUNK_REPORT_SCHEMA = (
+#: distinct content-defined chunk texts, content-keyed, DISTINCT-compacted
+CDC_CHUNK_STORE = StoreSpec(
+    "chunk string", key="chunk", compact=DataFrame.distinct
+)
+CDC_CHUNK_REPORT = StoreSpec(
     "source string, n_docs long, n_chunks long, n_removed_chunks long,"
     " tokens_removed long, tokens_kept long, removed_permille long,"
     " batch_id long"
@@ -853,11 +799,9 @@ def make_cdc_chunk_ingest_processor(
     Replay-idempotent like the segment ingest: report and store append
     are batch-keyed overwrites; the screen reads STRICTLY-EARLIER
     batches only; a compacted history under the reserved
-    ``compacted/`` directory is read unconditionally (``_read_store``)."""
+    ``compacted/`` directory is read unconditionally."""
 
     def process_batch(delta: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from etl_pipeline_challenge_aladia_spark.operators.text import (
             cdc_chunk_dedup_from_store,
             cdc_chunk_store,
@@ -865,8 +809,8 @@ def make_cdc_chunk_ingest_processor(
 
         spark = delta.sparkSession
         delta = delta.localCheckpoint(eager=True)
-        store = _read_store(
-            spark, store_path, CDC_CHUNK_STORE_SCHEMA, strictly_before=batch_id
+        store = read_store(
+            spark, CDC_CHUNK_STORE, store_path, strictly_before=batch_id
         )
         report = cdc_chunk_dedup_from_store(
             store, delta, divisor=divisor, text_col=text_col
@@ -887,30 +831,20 @@ CDC_CHUNK_INGEST = FileIngest(
 )
 
 
-def read_cdc_chunk_dedup_report(spark, report_path: str) -> DataFrame:
-    return _read_store(spark, report_path, CDC_CHUNK_REPORT_SCHEMA)
-
-
-def compact_cdc_chunk_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Consolidate a CDC-chunk store\'s per-batch directories into ONE
-    reserved ``compacted/`` layout at a fresh path — same
-    publish-then-point pattern and fresh-checkpoint batch-0 safety as
-    ``compact_segment_store``, with the same global DISTINCT shrink.
-    Returns the number of stored distinct chunks."""
-    return compact_store(
-        spark, store_path, out_path, CDC_CHUNK_STORE_SCHEMA,
-        transform=lambda d: d.distinct(),
-    )
-
-
 # --------------------------------------------------------------------------
 # Streaming count-min frequency store (heavy-hitter screen at ingest)
 # --------------------------------------------------------------------------
 
-CM_STORE_SCHEMA = "rw long, bucket long, n long"
-CM_REPORT_SCHEMA = (
+#: per-batch count-min cell deltas: an aggregate (no erase key — see
+#: rebuild_countmin_store), compacted by cell-wise sums into ONE
+#: depth*width grid
+COUNTMIN_STORE = StoreSpec(
+    "rw long, bucket long, n long",
+    compact=lambda d: d.groupBy("rw", "bucket").agg(
+        F.sum("n").cast("long").alias("n")
+    ),
+)
+COUNTMIN_REPORT = StoreSpec(
     "tok string, batch_n long, hist_estimate long, batch_id long"
 )
 
@@ -921,8 +855,6 @@ def _cm_cells(delta: DataFrame, depth: int, width: int) -> DataFrame:
     of counts of tokens hashing there), built from the batch's own
     vocabulary aggregate exactly like the batch operator
     (operators/terms.py:countmin_audit)."""
-    from pyspark.sql import functions as F
-
     from etl_pipeline_challenge_aladia_spark.functions.hashing import (
         md5_fold32_col,
     )
@@ -984,8 +916,6 @@ def make_countmin_ingest_processor(
     HARD size bound."""
 
     def process_batch(delta: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from etl_pipeline_challenge_aladia_spark.functions.hashing import (
             md5_fold32_col,
         )
@@ -996,8 +926,8 @@ def make_countmin_ingest_processor(
         spark = delta.sparkSession
         delta = delta.localCheckpoint(eager=True)
         cells = (
-            _read_store(
-                spark, store_path, CM_STORE_SCHEMA, strictly_before=batch_id
+            read_store(
+                spark, COUNTMIN_STORE, store_path, strictly_before=batch_id
             )
             .groupBy("rw", "bucket")
             .agg(F.sum("n").cast("long").alias("cell_n"))
@@ -1047,10 +977,6 @@ COUNTMIN_INGEST = FileIngest(
 )
 
 
-def read_countmin_report(spark, report_path: str) -> DataFrame:
-    return _read_store(spark, report_path, CM_REPORT_SCHEMA)
-
-
 def countmin_estimate_from_store(
     spark,
     store_path: str,
@@ -1063,14 +989,12 @@ def countmin_estimate_from_store(
     frequency — min over depth cells of the cell-wise summed store.
     One depth*width aggregate + one broadcast-sized join; the raw
     stream is never re-read."""
-    from pyspark.sql import functions as F
-
     from etl_pipeline_challenge_aladia_spark.functions.hashing import (
         md5_fold32_col,
     )
 
     cells = (
-        _read_store(spark, store_path, CM_STORE_SCHEMA)
+        read_store(spark, COUNTMIN_STORE, store_path)
         .groupBy("rw", "bucket")
         .agg(F.sum("n").cast("long").alias("cell_n"))
     )
@@ -1096,25 +1020,6 @@ def countmin_estimate_from_store(
             .cast("long")
             .alias("cm_estimate")
         )
-    )
-
-
-def compact_countmin_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Consolidate a count-min store into ONE summed depth*width grid
-    under the reserved ``compacted/`` directory — same
-    publish-then-point pattern and batch-0 safety as the other stores,
-    with the sketch-specific bonus that the compacted form has a HARD
-    row bound (depth * width) no matter how many batches were
-    ingested. Returns the number of non-zero cells."""
-    from pyspark.sql import functions as F
-
-    return compact_store(
-        spark, store_path, out_path, CM_STORE_SCHEMA,
-        transform=lambda d: d.groupBy("rw", "bucket").agg(
-            F.sum("n").cast("long").alias("n")
-        ),
     )
 
 

@@ -25,25 +25,69 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from etl_pipeline_challenge_aladia_spark.operators.similarity import (
     assign_to_centroids,
 )
-
-# The batch-dir listing and live-store reader live in streaming/store.py
-# (the layer's ONE store contract); re-exported here because every
-# streaming module and test historically imports them from this module.
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
     COMPACTED_DIR,
     FileIngest,
+    StoreSpec,
     append_batch,
-    apply_erasure,
+    batch_dir,
     carry_erasure,
-    erase_keys,
-    read_batch_store,
+    read_store,
 )
 
 EMB_STREAM_SCHEMA = "vec_id long, embedding array<double>"
+
+#: the cell-partitioned index, erased by vec_id with its ``cell=``
+#: layout kept. Its empty-read schema includes the discovered directory
+#: columns (batch, cell) in discovery order, so empty and non-empty
+#: reads union cleanly; a ``rebuild_index`` layout reads a NULL batch
+EMBEDDING_INDEX = StoreSpec(
+    "vec_id long, embedding array<double>, dist_fx long, batch int, cell int",
+    key="vec_id",
+    partition_by=("cell",),
+)
+
+#: per-batch per-cell ingest stats (count + exact fixed-point error sum)
+INGEST_STATS = StoreSpec(
+    "cell int, n_vecs long, sum_dist_fx long, batch_id long"
+)
+
+
+def _route(
+    batch: DataFrame,
+    cents: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """``batch`` routed onto the frozen centroids: (id_col, vec_col,
+    cell, dist_fx) — the index row every ingest and rebuild writes."""
+    return (
+        assign_to_centroids(batch, cents, id_col=id_col, vec_col=vec_col)
+        .join(batch.select(F.col(id_col).alias("id"), vec_col), "id")
+        .select(
+            F.col("id").alias(id_col),
+            F.col(vec_col),
+            F.col("cluster").alias("cell"),
+            "dist_fx",
+        )
+    )
+
+
+def _cell_stats(routed: DataFrame, batch_id: int) -> DataFrame:
+    """One routed batch's per-cell stats rows (``INGEST_STATS``)."""
+    return (
+        routed.groupBy("cell")
+        .agg(
+            F.count(F.lit(1)).alias("n_vecs"),
+            F.sum("dist_fx").alias("sum_dist_fx"),
+        )
+        .withColumn("batch_id", F.lit(batch_id).cast("long"))
+    )
 
 
 def make_embedding_ingest_processor(
@@ -63,30 +107,12 @@ def make_embedding_ingest_processor(
     cents = centroids.localCheckpoint(eager=True)  # freeze once, reuse per batch
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        routed = (
-            assign_to_centroids(batch, cents, id_col=id_col, vec_col=vec_col)
-            .join(batch.select(F.col(id_col).alias("id"), vec_col), "id")
-            .select(
-                F.col("id").alias(id_col),
-                F.col(vec_col),
-                F.col("cluster").alias("cell"),
-                "dist_fx",
-            )
-            .localCheckpoint(eager=True)  # one computation for both writes
+        # one computation for both writes
+        routed = _route(batch, cents, id_col, vec_col).localCheckpoint(eager=True)
+        append_batch(
+            routed, index_path, batch_id, EMBEDDING_INDEX.partition_by
         )
-        routed.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(index_path, f"batch={batch_id}")
-        )
-        (
-            routed.groupBy("cell")
-            .agg(
-                F.count(F.lit(1)).alias("n_vecs"),
-                F.sum("dist_fx").alias("sum_dist_fx"),
-            )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(stats_path, f"batch={batch_id}"))
-        )
+        append_batch(_cell_stats(routed, batch_id), stats_path, batch_id)
 
     return process_batch
 
@@ -96,58 +122,8 @@ EMBEDDING_INGEST = FileIngest(
 )
 
 
-#: schema of the cell-partitioned index (what read_index returns even
-#: before any batch has been ingested) — includes the discovered
-#: partition columns (batch, cell) in discovery order, so empty and
-#: non-empty reads union cleanly and batch-windowed consumers never see
-#: a schema that depends on whether anything was ingested yet
-INDEX_SCHEMA = (
-    "vec_id long, embedding array<double>, dist_fx long, batch int, cell int"
-)
-
-#: schema of the per-batch ingest stats log
-INGEST_STATS_SCHEMA = (
-    "cell int, n_vecs long, sum_dist_fx long, batch_id long"
-)
-
-
-def read_index(
-    spark: SparkSession,
-    index_path: str,
-    exclude_batch: int | None = None,
-    strictly_before: int | None = None,
-) -> DataFrame:
-    """The accumulated cell-partitioned index: live ``batch=<id>``
-    layouts (pruned per ``exclude_batch`` / ``strictly_before`` — the
-    shared store contract) plus the reserved ``compacted/`` layout a
-    ``rebuild_index`` publishes, read UNCONDITIONALLY with a NULL batch
-    id (consolidated pre-history is no batch's output — the batch-0
-    collision safety, streaming/store.py). A probe for cells [c1, c2]
-    prunes the scan to those ``cell=`` directories (partition pruning
-    on the read path, live and compacted alike)."""
-    live = read_batch_store(
-        spark, index_path, INDEX_SCHEMA, exclude_batch,
-        base_path=index_path, strictly_before=strictly_before,
-    )
-    compacted = os.path.join(index_path, COMPACTED_DIR)
-    if os.path.isdir(compacted):
-        comp = (
-            spark.read.option("basePath", compacted)
-            .parquet(compacted)
-            .withColumn("batch", F.lit(None).cast("int"))
-            .select("vec_id", "embedding", "dist_fx", "batch", "cell")
-        )
-        live = live.unionByName(apply_erasure(spark, comp, index_path))
-    return live
-
-
-def read_ingest_stats(spark: SparkSession, stats_path: str) -> DataFrame:
-    return read_batch_store(spark, stats_path, INGEST_STATS_SCHEMA)
-
-
-#: schema of the per-batch duplicate report (what read_dedup_report
-#: returns before any batch has been screened)
-DEDUP_REPORT_SCHEMA = "vec_id long, canonical_id long, max_cos double"
+#: per-batch duplicate report
+DEDUP_REPORT = StoreSpec("vec_id long, canonical_id long, max_cos double")
 
 
 def make_semantic_dedup_ingest_processor(
@@ -180,24 +156,17 @@ def make_semantic_dedup_ingest_processor(
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.localCheckpoint(eager=True)
-        corpus = read_index(
-            spark, index_path, strictly_before=batch_id
+        corpus = read_store(
+            spark, EMBEDDING_INDEX, index_path, strictly_before=batch_id
         ).select("vec_id", "embedding", "cell")
         report = semantic_dedup_screen(
             corpus, batch, cents, threshold=threshold
         )
         append_batch(report, report_path, batch_id)
-        routed = (
-            assign_to_centroids(batch, cents)
-            .join(batch.select(F.col("vec_id").alias("id"), "embedding"), "id")
-            .select(
-                F.col("id").alias("vec_id"),
-                "embedding",
-                F.col("cluster").alias("cell"),
-                "dist_fx",
-            )
+        append_batch(
+            _route(batch, cents), index_path, batch_id,
+            EMBEDDING_INDEX.partition_by,
         )
-        append_batch(routed, index_path, batch_id, partition_by=("cell",))
 
     return process_batch
 
@@ -207,15 +176,11 @@ SEMANTIC_DEDUP_INGEST = FileIngest(
 )
 
 
-def read_dedup_report(spark: SparkSession, report_path: str) -> DataFrame:
-    return read_batch_store(spark, report_path, DEDUP_REPORT_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Ingest-time benchmark decontamination: screen against a FROZEN eval index
 # ---------------------------------------------------------------------------
 
-DECON_REPORT_SCHEMA = "vec_id long, matched_eval_id long, cosine double"
+DECON_REPORT = StoreSpec("vec_id long, matched_eval_id long, cosine double")
 
 
 def build_eval_index(
@@ -302,6 +267,18 @@ def save_eval_index(
     pointer, a half-written new generation is invisible until the flip,
     and a pinned version reproduces any historical screen."""
     vdir = os.path.join(store_path, f"version={version}")
+    # one persisted layout whichever build wrote the cells: the Arrow
+    # build's (id, vector as array<double>, cell int). The sql build
+    # emits (id, cell, vector) in the source's element type.
+    vec = next(
+        f.name for f in eval_cells.schema if isinstance(f.dataType, ArrayType)
+    )
+    idc = next(c for c in eval_cells.columns if c not in (vec, "cell"))
+    eval_cells = eval_cells.select(
+        idc,
+        F.col(vec).cast("array<double>").alias(vec),
+        F.col("cell").cast("int").alias("cell"),
+    )
     # an eval index is METADATA-SIZED by contract (a benchmark set of
     # thousands of rows against a 100 TB corpus): one file per layer, so
     # the publish commits one object and every read-back lists one file
@@ -387,12 +364,6 @@ DECONTAMINATION_INGEST = FileIngest(
 )
 
 
-def read_decontamination_report(
-    spark: SparkSession, report_path: str
-) -> DataFrame:
-    return read_batch_store(spark, report_path, DECON_REPORT_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Drift-monitored ingest: versioned quantizer store + retrain loop
 # ---------------------------------------------------------------------------
@@ -400,7 +371,7 @@ def read_decontamination_report(
 #: stats written by the monitored processor carry the quantizer version
 #: they were routed with, so drift is always measured against the
 #: baseline of the SAME quantizer generation
-MONITOR_STATS_SCHEMA = (
+MONITOR_STATS = StoreSpec(
     "cell int, n_vecs long, sum_dist_fx long, batch_id long, "
     "quantizer_version int"
 )
@@ -526,10 +497,6 @@ def drift_report(baseline: DataFrame, stats: DataFrame) -> DataFrame:
     )
 
 
-def read_monitor_stats(spark: SparkSession, stats_path: str) -> DataFrame:
-    return read_batch_store(spark, stats_path, MONITOR_STATS_SCHEMA)
-
-
 def _routed_version(
     spark: SparkSession,
     stats_path: str,
@@ -544,7 +511,7 @@ def _routed_version(
     the drift evaluation cannot fire a spurious extra retrain.
     ``column`` names the version column (the text drift loop shares this
     protocol with its own stats schema — streaming/docs.py)."""
-    d = os.path.join(stats_path, f"batch={batch_id}")
+    d = batch_dir(stats_path, batch_id)
     if not os.path.isdir(d):
         return None
     try:
@@ -585,36 +552,21 @@ def make_monitored_ingest_processor(
         )
         batch = batch.localCheckpoint(eager=True)
         from etl_pipeline_challenge_aladia_spark.operators.similarity import (
-            assign_to_centroids,
             kmeans_with_centroids,
         )
 
-        routed = (
-            assign_to_centroids(batch, cents, id_col=id_col, vec_col=vec_col)
-            .join(batch.select(F.col(id_col).alias("id"), vec_col), "id")
-            .select(
-                F.col("id").alias(id_col),
-                F.col(vec_col),
-                F.col("cluster").alias("cell"),
-                "dist_fx",
-            )
-            .localCheckpoint(eager=True)
+        routed = _route(batch, cents, id_col, vec_col).localCheckpoint(eager=True)
+        append_batch(
+            routed, index_path, batch_id, EMBEDDING_INDEX.partition_by
         )
-        routed.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(index_path, f"batch={batch_id}")
+        append_batch(
+            _cell_stats(routed, batch_id).withColumn(
+                "quantizer_version", F.lit(version).cast("int")
+            ),
+            stats_path,
+            batch_id,
         )
-        (
-            routed.groupBy("cell")
-            .agg(
-                F.count(F.lit(1)).alias("n_vecs"),
-                F.sum("dist_fx").alias("sum_dist_fx"),
-            )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .withColumn("quantizer_version", F.lit(version).cast("int"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(stats_path, f"batch={batch_id}"))
-        )
-        gen_stats = read_monitor_stats(spark, stats_path).filter(
+        gen_stats = read_store(spark, MONITOR_STATS, stats_path).filter(
             F.col("quantizer_version") == version
         )
         # minimum-evidence gate: drift compares POPULATIONS, and right
@@ -634,7 +586,9 @@ def make_monitored_ingest_processor(
             or 0
         )
         if worst >= drift_threshold_permille:
-            data = read_index(spark, index_path).select(id_col, vec_col)
+            data = read_store(spark, EMBEDDING_INDEX, index_path).select(
+                id_col, vec_col
+            )
             k = cents.count()
             assigned, new_cents = kmeans_with_centroids(
                 data, k=int(k), id_col=id_col, vec_col=vec_col
@@ -663,60 +617,22 @@ def rebuild_index(
 ) -> int:
     """Background re-index after a quantizer retrain: route EVERY stored
     vector onto the CURRENT generation and write ONE consolidated
-    ``batch=0`` cell-partitioned layout at ``out_path`` — the offline
-    half of the drift loop (the monitored ingest keeps appending
-    per-batch layouts routed by whatever generation was current; this
-    consolidates them so probes prune against generation-consistent
-    cells and one directory per cell instead of one per batch).
-
-    The rewrite never blocks ingest — it reads a snapshot of the batch
-    directories and writes to a fresh path; serving flips to
-    ``out_path`` when done (same publish-then-point pattern as the
-    quantizer store). The consolidated layout lives under the reserved
-    ``compacted/`` directory, NOT a ``batch=<id>`` one: a continuing
-    ingest repointed at ``out_path`` restarts its fresh checkpoint at
-    batch_id 0, and a ``batch=0`` layout would let that first batch
-    both exclude the entire consolidated history from its screen and
-    overwrite it on append (the batch-0 collision class the document
-    stores solved with COMPACTED_DIR; read_index folds ``compacted/``
-    in unconditionally). Returns the number of vectors re-indexed."""
+    cell-partitioned layout under the reserved ``compacted/`` directory
+    at ``out_path`` — the offline half of the drift loop (the monitored
+    ingest keeps appending per-batch layouts routed by whatever
+    generation was current; this consolidates them so probes prune
+    against generation-consistent cells and one directory per cell
+    instead of one per batch). It is the index's compaction, with
+    routing as the transform: publish-then-point, never blocking
+    ingest, and safe against the fresh-checkpoint batch-0 collision
+    (streaming/store.py). Returns the number of vectors re-indexed."""
     cents, _baseline, _ver = load_quantizer(spark, store_path)
-    data = read_index(spark, index_path).select(id_col, vec_col)
-    from etl_pipeline_challenge_aladia_spark.operators.similarity import (
-        assign_to_centroids,
+    data = read_store(spark, EMBEDDING_INDEX, index_path).select(
+        id_col, vec_col
     )
-
-    routed = (
-        assign_to_centroids(data, cents, id_col=id_col, vec_col=vec_col)
-        .join(data.select(F.col(id_col).alias("id"), vec_col), "id")
-        .select(
-            F.col("id").alias(id_col),
-            F.col(vec_col),
-            F.col("cluster").alias("cell"),
-            "dist_fx",
-        )
-        .localCheckpoint(eager=True)
-    )
-    routed.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(out_path, COMPACTED_DIR)
-    )
+    routed = _route(data, cents, id_col, vec_col).localCheckpoint(eager=True)
+    routed.write.mode("overwrite").partitionBy(
+        *EMBEDDING_INDEX.partition_by
+    ).parquet(os.path.join(out_path, COMPACTED_DIR))
     carry_erasure(spark, index_path, out_path)
     return routed.count()
-
-
-def erase_index_keys(
-    spark: SparkSession, index_path: str, vec_ids
-) -> int:
-    """Right-to-be-forgotten for the embedding index (VERDICT r9 #2):
-    physically rewrite every batch/compacted layout without the keyed
-    vectors — preserving the ``cell=`` partition pruning layout — and
-    denylist the ids so checkpoint replays cannot resurrect them
-    (streaming/store.py:erase_keys). Post-erase, probes, dedup screens,
-    and rebuilds behave as if the vectors were never ingested. The
-    per-batch ingest STATS store is an aggregate (per-cell counts and
-    error sums) — erased vectors' contributions are rebuilt, not
-    subtracted: re-run rebuild_index / the stats pass after bulk
-    erasure if cell-grain counts must also forget."""
-    return erase_keys(
-        spark, index_path, "vec_id", vec_ids, partition_by=["cell"]
-    )

@@ -36,14 +36,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    StoreSpec,
     append_batch,
-    compact_store,
-    erase_keys,
     read_store,
 )
 
-LEAKAGE_SCHEMA = (
-    "doc_id long, screen string, matched_eval_id long, cosine double"
+#: provenance-tagged verdicts, erased by doc_id; compaction folds the
+#: per-batch verdict directories into one DISTINCT layout
+LEAKAGE_STORE = StoreSpec(
+    "doc_id long, screen string, matched_eval_id long, cosine double",
+    key="doc_id",
+    compact=DataFrame.distinct,
 )
 
 
@@ -51,7 +54,7 @@ def leakage_verdicts(
     ngram_leaks: DataFrame, semantic_leaks: DataFrame
 ) -> DataFrame:
     """Normalize the two screens' outputs into one provenance-tagged
-    verdict frame (``LEAKAGE_SCHEMA``): ``ngram_leaks`` is the n-gram
+    verdict frame (``LEAKAGE_STORE``'s schema): ``ngram_leaks`` is the n-gram
     screen's id frame (operators/text.py:contamination_overlap —
     ``doc_id`` plus whatever overlap columns it carries, dropped here),
     ``semantic_leaks`` the embedding screen's
@@ -78,23 +81,10 @@ def append_leakage_batch(
 ) -> None:
     """Persist one screening run's verdicts under ``batch=<id>`` —
     overwrite, so a replayed screen is idempotent by construction."""
-    append_batch(verdicts.select(*_COLS), path, batch_id)
-
-
-_COLS = ("doc_id", "screen", "matched_eval_id", "cosine")
-
-
-def read_leakage_store(
-    spark: SparkSession,
-    path: str,
-    strictly_before: int | None = None,
-) -> DataFrame:
-    """All verdicts a reader may see: live batches (optionally only
-    those strictly before a replaying batch) plus the compacted layer,
-    with the erasure shield applied unconditionally — an empty frame
-    with the declared schema before any screen has run."""
-    return read_store(
-        spark, path, LEAKAGE_SCHEMA, strictly_before=strictly_before
+    append_batch(
+        verdicts.select("doc_id", "screen", "matched_eval_id", "cosine"),
+        path,
+        batch_id,
     )
 
 
@@ -106,31 +96,7 @@ def leakage_denylist(
     """The skinny ``doc_id`` frame a curation run anti-joins — DISTINCT
     over every screen and batch, erasure-shielded by the read path."""
     return (
-        read_leakage_store(spark, path, strictly_before=strictly_before)
+        read_store(spark, LEAKAGE_STORE, path, strictly_before=strictly_before)
         .select("doc_id")
         .distinct()
     )
-
-
-def compact_leakage_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Fold per-batch verdict directories (plus any prior compacted
-    layer) into one DISTINCT layout at a fresh path — publish-then-
-    point, carrying the erasure denylist (store contract). Returns the
-    compacted row count."""
-    return compact_store(
-        spark,
-        store_path,
-        out_path,
-        LEAKAGE_SCHEMA,
-        transform=lambda d: d.distinct(),
-    )
-
-
-def erase_leakage_keys(spark: SparkSession, path: str, doc_ids) -> int:
-    """Erase documents from the denylist — denylist epoch first (logical
-    erasure is durable at the first write; replays cannot resurrect the
-    verdicts), then physical rewrite of every batch directory and the
-    compacted layer (streaming/store.py:erase_keys)."""
-    return erase_keys(spark, path, "doc_id", doc_ids)

@@ -37,24 +37,26 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
     FileIngest,
+    StoreSpec,
     append_batch,
-    compact_store,
-    erase_keys,
-    read_store as _read_store,
+    read_store,
 )
 
-#: per-batch image fingerprints
-MEDIA_SIG_STORE_SCHEMA = "media_id long, ahash long"
+#: per-batch fingerprints of ONE modality (the ``<store>/<modality>``
+#: sub-directory); compaction keeps one row per distinct fingerprint
+MEDIA_SIG_STORE = StoreSpec(
+    "media_id long, ahash long", key="media_id", compact=DataFrame.distinct
+)
 
 #: per-batch near-dup report. ``corpus_id`` is the already-stored side
 #: for cross-batch hits; for within-batch twins it is the batch-mate
 #: with the smaller media_id (stored by the same append).
-MEDIA_NEAR_DUP_REPORT_SCHEMA = (
+MEDIA_NEAR_DUP_REPORT = StoreSpec(
     "delta_id long, corpus_id long, hamming long, modality string,"
     " batch_id long"
 )
@@ -125,8 +127,8 @@ def make_media_fingerprint_ingest_processor(
         ):
             sub = os.path.join(store_path, modality)
             sigs = hasher(frame).localCheckpoint(eager=True)
-            store = _read_store(
-                spark, sub, MEDIA_SIG_STORE_SCHEMA, strictly_before=batch_id
+            store = read_store(
+                spark, MEDIA_SIG_STORE, sub, strictly_before=batch_id
             )
             cross = hamming_band_pairs_across(
                 sigs, store, max_hamming=mh, blocks=nb, key_blocks=kb
@@ -157,55 +159,14 @@ MEDIA_FINGERPRINT_INGEST = FileIngest(
 )
 
 
-def read_media_near_dup_report(spark: SparkSession, report_path: str) -> DataFrame:
-    return _read_store(spark, report_path, MEDIA_NEAR_DUP_REPORT_SCHEMA)
-
-
-def read_media_sig_store(
-    spark: SparkSession, store_path: str, modality: str | None = None
-) -> DataFrame:
-    """Accumulated fingerprints — one modality's store, or all of them
-    tagged with a ``modality`` column."""
-    if modality is not None:
-        return _read_store(
-            spark, os.path.join(store_path, modality), MEDIA_SIG_STORE_SCHEMA
-        )
-    out = None
-    for m in FINGERPRINT_MODALITIES:
-        part = _read_store(
-            spark, os.path.join(store_path, m), MEDIA_SIG_STORE_SCHEMA
-        ).withColumn("modality", F.lit(m))
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def compact_media_sig_store(
-    spark: SparkSession, store_path: str, out_path: str
-) -> int:
-    """Consolidate a fingerprint store's per-batch directories (every
-    modality) into ONE reserved ``compacted/`` layout per modality at a
-    fresh path — the shared compactor (streaming/store.py) with a
-    global DISTINCT shrink (the same item ingested by many batches
-    stores one row). Returns the total number of stored distinct
-    fingerprints."""
-    return sum(
-        compact_store(
-            spark,
-            os.path.join(store_path, m),
-            os.path.join(out_path, m),
-            MEDIA_SIG_STORE_SCHEMA,
-            transform=lambda d: d.distinct(),
-        )
-        for m in FINGERPRINT_MODALITIES
-    )
-
-
 #: per-batch video frame-hash SEQUENCES (frame_no kept — the whole
 #: point: runs need order, not just membership)
-VIDEO_SEQ_STORE_SCHEMA = "media_id long, frame_no long, ahash long"
+VIDEO_SEQ_STORE = StoreSpec(
+    "media_id long, frame_no long, ahash long", key="media_id"
+)
 
 #: per-batch sequence near-dup report (run-based criterion)
-VIDEO_SEQ_REPORT_SCHEMA = (
+VIDEO_SEQ_REPORT = StoreSpec(
     "delta_id long, corpus_id long, longest_run long, n_runs long,"
     " batch_id long"
 )
@@ -244,9 +205,8 @@ def make_video_sequence_ingest_processor(
         frames = video_frame_hashes(
             _delta_media_frame(delta)
         ).localCheckpoint(eager=True)  # one decode pass per batch
-        store = _read_store(
-            spark, store_path, VIDEO_SEQ_STORE_SCHEMA,
-            strictly_before=batch_id,
+        store = read_store(
+            spark, VIDEO_SEQ_STORE, store_path, strictly_before=batch_id
         )
         across = video_sequence_pairs_across(
             frames, store, min_run=min_run, frame_df_cap=frame_df_cap
@@ -276,22 +236,3 @@ VIDEO_SEQUENCE_INGEST = FileIngest(
     MEDIA_STREAM_SCHEMA, make_video_sequence_ingest_processor,
     one_file_per_batch=True,
 )
-
-
-def read_video_seq_report(spark: SparkSession, report_path: str) -> DataFrame:
-    return _read_store(spark, report_path, VIDEO_SEQ_REPORT_SCHEMA)
-
-
-def read_video_seq_store(spark: SparkSession, store_path: str) -> DataFrame:
-    return _read_store(spark, store_path, VIDEO_SEQ_STORE_SCHEMA)
-
-
-def erase_video_seq_keys(
-    spark: SparkSession, store_path: str, media_ids
-) -> int:
-    """Right-to-be-forgotten for stored frame sequences: physically
-    rewrite without the keyed clips' frames and denylist the ids
-    against replay — post-erase, sequence screens behave as if the
-    clips were never ingested. Returns physical rows (frames)
-    removed."""
-    return erase_keys(spark, store_path, "media_id", media_ids)

@@ -56,6 +56,24 @@ protocol, stated once:
   contribution; such stores document a rebuild-from-live-corpus path
   instead of pretending deletion composes.
 
+- **Declared stores** (``StoreSpec``): each store is ONE constant
+  declared next to its processor, as each ingest is a ``FileIngest``:
+  its empty-read schema, its erase key, its compaction transform and
+  its directory partitioning. ``read_store``, ``compact_store`` and
+  ``erase_keys`` take the declaration, so no store restates the
+  contract above in a wrapper of its own; a two-part store (the
+  signature store's ``bands``/``shingles``) is two declarations over
+  two sub-directories. What differs between stores follows from the
+  declaration: a report store is never compacted, so it simply has no
+  ``compacted/`` layer; an aggregate (count-min cells, day totals)
+  declares no key, so ``erase_keys`` refuses it and the erasure path
+  is a rebuild from the erased live corpus; a compaction that sums
+  per-batch rows away (count-min cells, day totals) also sums away
+  the per-batch provenance a replay of a pre-compaction batch would
+  need, so compaction runs on a quiesced store whose checkpoint has
+  committed every contributing batch, and a consumer is pointed at
+  the fresh path only once it is published (publish-then-point).
+
 - **One stream driver** (``drain_stream``): the only place the
   source -> checkpointed ``foreachBatch(processor)`` -> drain chain is
   written. Each file-fed ingest is a ``FileIngest`` declared next to
@@ -80,6 +98,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_challenge_aladia_spark.sinks import _promote_dir, _recover_dir
+
 #: reserved directory name for consolidated history (see module doc)
 COMPACTED_DIR = "compacted"
 
@@ -88,40 +108,55 @@ ERASED_DIR = "erased"
 
 ERASED_SCHEMA = "key string, key_col string"
 
+#: suffixes of an erasure rewrite's staged copy and of the layer it
+#: replaces (never numeric, so never listed as a live batch)
+_STAGED, _OLD = ".erasing", ".erasing_old"
 
-def batch_dirs(
-    path: str,
-    exclude: int | None = None,
-    before: int | None = None,
-) -> list[str]:
+
+class StoreSpec(NamedTuple):
+    """One derived store, declared once next to its processor: the
+    ``schema`` an empty store reads as, the ``key`` column erasure
+    matches (None for aggregates, which are rebuilt instead), the
+    ``compact`` transform folding history into the ``compacted/``
+    layer (identity when None) and the directory columns rows are
+    ``partition_by``-written under."""
+
+    schema: str
+    key: str | None = None
+    compact: Callable[[DataFrame], DataFrame] | None = None
+    partition_by: tuple[str, ...] = ()
+
+
+def batch_dir(path: str, batch_id: int) -> str:
+    """The directory of one micro-batch's output (``batch=<id>``)."""
+    return os.path.join(path, f"batch={batch_id}")
+
+
+def batch_dirs(path: str, before: int | None = None) -> list[str]:
     """The live ``batch=<id>`` directories of a store, sorted by name —
-    minus ``exclude``'s own directory (replay never reads its own
-    half-written output) and, with ``before``, minus every id >=
-    ``before`` (the strictly-earlier contract, applied at listing
-    time). Only ``append_batch``-written NUMERIC ids are live batches:
-    a stray non-numeric ``batch=*`` entry (a partial copy, an editor
-    dropping) is skipped outright rather than read as history — under
-    ``before`` it would otherwise masquerade as strictly-earlier data
-    in every replay screen."""
+    with ``before``, minus every id >= ``before`` (the strictly-earlier
+    contract, applied at listing time). Only ``append_batch``-written
+    NUMERIC ids are live batches: a stray non-numeric ``batch=*`` entry
+    (a partial copy, an editor dropping, an interrupted erasure's
+    staged copy) is skipped outright rather than read as history —
+    under ``before`` it would otherwise masquerade as strictly-earlier
+    data in every replay screen."""
     try:
-        entries = []
-        for e in sorted(os.listdir(path)):
-            if not e.startswith("batch="):
-                continue
-            try:
-                int(e.split("=", 1)[1])
-            except ValueError:
-                continue
-            entries.append(e)
+        names = os.listdir(path)
     except OSError:
         return []
-    if exclude is not None:
-        entries = [e for e in entries if e != f"batch={exclude}"]
-    if before is not None:
-        entries = [
-            e for e in entries if int(e.split("=", 1)[1]) < before
-        ]
-    return [os.path.join(path, e) for e in entries]
+    ids = []
+    for e in names:
+        if e.startswith("batch="):
+            try:
+                ids.append((int(e.split("=", 1)[1]), e))
+            except ValueError:
+                continue
+    return [
+        os.path.join(path, e)
+        for i, e in sorted(ids, key=lambda t: t[1])
+        if before is None or i < before
+    ]
 
 
 def _erased_epoch_dirs(path: str) -> list[str]:
@@ -183,59 +218,39 @@ def apply_erasure(
     return df
 
 
-def read_batch_store(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    exclude_batch: int | None = None,
-    base_path: str | None = None,
-    strictly_before: int | None = None,
-) -> DataFrame:
-    """Read a store's LIVE batch directories (no compacted layer), or
-    an EMPTY frame with the declared schema when nothing has been
-    ingested yet (never a path-not-found AnalysisException).
-    ``base_path`` turns on partition-column discovery (batch/cell
-    directory columns). The erasure denylist, when present, is applied
-    unconditionally — a replayed batch lawfully rewrites erased rows
-    into its directory; the read path keeps them invisible."""
-    dirs = batch_dirs(path, exclude_batch, strictly_before)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    return apply_erasure(spark, reader.parquet(*dirs), path)
-
-
 def read_store(
     spark: SparkSession,
+    spec: StoreSpec,
     path: str,
-    schema: str,
-    exclude_batch: int | None = None,
     strictly_before: int | None = None,
-    compacted_schema: str | None = None,
-    live_columns: Sequence[str] | None = None,
 ) -> DataFrame:
-    """The full store a reader may see: live batch directories (pruned
-    per ``exclude_batch`` / ``strictly_before``) PLUS the reserved
-    ``compacted/`` layer when present, read UNCONDITIONALLY.
+    """The full store a reader may see: the live batch directories
+    (only ids < ``strictly_before`` when given) PLUS the reserved
+    ``compacted/`` layer when present, read UNCONDITIONALLY, with the
+    erasure shield applied. An empty store reads as an empty frame
+    with ``spec.schema`` (never a path-not-found error).
 
-    ``live_columns`` projects live rows before the union — for stores
-    whose live rows carry columns the compacted layout drops (the
-    anomaly day store's data-level batch_id). ``compacted_schema``
-    defaults to ``schema``."""
-    df = read_batch_store(
-        spark, path, schema, exclude_batch, strictly_before=strictly_before
-    )
-    if live_columns is not None:
-        df = df.select(*live_columns)
+    Live and compacted rows are unioned by name with missing columns
+    allowed, so a column the compacted layout drops — a live batch id,
+    the discovered ``batch`` directory column of a ``partition_by``
+    store — reads NULL on compacted rows: consolidated pre-history is
+    no batch's output. A ``partition_by`` store discovers its directory
+    columns (``batch``, then the declared ones), so a filter on them
+    prunes the scan to the matching directories."""
+    dirs = batch_dirs(path, strictly_before)
+    if dirs:
+        reader = spark.read
+        if spec.partition_by:
+            reader = reader.option("basePath", path)
+        df = reader.parquet(*dirs)
+    else:
+        df = spark.createDataFrame([], spec.schema)
     compacted = os.path.join(path, COMPACTED_DIR)
     if os.path.isdir(compacted):
-        comp = spark.read.schema(compacted_schema or schema).parquet(
-            compacted
+        df = df.unionByName(
+            spark.read.parquet(compacted), allowMissingColumns=True
         )
-        df = df.unionByName(apply_erasure(spark, comp, path))
-    return df
+    return apply_erasure(spark, df, path)
 
 
 def append_batch(df: DataFrame, path: str, batch_id: int, partition_by: Sequence[str] | None = None) -> None:
@@ -244,44 +259,44 @@ def append_batch(df: DataFrame, path: str, batch_id: int, partition_by: Sequence
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(os.path.join(path, f"batch={batch_id}"))
+    writer.parquet(batch_dir(path, batch_id))
+
+
+def _recover_layers(path: str) -> None:
+    """Finish what an interrupted erasure rewrite left: a layer whose
+    only copy was moved aside is restored, and staged copies that never
+    landed are dropped (the re-run stages them afresh)."""
+    try:
+        names = os.listdir(path)
+    except OSError:
+        return
+    for e in names:
+        d = os.path.join(path, e)
+        if e.endswith(_OLD):
+            _recover_dir(d[: -len(_OLD)], d)
+        elif e.endswith(_STAGED):
+            shutil.rmtree(d)
 
 
 def compact_store(
-    spark: SparkSession,
-    store_path: str,
-    out_path: str,
-    schema: str,
-    transform=None,
-    partition_by: Sequence[str] | None = None,
-    compacted_schema: str | None = None,
-    live_columns: Sequence[str] | None = None,
+    spark: SparkSession, spec: StoreSpec, store_path: str, out_path: str
 ) -> int:
     """Consolidate a store's per-batch directories (folding in any
     prior ``compacted/`` layer, so re-compaction composes) into ONE
-    reserved ``compacted/`` layout at a fresh path. ``transform``
-    shrinks the data on the way (DISTINCT for fingerprint sets,
-    cell-wise sums for sketches); identity by default.
-    ``live_columns``/``compacted_schema`` forward to ``read_store``
-    for stores whose live rows carry provenance columns the compacted
-    layout drops. The erasure denylist, when present, is consolidated
-    into the fresh path's ``erased/epoch=0`` — the compacted DATA is
-    already erasure-filtered (read_store applies the shield), but a
-    post-compaction replay of an old batch still needs the read-path
-    guard. Returns the compacted row count."""
-    data = read_store(
-        spark,
-        store_path,
-        schema,
-        compacted_schema=compacted_schema,
-        live_columns=live_columns,
-    )
-    if transform is not None:
-        data = transform(data)
+    reserved ``compacted/`` layout at a fresh path, shrunk on the way
+    by ``spec.compact``. The erasure denylist, when present, is
+    consolidated into the fresh path's ``erased/epoch=0`` — the
+    compacted DATA is already erasure-filtered (read_store applies the
+    shield), but a post-compaction replay of an old batch still needs
+    the read-path guard. Returns the compacted row count."""
+    _recover_layers(store_path)
+    data = read_store(spark, spec, store_path)
+    if spec.compact is not None:
+        data = spec.compact(data)
     target = os.path.join(out_path, COMPACTED_DIR)
     writer = data.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    if spec.partition_by:
+        writer = writer.partitionBy(*spec.partition_by)
     writer.parquet(target)
     carry_erasure(spark, store_path, out_path)
     return spark.read.parquet(target).count()
@@ -304,15 +319,12 @@ def carry_erasure(
 
 
 def erase_keys(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    keys: Sequence,
-    partition_by: Sequence[str] | None = None,
+    spark: SparkSession, spec: StoreSpec, path: str, keys
 ) -> int:
-    """Erase every row keyed by ``keys`` from a store — the derived-
-    artifact half of the GDPR contract (the warehouse half is
-    sinks.py:erase_warehouse_keys). Two layers, applied in this order:
+    """Erase every row whose ``spec.key`` is in ``keys`` from a store —
+    the derived-artifact half of the GDPR contract (the warehouse half
+    is sinks.py:erase_warehouse_keys). Two layers, applied in this
+    order:
 
     1. The keys are appended FIRST to the PERMANENT ``erased/``
        denylist (``epoch=<n>`` directories, one per request), which
@@ -328,21 +340,31 @@ def erase_keys(
     2. PHYSICAL rewrite (pure reclamation once the denylist is down):
        every live ``batch=<id>`` directory and the ``compacted/``
        layer containing matches is rewritten without them (filter ->
-       fresh directory -> atomic swap), so data at rest no longer
-       holds the keys. ``partition_by`` preserves a partitioned layout
-       (the embedding index's ``cell=`` dirs). Like compaction, the
-       rewrite assumes the store is quiesced; it is safely re-runnable
-       after a crash.
+       staged copy -> swap that moves the old copy aside first), so
+       data at rest no longer holds the keys. A ``partition_by`` store
+       keeps its directory layout (the embedding index's ``cell=``
+       dirs). Like compaction, the rewrite assumes the store is
+       quiesced; a crash at any point of the swap loses no kept row,
+       and the next erase_keys or compact_store on the store restores
+       any layer a crash left moved aside before it reads.
 
-    Keys are matched on their string form (``CAST(key_col AS STRING)``),
+    Keys are matched on their string form (``CAST(key AS STRING)``),
     so one denylist schema serves long-keyed (doc/media/vec ids) and
     content-keyed (segment/chunk) stores alike. ``keys`` is either a
     driver list (an erasure request is human-grain) or a single-column
     DataFrame (derived content-key sets stay distributed end-to-end).
-    Aggregate/sketch stores (count-min) must NOT use this — a sketch
-    cell cannot subtract one key's contribution; rebuild from the
-    erased live corpus instead (docs.py:rebuild_countmin_store over
-    post-erasure data). Returns the number of physical rows removed."""
+    A store declared without a key is an aggregate (count-min cells,
+    day totals): a cell cannot subtract one key's contribution, so it
+    is rebuilt from the erased live corpus instead
+    (docs.py:rebuild_countmin_store). Returns the number of physical
+    rows removed."""
+    key_col = spec.key
+    if key_col is None:
+        raise ValueError(
+            f"store at {path} declares no erase key: an aggregate is "
+            "rebuilt from the erased corpus, not filtered"
+        )
+    _recover_layers(path)
     if isinstance(keys, DataFrame):
         kdf = (
             keys.select(
@@ -388,13 +410,11 @@ def erase_keys(
         if n == 0:
             continue
         kept = df.join(F.broadcast(kdf), cond, "left_anti")
-        tmp = d + ".erasing"
         writer = kept.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        shutil.rmtree(d)
-        os.rename(tmp, d)
+        if spec.partition_by:
+            writer = writer.partitionBy(*spec.partition_by)
+        writer.parquet(d + _STAGED)
+        _promote_dir(d + _STAGED, d, d + _OLD)
         removed += n
     return removed
 

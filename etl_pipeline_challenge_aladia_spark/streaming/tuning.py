@@ -27,11 +27,12 @@ from etl_pipeline_challenge_aladia_spark.functions.hashing import (
     md5_fold32_col,
 )
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    StoreSpec,
     append_batch,
     read_store,
 )
 
-TUNING_REPORT_SCHEMA = (
+TUNING_REPORTS = StoreSpec(
     "knob string, chosen long, achieved_recall_permille long,"
     " target_permille long, corpus_fingerprint long, n_inputs long,"
     " curve string, batch_id long"
@@ -81,12 +82,8 @@ def append_tuning_report(
         int(batch_id),
     )
     append_batch(
-        spark.createDataFrame([row], TUNING_REPORT_SCHEMA), path, batch_id
+        spark.createDataFrame([row], TUNING_REPORTS.schema), path, batch_id
     )
-
-
-def read_tuning_reports(spark: SparkSession, path: str) -> DataFrame:
-    return read_store(spark, path, TUNING_REPORT_SCHEMA)
 
 
 def tune_bands_and_report(
@@ -365,7 +362,7 @@ def route_threshold_from_store(
     ``route_threshold`` / resolve_semantic_route's ``threshold`` so the
     deployment's own measurement (not the build host's constant) routes
     the plan. Latest = max batch_id, numerically."""
-    reports = read_tuning_reports(spark, path).filter(
+    reports = read_store(spark, TUNING_REPORTS, path).filter(
         F.col("knob") == ROUTE_THRESHOLD_KNOB
     )
     row = reports.orderBy(F.desc("batch_id")).limit(1).collect()

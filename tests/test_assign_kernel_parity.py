@@ -279,3 +279,29 @@ def test_giant_cell_tiled_route_parity(monkeypatch, planted):
         ).withColumnRenamed("vec_id", "id")
     )
     assert got2 == want2 and len(got2) > 0
+
+
+def test_eval_index_persisted_layout_parity(monkeypatch, planted, tmp_path):
+    """A persisted eval index has ONE layout whichever implementation
+    built it: from single-precision source vectors, both builds read
+    back the same cells schema and rows."""
+    from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        build_eval_index,
+        load_eval_index,
+        save_eval_index,
+    )
+
+    src = planted.select(
+        "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
+    )
+    cells = {}
+    for impl in ("sql", "arrow"):
+        monkeypatch.setenv(sim.ASSIGN_IMPL_ENV, impl)
+        save_eval_index(
+            *build_eval_index(src, k=4, route="flat"), str(tmp_path / impl)
+        )
+        cells[impl] = load_eval_index(
+            planted.sparkSession, str(tmp_path / impl)
+        )[0]
+    assert cells["sql"].schema == cells["arrow"].schema
+    assert _rows(cells["sql"]) == _rows(cells["arrow"])

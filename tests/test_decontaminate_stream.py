@@ -10,7 +10,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
+from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    drain_files,
+    read_store,
+)
 
 
 def _vecs(spark, rows):
@@ -28,8 +31,8 @@ def test_decontamination_ingest_screens_against_frozen_eval_index(
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
         DECONTAMINATION_INGEST,
+        DECON_REPORT,
         build_eval_index,
-        read_decontamination_report,
     )
 
     # eval set: 10 directions 0.5 rad apart (neighbor cosine ~0.88 —
@@ -59,7 +62,7 @@ def test_decontamination_ingest_screens_against_frozen_eval_index(
     )
     batch0.coalesce(1).write.mode("append").parquet(in_dir)
     drain()
-    got0 = rows(read_decontamination_report(spark, rep))
+    got0 = rows(read_store(spark, DECON_REPORT, rep))
     # exactly the planted twins, matched to their eval originals — and
     # bit-identical to the one-shot batch operator on the same inputs
     assert {r[0]: r[1] for r in got0} == {100: 0, 101: 1, 102: 2}
@@ -76,12 +79,12 @@ def test_decontamination_ingest_screens_against_frozen_eval_index(
         1
     ).write.mode("append").parquet(in_dir)
     drain()
-    after1 = rows(read_decontamination_report(spark, rep))
+    after1 = rows(read_store(spark, DECON_REPORT, rep))
     assert {r[0] for r in after1} == {100, 101, 102}  # nothing new
 
     # drained rerun: report unchanged (batch-keyed overwrite idempotence)
     drain()
-    assert rows(read_decontamination_report(spark, rep)) == after1
+    assert rows(read_store(spark, DECON_REPORT, rep)) == after1
 
 
 def test_build_eval_index_routes_like_the_batch_operator(spark):

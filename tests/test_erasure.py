@@ -7,14 +7,19 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    StoreSpec,
     append_batch,
     compact_store,
     erase_keys,
     read_store,
 )
+
+#: the generic test store: (k, v) rows erased by k
+KV = StoreSpec("k long, v string", key="k")
 
 
 def _mk_store(spark, path):
@@ -38,11 +43,11 @@ def test_stray_nonnumeric_batch_dir_is_never_read(spark, tmp_path):
     spark.createDataFrame([(999, "stray")], "k long, v string").write.mode(
         "overwrite"
     ).parquet(os.path.join(p, "batch=tmp"))
-    for kwargs in ({}, {"strictly_before": 1}, {"exclude_batch": 0}):
+    for kwargs in ({}, {"strictly_before": 1}):
         got = {
             r.k
             for r in read_store(
-                spark, p, "k long, v string", **kwargs
+                spark, KV, p, **kwargs
             ).collect()
         }
         assert 999 not in got
@@ -53,10 +58,10 @@ def test_erase_keys_physical_and_logical(spark, tmp_path):
     rows untouched; the denylist directory exists and is reserved."""
     p = str(tmp_path / "s")
     _mk_store(spark, p)
-    removed = erase_keys(spark, p, "k", [1, 12])
+    removed = erase_keys(spark, KV, p, [1, 12])
     assert removed == 2
     got = sorted(
-        r.k for r in read_store(spark, p, "k long, v string").collect()
+        r.k for r in read_store(spark, KV, p).collect()
     )
     assert got == [0, 2, 3, 4, 10, 11, 13, 14]
     # physical: raw directory reads (no shield) also lack the keys
@@ -71,7 +76,7 @@ def test_erasure_survives_checkpoint_replay(spark, tmp_path):
     them invisible, and a later re-erasure drops them physically again."""
     p = str(tmp_path / "s")
     _mk_store(spark, p)
-    erase_keys(spark, p, "k", [11])
+    erase_keys(spark, KV, p, [11])
     # checkpoint replay: batch 1 rewritten from source, erased row back
     append_batch(
         spark.createDataFrame(
@@ -82,7 +87,7 @@ def test_erasure_survives_checkpoint_replay(spark, tmp_path):
     )
     raw = spark.read.parquet(os.path.join(p, "batch=1"))
     assert 11 in {r.k for r in raw.collect()}  # physically back...
-    got = {r.k for r in read_store(spark, p, "k long, v string").collect()}
+    got = {r.k for r in read_store(spark, KV, p).collect()}
     assert 11 not in got  # ...but never readable
 
 
@@ -92,8 +97,8 @@ def test_erasure_survives_compaction_and_later_replay(spark, tmp_path):
     still cannot resurrect the keys."""
     p, out = str(tmp_path / "s"), str(tmp_path / "s2")
     _mk_store(spark, p)
-    erase_keys(spark, p, "k", [3, 10])
-    n = compact_store(spark, p, out, "k long, v string")
+    erase_keys(spark, KV, p, [3, 10])
+    n = compact_store(spark, KV, p, out)
     assert n == 8
     comp = spark.read.parquet(os.path.join(out, "compacted"))
     assert {r.k for r in comp.collect()}.isdisjoint({3, 10})
@@ -103,7 +108,7 @@ def test_erasure_survives_compaction_and_later_replay(spark, tmp_path):
         out,
         0,
     )
-    got = {r.k for r in read_store(spark, out, "k long, v string").collect()}
+    got = {r.k for r in read_store(spark, KV, out).collect()}
     assert 3 not in got and 99 in got
 
 
@@ -113,8 +118,8 @@ def test_erase_keys_accepts_dataframe_keyset(spark, tmp_path):
     p = str(tmp_path / "s")
     _mk_store(spark, p)
     kdf = spark.createDataFrame([(0,), (14,)], "k long")
-    assert erase_keys(spark, p, "k", kdf) == 2
-    got = {r.k for r in read_store(spark, p, "k long, v string").collect()}
+    assert erase_keys(spark, KV, p, kdf) == 2
+    got = {r.k for r in read_store(spark, KV, p).collect()}
     assert got.isdisjoint({0, 14})
 
 
@@ -128,9 +133,8 @@ def test_erase_signature_keys_screens_as_never_ingested(spark, tmp_path):
         minhash_pairs_from_store,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        BAND_STORE_SCHEMA,
-        SHINGLE_STORE_SCHEMA,
-        erase_signature_keys,
+        SIGNATURE_BANDS,
+        SIGNATURE_SHINGLES,
     )
 
     text = "the quick brown fox jumps over the lazy dog again and again"
@@ -148,15 +152,19 @@ def test_erase_signature_keys_screens_as_never_ingested(spark, tmp_path):
 
     def screen():
         sb = read_store(
-            spark, os.path.join(store, "bands"), BAND_STORE_SCHEMA
+            spark, SIGNATURE_BANDS, os.path.join(store, "bands")
         )
         ss = read_store(
-            spark, os.path.join(store, "shingles"), SHINGLE_STORE_SCHEMA
+            spark, SIGNATURE_SHINGLES, os.path.join(store, "shingles")
         )
         return minhash_pairs_from_store(sb, ss, delta, threshold=0.8)
 
     assert screen().count() == 1  # doc 1 pairs with its duplicate
-    removed = erase_signature_keys(spark, store, [1])
+    removed = erase_keys(
+        spark, SIGNATURE_BANDS, os.path.join(store, "bands"), [1]
+    ) + erase_keys(
+        spark, SIGNATURE_SHINGLES, os.path.join(store, "shingles"), [1]
+    )
     assert removed > 0
     assert screen().count() == 0  # as if never ingested
 
@@ -169,7 +177,7 @@ def test_erase_segments_of_docs_keeps_shared_content(spark, tmp_path):
         segment_fingerprint_store,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        SEGMENT_STORE_SCHEMA,
+        SEGMENT_STORE,
         erase_segments_of_docs,
     )
 
@@ -193,7 +201,7 @@ def test_erase_segments_of_docs_keeps_shared_content(spark, tmp_path):
     erase_segments_of_docs(spark, store, erased, retained_docs=retained)
     left = {
         r.seg
-        for r in read_store(spark, store, SEGMENT_STORE_SCHEMA).collect()
+        for r in read_store(spark, SEGMENT_STORE, store).collect()
     }
     shared_seg = {
         r.seg
@@ -210,12 +218,11 @@ def test_erase_segments_of_docs_keeps_shared_content(spark, tmp_path):
 
 
 def test_erase_index_keys_preserves_cell_layout(spark, tmp_path):
-    """Embedding-index erasure: vectors vanish from read_index, the
+    """Embedding-index erasure: vectors vanish from the index reader, the
     cell-partitioned directory layout survives the rewrite (partition
     pruning still works), and untouched cells are intact."""
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
-        erase_index_keys,
-        read_index,
+        EMBEDDING_INDEX,
     )
 
     idx = str(tmp_path / "idx")
@@ -226,8 +233,8 @@ def test_erase_index_keys_preserves_cell_layout(spark, tmp_path):
     df.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(idx, "batch=0")
     )
-    assert erase_index_keys(spark, idx, [4, 7]) == 2
-    got = {r.vec_id for r in read_index(spark, idx).collect()}
+    assert erase_keys(spark, EMBEDDING_INDEX, idx, [4, 7]) == 2
+    got = {r.vec_id for r in read_store(spark, EMBEDDING_INDEX, idx).collect()}
     assert got == set(range(12)) - {4, 7}
     cells = {
         e for e in os.listdir(os.path.join(idx, "batch=0"))
@@ -240,7 +247,7 @@ def test_rebuild_countmin_store_is_the_sketch_erasure_path(spark, tmp_path):
     """Sketches don't subtract: rebuilding from the post-erasure corpus
     yields exactly the sketch of the retained documents."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        CM_STORE_SCHEMA,
+        COUNTMIN_STORE,
         _cm_cells,
         rebuild_countmin_store,
     )
@@ -254,13 +261,16 @@ def test_rebuild_countmin_store_is_the_sketch_erasure_path(spark, tmp_path):
     n = rebuild_countmin_store(spark, retained, out)
     rebuilt = {
         (r.rw, r.bucket): r.n
-        for r in read_store(spark, out, CM_STORE_SCHEMA).collect()
+        for r in read_store(spark, COUNTMIN_STORE, out).collect()
     }
     expect = {
         (r.rw, r.bucket): r.n
         for r in _cm_cells(retained, 4, 256).collect()
     }
     assert rebuilt == expect and n == len(expect)
+    # a sketch declares no erase key, so erase_keys refuses it
+    with pytest.raises(ValueError):
+        erase_keys(spark, COUNTMIN_STORE, out, ["secret"])
 
 
 def test_erase_crash_mid_rewrite_leaves_no_readable_trace(
@@ -275,27 +285,27 @@ def test_erase_crash_mid_rewrite_leaves_no_readable_trace(
 
     p = str(tmp_path / "s")
     _mk_store(spark, p)
-    real_rmtree, calls = st.shutil.rmtree, []
+    real_promote, calls = st._promote_dir, []
 
-    def dying_rmtree(d, *a, **kw):
+    def dying_promote(staged, d, old):
         calls.append(d)
         if len(calls) >= 2:
             raise OSError("simulated crash mid-erase")
-        return real_rmtree(d, *a, **kw)
+        return real_promote(staged, d, old)
 
-    monkeypatch.setattr(st.shutil, "rmtree", dying_rmtree)
+    monkeypatch.setattr(st, "_promote_dir", dying_promote)
     # keys live in BOTH batch dirs: dir 1 scrubs, dir 2 crashes
     try:
-        erase_keys(spark, p, "k", [1, 12])
+        erase_keys(spark, KV, p, [1, 12])
         raise AssertionError("crash did not propagate")
     except OSError:
         pass
-    monkeypatch.setattr(st.shutil, "rmtree", real_rmtree)
+    monkeypatch.setattr(st, "_promote_dir", real_promote)
     # partially scrubbed at rest: batch=1 still physically holds 12...
     raw1 = {r.k for r in spark.read.parquet(os.path.join(p, "batch=1")).collect()}
     assert 12 in raw1
     # ...but the denylist landed first, so no reader shows either key
-    got = {r.k for r in read_store(spark, p, "k long, v string").collect()}
+    got = {r.k for r in read_store(spark, KV, p).collect()}
     assert got.isdisjoint({1, 12})
     # and a checkpoint replay of the unscrubbed batch changes nothing
     append_batch(
@@ -305,10 +315,43 @@ def test_erase_crash_mid_rewrite_leaves_no_readable_trace(
         p,
         1,
     )
-    got = {r.k for r in read_store(spark, p, "k long, v string").collect()}
+    got = {r.k for r in read_store(spark, KV, p).collect()}
     assert got.isdisjoint({1, 12})
     # the rewrite loop is pure reclamation: a re-run finishes the job
-    erase_keys(spark, p, "k", [1, 12])
+    erase_keys(spark, KV, p, [1, 12])
     for b in ("batch=0", "batch=1"):
         raw = {r.k for r in spark.read.parquet(os.path.join(p, b)).collect()}
         assert raw.isdisjoint({1, 12})
+
+
+def test_erase_swap_crash_loses_no_kept_row(spark, tmp_path, monkeypatch):
+    """The physical rewrite swaps each layer through a staged copy with
+    the old copy moved aside first: a crash after the old copy moved
+    aside but before the rewritten one landed leaves the kept rows only
+    in the moved-aside copy. The next erase_keys restores that copy
+    before it lists the store, so every kept row reads back and the
+    erased keys stay gone, logically and at rest."""
+    p = str(tmp_path / "s")
+    _mk_store(spark, p)
+    real_rename, crashed = os.rename, []
+
+    def dying_rename(src, dst):
+        # the rename that installs the rewritten copy
+        if src.endswith(".erasing") and not crashed:
+            crashed.append(src)
+            raise OSError("simulated crash mid-swap")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", dying_rename)
+    try:
+        erase_keys(spark, KV, p, [1])
+        raise AssertionError("crash did not propagate")
+    except OSError:
+        pass
+    monkeypatch.setattr(os, "rename", real_rename)
+    erase_keys(spark, KV, p, [1])
+    kept = [0, 2, 3, 4, 10, 11, 12, 13, 14]
+    assert sorted(r.k for r in read_store(spark, KV, p).collect()) == kept
+    raw = spark.read.parquet(os.path.join(p, "batch=0"), os.path.join(p, "batch=1"))
+    assert sorted(r.k for r in raw.collect()) == kept
+    assert sorted(os.listdir(p)) == ["batch=0", "batch=1", "erased"]

@@ -13,13 +13,15 @@ import os
 from pyspark.sql import functions as F
 
 from etl_pipeline_challenge_aladia_spark.streaming.leakage import (
-    LEAKAGE_SCHEMA,
+    LEAKAGE_STORE,
     append_leakage_batch,
-    compact_leakage_store,
-    erase_leakage_keys,
     leakage_denylist,
     leakage_verdicts,
-    read_leakage_store,
+)
+from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    compact_store,
+    erase_keys,
+    read_store,
 )
 
 
@@ -56,18 +58,18 @@ def test_batch_equality_and_replay_idempotence(spark, tmp_path):
     b1 = _verdicts(spark, [5], [(6, 101, 0.97)])
     append_leakage_batch(b0, p, 0)
     append_leakage_batch(b1, p, 1)
-    got = read_leakage_store(spark, p)
+    got = read_store(spark, LEAKAGE_STORE, p)
     assert _rows(got) == _rows(b0.unionByName(b1))
     # replay of batch 1 with IDENTICAL content: nothing duplicates
     append_leakage_batch(b1, p, 1)
-    assert _rows(read_leakage_store(spark, p)) == _rows(b0.unionByName(b1))
+    assert _rows(read_store(spark, LEAKAGE_STORE, p)) == _rows(b0.unionByName(b1))
     # replay that re-screens to a SUBSET overwrites its own directory
     append_leakage_batch(_verdicts(spark, [5], []), p, 1)
-    assert _rows(read_leakage_store(spark, p)) == _rows(
+    assert _rows(read_store(spark, LEAKAGE_STORE, p)) == _rows(
         b0.unionByName(_verdicts(spark, [5], []))
     )
     # strictly-earlier reads: a replaying batch 1 sees only batch 0
-    assert _rows(read_leakage_store(spark, p, strictly_before=1)) == _rows(
+    assert _rows(read_store(spark, LEAKAGE_STORE, p, strictly_before=1)) == _rows(
         b0
     )
     # the denylist is the distinct doc_id set across screens/batches
@@ -78,9 +80,9 @@ def test_batch_equality_and_replay_idempotence(spark, tmp_path):
 
 def test_empty_store_reads_empty_with_schema(spark, tmp_path):
     p = str(tmp_path / "never_written")
-    got = read_leakage_store(spark, p)
+    got = read_store(spark, LEAKAGE_STORE, p)
     assert got.count() == 0
-    assert got.schema == spark.createDataFrame([], LEAKAGE_SCHEMA).schema
+    assert got.schema == spark.createDataFrame([], LEAKAGE_STORE.schema).schema
 
 
 def test_compaction_consolidates_distinct(spark, tmp_path):
@@ -90,9 +92,9 @@ def test_compaction_consolidates_distinct(spark, tmp_path):
     append_leakage_batch(b0, p, 0)
     # the same verdict re-surfacing in a later batch collapses
     append_leakage_batch(_verdicts(spark, [2], []), p, 1)
-    n = compact_leakage_store(spark, p, out)
+    n = compact_store(spark, LEAKAGE_STORE, p, out)
     assert n == 3  # (1,ngram) (2,ngram) (2,semantic)
-    assert _rows(read_leakage_store(spark, out)) == _rows(b0)
+    assert _rows(read_store(spark, LEAKAGE_STORE, out)) == _rows(b0)
     assert not os.path.isdir(os.path.join(out, "batch=0"))
 
 
@@ -117,22 +119,22 @@ def test_erasure_survives_crash_and_replay(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(st.shutil, "rmtree", dying_rmtree)
     try:
-        erase_leakage_keys(spark, p, [7])
+        erase_keys(spark, LEAKAGE_STORE, p, [7])
         raise AssertionError("crash did not propagate")
     except OSError:
         pass
     monkeypatch.setattr(st.shutil, "rmtree", real_rmtree)
     # logically erased despite the partial scrub
     assert 7 not in {
-        r.doc_id for r in read_leakage_store(spark, p).collect()
+        r.doc_id for r in read_store(spark, LEAKAGE_STORE, p).collect()
     }
     # a checkpoint replay lawfully rewrites its directory from source...
     append_leakage_batch(_verdicts(spark, [7, 9], []), p, 1)
     # ...but the read shield keeps the verdict invisible
-    got = {r.doc_id for r in read_leakage_store(spark, p).collect()}
+    got = {r.doc_id for r in read_store(spark, LEAKAGE_STORE, p).collect()}
     assert got == {8, 9}
     # re-run completes the physical rewrite
-    erase_leakage_keys(spark, p, [7])
+    erase_keys(spark, LEAKAGE_STORE, p, [7])
     for b in ("batch=0", "batch=1"):
         raw = {
             r.doc_id
@@ -141,9 +143,9 @@ def test_erasure_survives_crash_and_replay(spark, tmp_path, monkeypatch):
         assert 7 not in raw
     # erasure carries through compaction (publish-then-point shield)
     out = str(tmp_path / "leaks_c")
-    compact_leakage_store(spark, p, out)
+    compact_store(spark, LEAKAGE_STORE, p, out)
     assert 7 not in {
-        r.doc_id for r in read_leakage_store(spark, out).collect()
+        r.doc_id for r in read_store(spark, LEAKAGE_STORE, out).collect()
     }
 
 

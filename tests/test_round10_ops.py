@@ -8,6 +8,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from etl_pipeline_challenge_aladia_spark.streaming.store import read_store
+
 
 def _frame(fn):
     """16x16 uint8 luma frame from a (y, x) -> int formula."""
@@ -172,7 +174,7 @@ def test_tuning_report_replay_is_idempotent_and_tracks_drift(
     import json
 
     from etl_pipeline_challenge_aladia_spark.streaming.tuning import (
-        read_tuning_reports,
+        TUNING_REPORTS,
         tune_bands_and_report,
     )
 
@@ -181,7 +183,7 @@ def test_tuning_report_replay_is_idempotent_and_tracks_drift(
     b1, r1 = tune_bands_and_report(spark, docs, path, batch_id=0)
     b2, r2 = tune_bands_and_report(spark, docs, path, batch_id=0)  # replay
     assert (b1, r1) == (b2, r2)
-    reps = read_tuning_reports(spark, path).collect()
+    reps = read_store(spark, TUNING_REPORTS, path).collect()
     assert len(reps) == 1  # overwrite, not duplicate
     rep = reps[0]
     assert (rep.knob, rep.chosen, rep.achieved_recall_permille) == (
@@ -192,7 +194,7 @@ def test_tuning_report_replay_is_idempotent_and_tracks_drift(
 
     drifted = docs.filter("doc_id != 5")
     tune_bands_and_report(spark, drifted, path, batch_id=1)
-    reps = {r.batch_id: r for r in read_tuning_reports(spark, path).collect()}
+    reps = {r.batch_id: r for r in read_store(spark, TUNING_REPORTS, path).collect()}
     assert len(reps) == 2
     assert reps[0].corpus_fingerprint != reps[1].corpus_fingerprint
     assert reps[0].n_inputs == 6 and reps[1].n_inputs == 5
@@ -205,7 +207,7 @@ def test_tune_nprobe_report_records_bisection_trace(spark, tmp_path):
     import json
 
     from etl_pipeline_challenge_aladia_spark.streaming.tuning import (
-        read_tuning_reports,
+        TUNING_REPORTS,
         tune_nprobe_and_report,
     )
 
@@ -220,7 +222,7 @@ def test_tune_nprobe_report_records_bisection_trace(spark, tmp_path):
     nprobe, recall = tune_nprobe_and_report(
         spark, cands, queries, path, batch_id=0, dim=12, k=3,
     )
-    rep = read_tuning_reports(spark, path).collect()[0]
+    rep = read_store(spark, TUNING_REPORTS, path).collect()[0]
     assert rep.knob == "ivf_nprobe" and rep.chosen == nprobe
     trace = json.loads(rep.curve)
     assert trace and any(p == nprobe and r == recall for p, r in trace)

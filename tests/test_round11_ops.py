@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+from etl_pipeline_challenge_aladia_spark.streaming.store import read_store
+
 
 def test_band_autotune_maintenance_records_the_catalog_decision(
     spark, sf_dir, tmp_path
@@ -17,16 +19,16 @@ def test_band_autotune_maintenance_records_the_catalog_decision(
         band_autotune_sample,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.tuning import (
+        TUNING_REPORTS,
         band_autotune_maintenance,
         corpus_fingerprint,
-        read_tuning_reports,
     )
 
     cat = CATALOG["doc_lsh_band_autotune"].spark(spark, sf_dir).collect()[0]
     path = str(tmp_path / "band_reports")
     bands, recall = band_autotune_maintenance(spark, sf_dir, path)
     assert (bands, recall) == (cat.chosen_bands, cat.recall_permille)
-    rep = read_tuning_reports(spark, path).collect()
+    rep = read_store(spark, TUNING_REPORTS, path).collect()
     assert len(rep) == 1
     r = rep[0]
     fp, n = corpus_fingerprint(band_autotune_sample(spark, sf_dir), "doc_id")
@@ -52,16 +54,16 @@ def test_nprobe_autotune_maintenance_records_the_catalog_decision(
         nprobe_autotune_inputs,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.tuning import (
+        TUNING_REPORTS,
         corpus_fingerprint,
         nprobe_autotune_maintenance,
-        read_tuning_reports,
     )
 
     cat = CATALOG["emb_ivf_nprobe_autotune"].spark(spark, sf_dir).collect()[0]
     path = str(tmp_path / "nprobe_reports")
     nprobe, recall = nprobe_autotune_maintenance(spark, sf_dir, path)
     assert (nprobe, recall) == (cat.chosen_nprobe, cat.recall_permille)
-    rep = read_tuning_reports(spark, path).collect()
+    rep = read_store(spark, TUNING_REPORTS, path).collect()
     assert len(rep) == 1
     r = rep[0]
     cands, _ = nprobe_autotune_inputs(spark, sf_dir)

@@ -181,17 +181,19 @@ def test_tune_bands_picks_cheapest_sufficient_banding(spark):
 
 def test_store_contract_prunes_strictly_earlier(spark, tmp_path):
     """streaming/store.py unit semantics: batch-dir listing honors
-    exclude and strictly_before at LISTING time, compacted/ is read
-    unconditionally, and live_columns/compacted_schema reconcile
-    provenance-column mismatches."""
+    strictly_before at LISTING time, and compacted/ is read
+    unconditionally."""
     import os
 
     from etl_pipeline_challenge_aladia_spark.streaming.store import (
+        StoreSpec,
         append_batch,
         batch_dirs,
         compact_store,
         read_store,
     )
+
+    kv = StoreSpec("k long, v long")
 
     p = str(tmp_path / "store")
     for b in range(4):
@@ -199,18 +201,17 @@ def test_store_contract_prunes_strictly_earlier(spark, tmp_path):
             spark.createDataFrame([(b, b * 10)], "k long, v long"), p, b
         )
     assert len(batch_dirs(p)) == 4
-    assert len(batch_dirs(p, exclude=2)) == 3
     assert [os.path.basename(d) for d in batch_dirs(p, before=2)] == [
         "batch=0", "batch=1"
     ]
-    got = read_store(spark, p, "k long, v long", strictly_before=2)
+    got = read_store(spark, kv, p, strictly_before=2)
     assert sorted(r["k"] for r in got.collect()) == [0, 1]
     # compact, then point a fresh store at it: batch 0 of a fresh
     # checkpoint (strictly_before=0) still sees the whole history
     out = str(tmp_path / "store2")
-    n = compact_store(spark, p, out, "k long, v long")
+    n = compact_store(spark, kv, p, out)
     assert n == 4
-    fresh = read_store(spark, out, "k long, v long", strictly_before=0)
+    fresh = read_store(spark, kv, out, strictly_before=0)
     assert sorted(r["k"] for r in fresh.collect()) == [0, 1, 2, 3]
 
 
@@ -228,9 +229,10 @@ def test_media_ingest_midstream_replay_is_idempotent(spark, tmp_path):
         encode_ppm,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.media import (
+        MEDIA_NEAR_DUP_REPORT,
         make_media_fingerprint_ingest_processor,
-        read_media_near_dup_report,
     )
+    from etl_pipeline_challenge_aladia_spark.streaming.store import read_store
 
     def img_row(mid, shade):
         img = np.full((8, 8, 3), shade, dtype=np.uint8)
@@ -252,8 +254,8 @@ def test_media_ingest_midstream_replay_is_idempotent(spark, tmp_path):
     def report_rows(batch):
         return sorted(
             (r["delta_id"], r["corpus_id"], r["hamming"])
-            for r in read_media_near_dup_report(
-                spark, str(tmp_path / "report")
+            for r in read_store(
+                spark, MEDIA_NEAR_DUP_REPORT, str(tmp_path / "report")
             )
             .filter(F.col("batch_id") == batch)
             .collect()

@@ -17,12 +17,13 @@ from etl_pipeline_challenge_aladia_spark.streaming.tuning import (
     ROUTE_THRESHOLD_KNOB,
     ROUTE_THRESHOLD_MAX,
     ROUTE_THRESHOLD_MIN,
+    TUNING_REPORTS,
     interpolate_route_crossover,
-    read_tuning_reports,
     route_threshold_from_store,
     route_threshold_maintenance,
     tune_route_threshold,
 )
+from etl_pipeline_challenge_aladia_spark.streaming.store import read_store
 
 # The r11 build-host measurements that produced the shipped constant:
 # (n vectors, flat seconds, hier seconds) at the two bench rungs
@@ -95,7 +96,7 @@ def test_maintenance_persists_decision_with_curve_and_fingerprint(
         timer=_fake_timer_from(R11_RUNGS),
     )
     assert threshold == 8192 and 7000 < n_star < 7500
-    rows = read_tuning_reports(spark, p).collect()
+    rows = read_store(spark, TUNING_REPORTS, p).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r.knob == ROUTE_THRESHOLD_KNOB
@@ -112,7 +113,7 @@ def test_maintenance_persists_decision_with_curve_and_fingerprint(
         spark, sf_dir, p, batch_id=0, rung_sizes=(2200, 22000),
         timer=_fake_timer_from(R11_RUNGS),
     )
-    assert read_tuning_reports(spark, p).count() == 1
+    assert read_store(spark, TUNING_REPORTS, p).count() == 1
 
 
 def test_resolver_honors_the_stored_override(spark, sf_dir, tmp_path):
@@ -194,7 +195,7 @@ def test_real_timer_path_runs_end_to_end(spark, sf_dir, tmp_path):
     )
     assert isinstance(threshold, int) and threshold >= 1
     assert n_star >= 0.0 and not math.isnan(n_star)
-    r = read_tuning_reports(spark, p).collect()[0]
+    r = read_store(spark, TUNING_REPORTS, p).collect()[0]
     import json
 
     curve = json.loads(r.curve)

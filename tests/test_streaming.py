@@ -16,7 +16,11 @@ import pytest
 
 from etl_pipeline_challenge_aladia_spark.sinks import read_warehouse
 from etl_pipeline_challenge_aladia_spark.streaming.pipeline import run_cdc_file_stream
-from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
+from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    compact_store,
+    drain_files,
+    read_store,
+)
 
 
 def envelope(op, doc, version, watched=30, duration=61, video="video_1", session="session_1"):
@@ -635,8 +639,8 @@ def test_sigstore_ingest_stream_matches_recompute_and_accumulates(spark, tmp_pat
         minhash_incremental_pairs,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        NEAR_DUP_REPORT,
         SIGSTORE_INGEST,
-        read_near_dup_report,
     )
 
     in_dir = str(tmp_path / "in")
@@ -662,14 +666,14 @@ def test_sigstore_ingest_stream_matches_recompute_and_accumulates(spark, tmp_pat
 
     write_batch("b1.jsonl", [{"doc_id": i, "text": t} for i, t in b1])
     drain_files(spark, SIGSTORE_INGEST, in_dir, ckpt, store, report)
-    assert read_near_dup_report(spark, report).count() == 0  # empty store
+    assert read_store(spark, NEAR_DUP_REPORT, report).count() == 0  # empty store
 
     write_batch("b2.jsonl", [{"doc_id": i, "text": t} for i, t in b2])
     drain_files(spark, SIGSTORE_INGEST, in_dir, ckpt, store, report)
 
     got = {
         tuple(r)
-        for r in read_near_dup_report(spark, report).collect()
+        for r in read_store(spark, NEAR_DUP_REPORT, report).collect()
     }
     # bit-for-bit the raw-text recompute operator screening b2 vs b1
     want = {
@@ -689,7 +693,7 @@ def test_sigstore_ingest_stream_matches_recompute_and_accumulates(spark, tmp_pat
     # drained rerun: nothing reprocesses
     drain_files(spark, SIGSTORE_INGEST, in_dir, ckpt, store, report)
     assert {
-        tuple(r) for r in read_near_dup_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, NEAR_DUP_REPORT, report).collect()
     } == got
 
 
@@ -1420,9 +1424,9 @@ def test_embedding_ingest_stream_routes_onto_frozen_index(spark, tmp_path):
         kmeans_with_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        EMBEDDING_INDEX,
         EMBEDDING_INGEST,
-        read_index,
-        read_ingest_stats,
+        INGEST_STATS,
     )
 
     def vecs(lo, hi):
@@ -1447,7 +1451,7 @@ def test_embedding_ingest_stream_routes_onto_frozen_index(spark, tmp_path):
     vecs(1150, 1250).coalesce(1).write.mode("append").parquet(in_dir)
     drain_files(spark, EMBEDDING_INGEST, in_dir, ckpt, cents, idx, stats)
 
-    index = read_index(spark, idx)
+    index = read_store(spark, EMBEDDING_INDEX, idx)
     assert index.count() == 250
     # routing parity with the batch operator, for every streamed vector
     want = {
@@ -1459,7 +1463,7 @@ def test_embedding_ingest_stream_routes_onto_frozen_index(spark, tmp_path):
     got = {(r["vec_id"], r["cell"]) for r in index.collect()}
     assert got == want
     # stats: per-batch per-cell counts cover everything exactly once
-    st = read_ingest_stats(spark, stats)
+    st = read_store(spark, INGEST_STATS, stats)
     assert st.agg(F.sum("n_vecs")).first()[0] == 250
     assert st.select("batch_id").distinct().count() == 2
 
@@ -1470,7 +1474,7 @@ def test_embedding_ingest_stream_routes_onto_frozen_index(spark, tmp_path):
 
     # drained rerun: nothing reprocesses
     drain_files(spark, EMBEDDING_INGEST, in_dir, ckpt, cents, idx, stats)
-    assert read_index(spark, idx).count() == 250
+    assert read_store(spark, EMBEDDING_INDEX, idx).count() == 250
 
 
 def test_cell_partitioned_index_probe_scans_only_probed_cells(spark, tmp_path):
@@ -1485,8 +1489,8 @@ def test_cell_partitioned_index_probe_scans_only_probed_cells(spark, tmp_path):
         kmeans_with_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        EMBEDDING_INDEX,
         EMBEDDING_INGEST,
-        read_index,
     )
 
     def vecs(lo, hi):
@@ -1530,8 +1534,8 @@ def test_cell_partitioned_index_probe_scans_only_probed_cells(spark, tmp_path):
                 return int(node.metrics().apply("numFiles").value())
         raise AssertionError("no scan node found")
 
-    probe = read_index(spark, idx).filter(F.col("cell") == 1)
-    full = read_index(spark, idx)
+    probe = read_store(spark, EMBEDDING_INDEX, idx).filter(F.col("cell") == 1)
+    full = read_store(spark, EMBEDDING_INDEX, idx)
     assert scanned_files(probe) == disk_files(1)
     assert scanned_files(full) == disk_files()
 
@@ -1553,9 +1557,9 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(
         semantic_dedup_screen,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        DEDUP_REPORT,
+        EMBEDDING_INDEX,
         SEMANTIC_DEDUP_INGEST,
-        read_dedup_report,
-        read_index,
     )
 
     def vecs(rows):
@@ -1601,15 +1605,15 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(
     # batch 0: the corpus itself seeds the index (empty report)
     corpus.coalesce(1).write.mode("append").parquet(in_dir)
     drain()
-    assert read_dedup_report(spark, rep).count() == 0
-    idx0 = read_index(spark, idx).select("vec_id", "embedding", "cell")
+    assert read_store(spark, DEDUP_REPORT, rep).count() == 0
+    idx0 = read_store(spark, EMBEDDING_INDEX, idx).select("vec_id", "embedding", "cell")
     idx0_rows = rows(idx0.select("vec_id", "cell"))
 
     # batch 1: delta1 — report equals the batch screen AND the one-shot
     # incremental operator trained on the same corpus with the same k
     delta1.coalesce(1).write.mode("append").parquet(in_dir)
     drain()
-    got1 = rows(read_dedup_report(spark, rep).filter(F.col("vec_id") < 200))
+    got1 = rows(read_store(spark, DEDUP_REPORT, rep).filter(F.col("vec_id") < 200))
     want1 = rows(semantic_dedup_screen(idx0, delta1, cents))
     assert got1 == want1 and len(got1) == 5
     assert got1 == rows(semantic_dedup_incremental(corpus, delta1, k=K))
@@ -1622,8 +1626,10 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(
     # accumulation contract
     delta2.coalesce(1).write.mode("append").parquet(in_dir)
     drain()
-    got2 = rows(read_dedup_report(spark, rep).filter(F.col("vec_id") >= 200))
-    accumulated = read_index(spark, idx).select("vec_id", "embedding", "cell")
+    got2 = rows(read_store(spark, DEDUP_REPORT, rep).filter(F.col("vec_id") >= 200))
+    accumulated = read_store(spark, EMBEDDING_INDEX, idx).select(
+        "vec_id", "embedding", "cell"
+    )
     # the screen the stream ran saw corpus+delta1 (not delta2 itself)
     want2 = rows(
         semantic_dedup_screen(
@@ -1634,11 +1640,14 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(
     assert all(105 <= r[1] <= 109 for r in got2)
 
     # drained rerun: reports and index unchanged
-    before = rows(read_dedup_report(spark, rep))
+    before = rows(read_store(spark, DEDUP_REPORT, rep))
     drain()
-    assert rows(read_dedup_report(spark, rep)) == before
-    assert rows(read_index(spark, idx).select("vec_id", "cell")) >= idx0_rows
-    assert read_index(spark, idx).count() == 25
+    assert rows(read_store(spark, DEDUP_REPORT, rep)) == before
+    assert (
+        rows(read_store(spark, EMBEDDING_INDEX, idx).select("vec_id", "cell"))
+        >= idx0_rows
+    )
+    assert read_store(spark, EMBEDDING_INDEX, idx).count() == 25
 
     # an EMPTY centroid table routes nothing: both implementations screen
     # to an empty frame with the normal output schema
@@ -1670,11 +1679,11 @@ def test_drift_monitored_ingest_retrains_and_swaps_atomically(spark, tmp_path):
         kmeans_with_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        EMBEDDING_INDEX,
         MONITORED_INGEST,
+        MONITOR_STATS,
         current_quantizer_version,
         load_quantizer,
-        read_index,
-        read_monitor_stats,
         train_and_save_quantizer,
     )
 
@@ -1720,7 +1729,7 @@ def test_drift_monitored_ingest_retrains_and_swaps_atomically(spark, tmp_path):
     # train on exactly the accumulated index
     new_cents, new_baseline, ver = load_quantizer(spark, store)
     assert ver == 2
-    data = read_index(spark, idx).select("vec_id", "embedding")
+    data = read_store(spark, EMBEDDING_INDEX, idx).select("vec_id", "embedding")
     _, want_cents = kmeans_with_centroids(data, k=2)
     got = {(r["cluster"], tuple(r["c"])) for r in new_cents.collect()}
     want = {(r["cluster"], tuple(r["c"])) for r in want_cents.collect()}
@@ -1737,7 +1746,9 @@ def test_drift_monitored_ingest_retrains_and_swaps_atomically(spark, tmp_path):
 
     before_index = {
         tuple(r)
-        for r in read_index(spark, idx).select("vec_id", "cell").collect()
+        for r in read_store(spark, EMBEDDING_INDEX, idx)
+        .select("vec_id", "cell")
+        .collect()
     }
     proc = make_monitored_ingest_processor(
         store, idx, stats, drift_threshold_permille=100
@@ -1746,9 +1757,11 @@ def test_drift_monitored_ingest_retrains_and_swaps_atomically(spark, tmp_path):
     assert current_quantizer_version(store) == 2  # no spurious gen 3
     assert {
         tuple(r)
-        for r in read_index(spark, idx).select("vec_id", "cell").collect()
+        for r in read_store(spark, EMBEDDING_INDEX, idx)
+        .select("vec_id", "cell")
+        .collect()
     } == before_index
-    st2 = read_monitor_stats(spark, stats)
+    st2 = read_store(spark, MONITOR_STATS, stats)
     assert st2.filter(
         (F.col("batch_id") == 1) & (F.col("quantizer_version") != 1)
     ).count() == 0
@@ -1763,9 +1776,9 @@ def test_drift_monitored_ingest_retrains_and_swaps_atomically(spark, tmp_path):
     vecs(2000, 2020, 0, 10).coalesce(1).write.mode("append").parquet(in_dir)
     drain()
     assert current_quantizer_version(store) == 2
-    st = read_monitor_stats(spark, stats)
+    st = read_store(spark, MONITOR_STATS, stats)
     assert st.filter(F.col("quantizer_version") == 2).count() > 0
-    probe_index = read_index(spark, idx).filter(F.col("vec_id") >= 2000)
+    probe_index = read_store(spark, EMBEDDING_INDEX, idx).filter(F.col("vec_id") >= 2000)
     want_route = {
         (r["id"], r["cluster"])
         for r in assign_to_centroids(vecs(2000, 2020, 0, 10), new_cents).collect()
@@ -1785,9 +1798,9 @@ def test_rebuild_index_consolidates_onto_current_generation(spark, tmp_path):
         assign_to_centroids,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
+        EMBEDDING_INDEX,
         MONITORED_INGEST,
         load_quantizer,
-        read_index,
         rebuild_index,
         train_and_save_quantizer,
     )
@@ -1827,7 +1840,7 @@ def test_rebuild_index_consolidates_onto_current_generation(spark, tmp_path):
     out = str(tmp_path / "index_v2")
     n = rebuild_index(spark, idx, store, out)
     assert n == 300
-    rebuilt = read_index(spark, out)
+    rebuilt = read_store(spark, EMBEDDING_INDEX, out)
     assert rebuilt.count() == 300
     # the consolidated layout lives in the reserved compacted/ dir (one
     # subdirectory per cell), NEVER a batch=<id> one: a continuing
@@ -1837,9 +1850,9 @@ def test_rebuild_index_consolidates_onto_current_generation(spark, tmp_path):
     assert [e for e in os.listdir(out) if e.startswith("batch=")] == []
     assert os.path.isdir(os.path.join(out, "compacted"))
     # a fresh-checkpoint batch 0 (strictly_before=0) still sees all of it
-    assert read_index(spark, out, strictly_before=0).count() == 300
+    assert read_store(spark, EMBEDDING_INDEX, out, strictly_before=0).count() == 300
     # assignments equal the batch operator against generation 2
-    all_vecs = read_index(spark, idx).select("vec_id", "embedding")
+    all_vecs = read_store(spark, EMBEDDING_INDEX, idx).select("vec_id", "embedding")
     want = {
         (r["id"], r["cluster"])
         for r in assign_to_centroids(all_vecs, new_cents).collect()
@@ -2040,13 +2053,11 @@ def test_text_drift_loop_rebaselines_on_distribution_shift(spark, tmp_path):
     whose baseline equals a from-scratch derivation over the accumulated
     ingest. A drained replay changes nothing."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        TEXT_DRIFT_DOCS,
         TEXT_DRIFT_INGEST,
         _text_vocab_counts,
         load_text_baseline,
         train_and_save_text_baseline,
-    )
-    from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
-        read_batch_store,
     )
 
     in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
@@ -2088,9 +2099,7 @@ def test_text_drift_loop_rebaselines_on_distribution_shift(spark, tmp_path):
 
     # the published generation equals a from-scratch derivation over the
     # accumulated ingest store
-    docs = read_batch_store(
-        spark, ingest, "doc_id long, source string, text string"
-    )
+    docs = read_store(spark, TEXT_DRIFT_DOCS, ingest)
     want = {
         (r["term"], r["n_occ"])
         for r in _text_vocab_counts(docs, 5).collect()
@@ -2223,6 +2232,43 @@ def test_streaming_curation_one_shot_run_still_screens_across_files(spark, tmp_p
     assert got == {1}
 
 
+def test_streaming_curation_drops_same_batch_near_duplicates(spark, tmp_path):
+    """Two identical documents in ONE micro-batch: the store screen
+    cannot pair them (neither is stored yet), so the batch pipeline's
+    own legs run over the batch — each near-dup component keeps its
+    minimum doc_id, and the other document is reported against it and
+    dropped before it spends budget or enters the signature store."""
+    from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        BUDGET_DOC_STREAM_SCHEMA,
+        NEAR_DUP_REPORT,
+        SIGNATURE_SHINGLES,
+        make_streaming_curation_processor,
+    )
+
+    rich = " ".join(f"tok{i}" for i in range(40))
+    admitted, sigs, report = (
+        str(tmp_path / d) for d in ("admitted", "sigs", "report")
+    )
+    proc = make_streaming_curation_processor(
+        admitted, str(tmp_path / "bstate"), sigs, report, budget=1000,
+        quality_min=0.5,
+    )
+    proc(
+        spark.createDataFrame(
+            [(2, "s", rich), (1, "s", rich)], BUDGET_DOC_STREAM_SCHEMA
+        ),
+        0,
+    )
+    assert [r["doc_id"] for r in spark.read.parquet(admitted).collect()] == [1]
+    assert [
+        tuple(r) for r in read_store(spark, NEAR_DUP_REPORT, report).collect()
+    ] == [(2, 1, 1.0)]
+    stored = read_store(
+        spark, SIGNATURE_SHINGLES, os.path.join(sigs, "shingles")
+    )
+    assert [r["id"] for r in stored.collect()] == [1]
+
+
 def test_text_drift_replay_pins_original_generation(spark, tmp_path):
     """A checkpoint-REPLAYED batch must re-count against the generation
     it originally used, even after a newer baseline was published —
@@ -2322,6 +2368,24 @@ def test_embedding_monitored_ingest_replay_pins_original_generation(spark, tmp_p
     assert replayed == first  # pinned to generation 1
 
 
+def _compact_signature_store(spark, store, out):
+    """Compact both halves of a signature store (band index, shingle
+    sets) to ``out``; returns the stored document count."""
+    from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        SIGNATURE_BANDS,
+        SIGNATURE_SHINGLES,
+    )
+
+    compact_store(
+        spark, SIGNATURE_BANDS, os.path.join(store, "bands"),
+        os.path.join(out, "bands"),
+    )
+    return compact_store(
+        spark, SIGNATURE_SHINGLES, os.path.join(store, "shingles"),
+        os.path.join(out, "shingles"),
+    )
+
+
 @pytest.mark.slow  # measured heavy in the full --durations run (see pytest.ini)
 def test_compact_signature_store_preserves_screening(spark, tmp_path):
     """Compacting a multi-batch signature store into one batch=0 layout
@@ -2329,9 +2393,8 @@ def test_compact_signature_store_preserves_screening(spark, tmp_path):
     against the compacted store yields the identical near-dup report,
     and the stored document count is unchanged."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        compact_signature_store,
-        make_sigstore_ingest_processor,
         _screen_against_store,
+        make_sigstore_ingest_processor,
     )
 
     store = str(tmp_path / "store")
@@ -2349,7 +2412,7 @@ def test_compact_signature_store_preserves_screening(spark, tmp_path):
         ),
         1,
     )
-    n = compact_signature_store(spark, store, out)
+    n = _compact_signature_store(spark, store, out)
     assert n == 2
     delta = spark.createDataFrame(
         [(100, rich + " extra")], "doc_id long, text string"
@@ -2374,15 +2437,13 @@ def test_compacted_store_survives_fresh_checkpoint_batch0(spark, tmp_path):
     checkpoint whose first micro-batch id is 0. Because the
     consolidated history lives in the reserved ``compacted/`` directory
     (not ``batch=0``), that first batch still screens against the full
-    history (exclude_batch=0 removes nothing), its append cannot
+    history (strictly_before=0 prunes live batches only), its append cannot
     overwrite the history, and a replay of it self-excludes only its
     own directory (no self-match drop)."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
-        SHINGLE_STORE_SCHEMA,
-        _read_store,
-        compact_signature_store,
+        NEAR_DUP_REPORT,
+        SIGNATURE_SHINGLES,
         make_sigstore_ingest_processor,
-        read_near_dup_report,
     )
 
     store = str(tmp_path / "store")
@@ -2397,7 +2458,7 @@ def test_compacted_store_survives_fresh_checkpoint_batch0(spark, tmp_path):
         ),
         1,
     )
-    assert compact_signature_store(spark, store, out) == 2
+    assert _compact_signature_store(spark, store, out) == 2
 
     report2 = str(tmp_path / "report2")
     delta = spark.createDataFrame(
@@ -2407,22 +2468,22 @@ def test_compacted_store_survives_fresh_checkpoint_batch0(spark, tmp_path):
     proc2(delta, 0)  # fresh checkpoint: batch id restarts at 0
     hits = {
         (r["delta_id"], r["corpus_id"])
-        for r in read_near_dup_report(spark, report2).collect()
+        for r in read_store(spark, NEAR_DUP_REPORT, report2).collect()
     }
     assert hits == {(100, 1)}  # compacted history screened, not excluded
-    stored = _read_store(
-        spark, os.path.join(out, "shingles"), SHINGLE_STORE_SCHEMA
+    stored = read_store(
+        spark, SIGNATURE_SHINGLES, os.path.join(out, "shingles")
     )
     assert {r["id"] for r in stored.collect()} == {1, 2, 100}  # nothing clobbered
     proc2(delta, 0)  # replay: own batch=0 excluded, compacted/ still read
     hits2 = {
         (r["delta_id"], r["corpus_id"])
-        for r in read_near_dup_report(spark, report2).collect()
+        for r in read_store(spark, NEAR_DUP_REPORT, report2).collect()
     }
     assert hits2 == hits  # no (100, 100) self-match, history report intact
     # and re-compaction composes: compacted layer + new batch fold together
     out2 = str(tmp_path / "compacted2")
-    assert compact_signature_store(spark, out, out2) == 3
+    assert _compact_signature_store(spark, out, out2) == 3
 
 
 def test_text_drift_report_integer_exact_shares(spark):
@@ -2462,10 +2523,10 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
         segment_fingerprint_store,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
+        SEGMENT_REPORT,
+        SEGMENT_STORE,
         SEGMENT_STORE_INGEST,
-        compact_segment_store,
         make_segment_store_ingest_processor,
-        read_segment_dedup_report,
     )
 
     in_dir = str(tmp_path / "in")
@@ -2495,7 +2556,7 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
 
     write_batch("b1.jsonl", b1)
     drain_files(spark, SEGMENT_STORE_INGEST, in_dir, ckpt, store, report)
-    r0 = read_segment_dedup_report(spark, report).collect()
+    r0 = read_store(spark, SEGMENT_REPORT, report).collect()
     assert {r["source"]: r["n_removed_segments"] for r in r0} == {
         "s1": 0,
         "s2": 0,
@@ -2505,7 +2566,7 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
     drain_files(spark, SEGMENT_STORE_INGEST, in_dir, ckpt, store, report)
     got = {
         tuple(r)
-        for r in read_segment_dedup_report(spark, report)
+        for r in read_store(spark, SEGMENT_REPORT, report)
         .filter("batch_id = 1")
         .drop("batch_id")
         .collect()
@@ -2532,23 +2593,23 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
     assert by_src["s2"][3] == 0
 
     # drained rerun: no new files -> nothing changes
-    before = {tuple(r) for r in read_segment_dedup_report(spark, report).collect()}
+    before = {tuple(r) for r in read_store(spark, SEGMENT_REPORT, report).collect()}
     drain_files(spark, SEGMENT_STORE_INGEST, in_dir, ckpt, store, report)
-    after = {tuple(r) for r in read_segment_dedup_report(spark, report).collect()}
+    after = {tuple(r) for r in read_store(spark, SEGMENT_REPORT, report).collect()}
     assert after == before
 
     # direct micro-batch replay (crash-after-write): same batch_id,
     # same input -> identical report and store
     make_segment_store_ingest_processor(store, report)(b2_df, 1)
     replayed = {
-        tuple(r) for r in read_segment_dedup_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, SEGMENT_REPORT, report).collect()
     }
     assert replayed == before
 
     # compaction: fresh checkpoint restarts at batch 0; the compacted
     # history must still screen it (batch-0 collision safety)
     store2 = str(tmp_path / "store2")
-    n = compact_segment_store(spark, store, store2)
+    n = compact_store(spark, SEGMENT_STORE, store, store2)
     assert n == spark.read.parquet(store).select("seg").distinct().count()
     assert n == 5  # seg_a stored by both batches collapses to one row
     ckpt2 = str(tmp_path / "ckpt2")
@@ -2559,7 +2620,7 @@ def test_segment_store_ingest_matches_recompute_replay_and_compaction(
         f.write(json.dumps(
             {"doc_id": 20, "source": "s1", "text": seg_z}) + "\n")
     drain_files(spark, SEGMENT_STORE_INGEST, in2, ckpt2, store2, report2)
-    r3 = read_segment_dedup_report(spark, report2).collect()
+    r3 = read_store(spark, SEGMENT_REPORT, report2).collect()
     assert len(r3) == 1 and r3[0]["n_removed_segments"] == 1  # seg_z stored
 
 
@@ -2575,10 +2636,10 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     answers with the full history inside its hard depth*width bound."""
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
         COUNTMIN_INGEST,
-        compact_countmin_store,
+        COUNTMIN_REPORT,
+        COUNTMIN_STORE,
         countmin_estimate_from_store,
         make_countmin_ingest_processor,
-        read_countmin_report,
     )
 
     in_dir = str(tmp_path / "in")
@@ -2601,7 +2662,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     drain_files(spark, COUNTMIN_INGEST, in_dir, ckpt, store, report)
     r0 = {
         r["tok"]: (r["batch_n"], r["hist_estimate"])
-        for r in read_countmin_report(spark, report).collect()
+        for r in read_store(spark, COUNTMIN_REPORT, report).collect()
     }
     assert r0 == {"alpha": (3, 0), "beta": (1, 0), "gamma": (1, 0)}
 
@@ -2611,7 +2672,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     drain_files(spark, COUNTMIN_INGEST, in_dir, ckpt, store, report)
     r1 = {
         r["tok"]: (r["batch_n"], r["hist_estimate"])
-        for r in read_countmin_report(spark, report)
+        for r in read_store(spark, COUNTMIN_REPORT, report)
         .filter("batch_id = 1")
         .collect()
     }
@@ -2630,11 +2691,11 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
 
     # drained rerun: nothing changes
     before = {
-        tuple(r) for r in read_countmin_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, COUNTMIN_REPORT, report).collect()
     }
     drain_files(spark, COUNTMIN_INGEST, in_dir, ckpt, store, report)
     assert {
-        tuple(r) for r in read_countmin_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, COUNTMIN_REPORT, report).collect()
     } == before
 
     # direct micro-batch replay (crash-after-write): idempotent
@@ -2643,7 +2704,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     )
     make_countmin_ingest_processor(store, report)(b2_df, 1)
     assert {
-        tuple(r) for r in read_countmin_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, COUNTMIN_REPORT, report).collect()
     } == before
     est2 = {
         r["tok"]: r["cm_estimate"]
@@ -2654,7 +2715,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     # compaction: hard depth*width bound, full history preserved,
     # fresh-checkpoint batch-0 safety
     store2 = str(tmp_path / "store2")
-    n_cells = compact_countmin_store(spark, store, store2)
+    n_cells = compact_store(spark, COUNTMIN_STORE, store, store2)
     assert n_cells <= 4 * 256
     est3 = {
         r["tok"]: r["cm_estimate"]
@@ -2670,7 +2731,7 @@ def test_countmin_ingest_reports_history_replay_and_compaction(
     drain_files(spark, COUNTMIN_INGEST, in2, ckpt2, store2, report2)
     r3 = {
         r["tok"]: (r["batch_n"], r["hist_estimate"])
-        for r in read_countmin_report(spark, report2).collect()
+        for r in read_store(spark, COUNTMIN_REPORT, report2).collect()
     }
     assert r3 == {"alpha": (1, 4), "omega": (1, 0)}
 
@@ -2695,9 +2756,9 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
     )
     from etl_pipeline_challenge_aladia_spark.streaming.docs import (
         CDC_CHUNK_INGEST,
-        compact_cdc_chunk_store,
+        CDC_CHUNK_REPORT,
+        CDC_CHUNK_STORE,
         make_cdc_chunk_ingest_processor,
-        read_cdc_chunk_dedup_report,
     )
 
     in_dir = str(tmp_path / "in")
@@ -2725,7 +2786,7 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
     ]
     write_batch("b1.jsonl", b1)
     drain_files(spark, CDC_CHUNK_INGEST, in_dir, ckpt, store, report)
-    r0 = read_cdc_chunk_dedup_report(spark, report).collect()
+    r0 = read_store(spark, CDC_CHUNK_REPORT, report).collect()
     assert {r["source"]: r["n_removed_chunks"] for r in r0} == {
         "s1": 0,
         "s2": 0,
@@ -2735,7 +2796,7 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
     drain_files(spark, CDC_CHUNK_INGEST, in_dir, ckpt, store, report)
     got = {
         tuple(r)
-        for r in read_cdc_chunk_dedup_report(spark, report)
+        for r in read_store(spark, CDC_CHUNK_REPORT, report)
         .filter("batch_id = 1")
         .drop("batch_id")
         .collect()
@@ -2771,25 +2832,25 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
 
     # drained rerun: no new files -> nothing changes
     before = {
-        tuple(r) for r in read_cdc_chunk_dedup_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, CDC_CHUNK_REPORT, report).collect()
     }
     drain_files(spark, CDC_CHUNK_INGEST, in_dir, ckpt, store, report)
     after = {
-        tuple(r) for r in read_cdc_chunk_dedup_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, CDC_CHUNK_REPORT, report).collect()
     }
     assert after == before
 
     # direct micro-batch replay (crash-after-write)
     make_cdc_chunk_ingest_processor(store, report)(b2_df, 1)
     replayed = {
-        tuple(r) for r in read_cdc_chunk_dedup_report(spark, report).collect()
+        tuple(r) for r in read_store(spark, CDC_CHUNK_REPORT, report).collect()
     }
     assert replayed == before
 
     # compaction + fresh checkpoint: batch 0 still screened against the
     # consolidated history (batch-0 collision safety)
     store2 = str(tmp_path / "store2")
-    n = compact_cdc_chunk_store(spark, store, store2)
+    n = compact_store(spark, CDC_CHUNK_STORE, store, store2)
     assert n == spark.read.parquet(store).select("chunk").distinct().count()
     ckpt2 = str(tmp_path / "ckpt2")
     report2 = str(tmp_path / "report2")
@@ -2799,6 +2860,6 @@ def test_cdc_chunk_ingest_insertion_shift_replay_and_compaction(
         f.write(json.dumps(
             {"doc_id": 20, "source": "s1", "text": big}) + "\n")
     drain_files(spark, CDC_CHUNK_INGEST, in2, ckpt2, store2, report2)
-    r3 = read_cdc_chunk_dedup_report(spark, report2).collect()
+    r3 = read_store(spark, CDC_CHUNK_REPORT, report2).collect()
     assert len(r3) == 1 and r3[0]["n_removed_chunks"] > 0
     assert r3[0]["tokens_kept"] == 0  # exact re-ingest: everything stored

@@ -10,12 +10,16 @@ import os
 from pyspark.sql import functions as F  # noqa: F401
 
 from etl_pipeline_challenge_aladia_spark.streaming.anomaly import (
+    DAY_STORE,
     MAD_MONITOR_INGEST,
+    MAD_REPORT,
     make_mad_monitor_processor,
-    read_day_store,
-    read_mad_report,
 )
-from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
+from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    compact_store,
+    drain_files,
+    read_store,
+)
 
 
 def _events(spark, rows):
@@ -47,7 +51,7 @@ def test_monitor_flags_spike_and_accumulates_same_day(spark, tmp_path):
     proc = make_mad_monitor_processor(store, report, z_threshold=3.5)
 
     proc(_events(spark, _quiet_rows()), 0)
-    assert read_mad_report(spark, report).count() == 0
+    assert read_store(spark, MAD_REPORT, report).count() == 0
 
     spike_day = dt.datetime(2024, 1, 9, 12)
     batch1 = [
@@ -57,7 +61,7 @@ def test_monitor_flags_spike_and_accumulates_same_day(spark, tmp_path):
     proc(_events(spark, batch1), 1)
     rows = {
         r["day"]: r
-        for r in read_mad_report(spark, report).filter("batch_id = 1").collect()
+        for r in read_store(spark, MAD_REPORT, report).filter("batch_id = 1").collect()
     }
     assert list(rows) == ["2024-01-09"]
     got = rows["2024-01-09"]
@@ -89,9 +93,9 @@ def test_monitor_replay_is_idempotent(spark, tmp_path):
 
     def snapshot():
         s = sorted(
-            map(tuple, read_day_store(spark, store).collect())
+            map(tuple, read_store(spark, DAY_STORE, store).collect())
         )
-        r = sorted(map(tuple, read_mad_report(spark, report).collect()))
+        r = sorted(map(tuple, read_store(spark, MAD_REPORT, report).collect()))
         return s, r
 
     before = snapshot()
@@ -130,7 +134,7 @@ def test_file_stream_end_to_end(spark, tmp_path):
     report = str(tmp_path / "report")
     ckpt = str(tmp_path / "ckpt")
     drain_files(spark, MAD_MONITOR_INGEST, str(in_dir), ckpt, store, report)
-    rep = read_mad_report(spark, report).collect()
+    rep = read_store(spark, MAD_REPORT, report).collect()
     assert {r["day"] for r in rep} == {"2024-01-09"}
     assert os.path.isdir(os.path.join(store, "batch=0"))
     assert os.path.isdir(os.path.join(store, "batch=1"))
@@ -141,7 +145,6 @@ def test_compact_day_store_sums_deltas_and_preserves_report(spark, tmp_path):
     and a monitor pointed at the compacted store produces the same
     anomaly report as against the raw store."""
     from etl_pipeline_challenge_aladia_spark.streaming.anomaly import (
-        compact_day_store,
         make_mad_monitor_processor,
     )
 
@@ -160,9 +163,9 @@ def test_compact_day_store_sums_deltas_and_preserves_report(spark, tmp_path):
         ),
         1,
     )
-    raw = read_day_store(spark, store)
-    n = compact_day_store(spark, store, str(tmp_path / "compacted"))
-    comp = read_day_store(spark, str(tmp_path / "compacted"))
+    raw = read_store(spark, DAY_STORE, store)
+    n = compact_store(spark, DAY_STORE, store, str(tmp_path / "compacted"))
+    comp = read_store(spark, DAY_STORE, str(tmp_path / "compacted"))
     assert n == comp.count() == 9  # 8 quiet days + spike day
     # day 1 collapsed: 10.0 + 5.0 -> one 15e6 row
     d1 = comp.filter("day = DATE'2024-01-01'").collect()
@@ -183,11 +186,7 @@ def test_compact_day_store_sums_deltas_and_preserves_report(spark, tmp_path):
         ),
         2,
     )
-    from etl_pipeline_challenge_aladia_spark.streaming.anomaly import (
-        read_mad_report,
-    )
-
-    rep = read_mad_report(spark, str(tmp_path / "report2")).collect()
+    rep = read_store(spark, MAD_REPORT, str(tmp_path / "report2")).collect()
     assert {r["day"] for r in rep} == {"2024-01-09"}  # spike still flagged
 
 
@@ -201,17 +200,14 @@ def test_compacted_store_survives_fresh_checkpoint_batch_zero(
     strictly-earlier predicate) and (b) never be overwritten by batch
     0's own ``batch=0`` directory write."""
     from etl_pipeline_challenge_aladia_spark.streaming.anomaly import (
-        compact_day_store,
         make_mad_monitor_processor,
-        read_day_store,
-        read_mad_report,
     )
 
     store = str(tmp_path / "store")
     proc = make_mad_monitor_processor(store, str(tmp_path / "rep"), 3.5)
     proc(_events(spark, _quiet_rows()), 0)
     compacted = str(tmp_path / "compacted")
-    n = compact_day_store(spark, store, compacted)
+    n = compact_store(spark, DAY_STORE, store, compacted)
     assert n == 8
     # fresh-checkpoint restart: batch ids begin again at 0
     proc0 = make_mad_monitor_processor(
@@ -225,9 +221,9 @@ def test_compacted_store_survives_fresh_checkpoint_batch_zero(
     )
     # (a) history was visible: the spike is judged against all 8 quiet
     # days, so it breaches the threshold exactly as in the raw-store run
-    rep = read_mad_report(spark, str(tmp_path / "rep0")).collect()
+    rep = read_store(spark, MAD_REPORT, str(tmp_path / "rep0")).collect()
     assert {r["day"] for r in rep} == {"2024-01-09"}
     # (b) nothing was destroyed: 8 compacted days + batch 0's spike row
-    got = read_day_store(spark, compacted)
+    got = read_store(spark, DAY_STORE, compacted)
     assert got.count() == 9
     assert got.filter("batch_id IS NULL").count() == 8

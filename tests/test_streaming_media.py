@@ -14,7 +14,12 @@ from etl_pipeline_challenge_aladia_spark.operators.codecs import (
     encode_ppm,
     encode_wav_pcm16,
 )
-from etl_pipeline_challenge_aladia_spark.streaming.store import drain_files
+from etl_pipeline_challenge_aladia_spark.streaming.store import (
+    compact_store,
+    drain_files,
+    erase_keys,
+    read_store,
+)
 
 
 def _img(seed, blot=False):
@@ -42,12 +47,12 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
         image_ahash,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.media import (
+        FINGERPRINT_MODALITIES,
         MEDIA_FINGERPRINT_INGEST,
+        MEDIA_NEAR_DUP_REPORT,
+        MEDIA_SIG_STORE,
         _delta_media_frame,
-        compact_media_sig_store,
         make_media_fingerprint_ingest_processor,
-        read_media_near_dup_report,
-        read_media_sig_store,
     )
 
     in_dir = str(tmp_path / "in")
@@ -90,12 +95,12 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
     ]
     write_batch("b1.jsonl", b1)
     drain_files(spark, MEDIA_FINGERPRINT_INGEST, in_dir, ckpt, store, report)
-    assert read_media_near_dup_report(spark, report).count() == 0
+    assert read_store(spark, MEDIA_NEAR_DUP_REPORT, report).count() == 0
 
     write_batch("b2.jsonl", b2)
     drain_files(spark, MEDIA_FINGERPRINT_INGEST, in_dir, ckpt, store, report)
     rep_rows = (
-        read_media_near_dup_report(spark, report)
+        read_store(spark, MEDIA_NEAR_DUP_REPORT, report)
         .filter("batch_id = 1")
         .collect()
     )
@@ -125,9 +130,14 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
 
     # drained rerun + direct micro-batch replay: bit-identical state
     def snapshot():
-        s = sorted(map(tuple, read_media_sig_store(spark, store).collect()))
+        s = [
+            sorted(map(tuple, read_store(
+                spark, MEDIA_SIG_STORE, os.path.join(store, m)
+            ).collect()))
+            for m in FINGERPRINT_MODALITIES
+        ]
         r = sorted(
-            map(tuple, read_media_near_dup_report(spark, report).collect())
+            map(tuple, read_store(spark, MEDIA_NEAR_DUP_REPORT, report).collect())
         )
         return s, r
 
@@ -144,7 +154,12 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
     # compaction -> fresh checkpoint: batch 0 still screened against the
     # consolidated fingerprints (batch-0 collision safety)
     store2 = str(tmp_path / "store2")
-    n = compact_media_sig_store(spark, store, store2)
+    n = sum(
+        compact_store(
+            spark, MEDIA_SIG_STORE, os.path.join(store, m), os.path.join(store2, m)
+        )
+        for m in FINGERPRINT_MODALITIES
+    )
     assert n == 6  # images 1, 2, 10, 11 + audio 3, 12
     in2 = str(tmp_path / "in2")
     os.makedirs(in2)
@@ -156,8 +171,8 @@ def test_media_fingerprint_ingest_screen_replay_compaction(spark, tmp_path):
     )
     r3 = {
         (r["delta_id"], r["corpus_id"]): r["hamming"]
-        for r in read_media_near_dup_report(
-            spark, str(tmp_path / "report2")
+        for r in read_store(
+            spark, MEDIA_NEAR_DUP_REPORT, str(tmp_path / "report2")
         ).collect()
     }
     assert (20, 1) in r3 and r3[(20, 1)] == 0  # exact dup at distance 0
@@ -195,12 +210,11 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
         video_frame_hashes,
     )
     from etl_pipeline_challenge_aladia_spark.streaming.media import (
+        VIDEO_SEQ_REPORT,
+        VIDEO_SEQ_STORE,
         VIDEO_SEQUENCE_INGEST,
         _delta_media_frame,
-        erase_video_seq_keys,
         make_video_sequence_ingest_processor,
-        read_video_seq_report,
-        read_video_seq_store,
     )
 
     A, B, C, D, E = (_onehot16(v) for v in range(5))
@@ -219,15 +233,15 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
     with open(os.path.join(in_dir, "b1.jsonl"), "w") as f:
         f.write(json.dumps(b1[0]) + "\n")
     drain_files(spark, VIDEO_SEQUENCE_INGEST, in_dir, ckpt, store, report)
-    assert read_video_seq_report(spark, report).count() == 0
-    assert read_video_seq_store(spark, store).count() == 5  # 5 frames
+    assert read_store(spark, VIDEO_SEQ_REPORT, report).count() == 0
+    assert read_store(spark, VIDEO_SEQ_STORE, store).count() == 5  # 5 frames
 
     with open(os.path.join(in_dir, "b2.jsonl"), "w") as f:
         f.write("\n".join(json.dumps(r) for r in b2) + "\n")
     drain_files(spark, VIDEO_SEQUENCE_INGEST, in_dir, ckpt, store, report)
     got = {
         (r.delta_id, r.corpus_id): (r.longest_run, r.n_runs)
-        for r in read_video_seq_report(spark, report).collect()
+        for r in read_store(spark, VIDEO_SEQ_REPORT, report).collect()
     }
     # both trims pair with the stored master (run 3); the scramble's
     # identical frame SET never forms a run; the twins pair within-batch
@@ -251,8 +265,8 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
 
     # replay idempotence: drained rerun + direct micro-batch replay
     def snapshot():
-        s = sorted(map(tuple, read_video_seq_store(spark, store).collect()))
-        r = sorted(map(tuple, read_video_seq_report(spark, report).collect()))
+        s = sorted(map(tuple, read_store(spark, VIDEO_SEQ_STORE, store).collect()))
+        r = sorted(map(tuple, read_store(spark, VIDEO_SEQ_REPORT, report).collect()))
         return s, r
 
     before = snapshot()
@@ -262,7 +276,7 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
     assert snapshot() == before
 
     # erasure: forget the master -> a re-screen of the trim finds nothing
-    removed = erase_video_seq_keys(spark, store, [0])
+    removed = erase_keys(spark, VIDEO_SEQ_STORE, store, [0])
     assert removed == 5
     trim_only = spark.createDataFrame(
         [(r["media_id"], r["modality"], r["content_b64"]) for r in [b2[0]]],
@@ -274,7 +288,7 @@ def test_video_sequence_ingest_flags_cross_batch_trim(spark, tmp_path):
 
     _sh.copytree(store, store3)
     make_video_sequence_ingest_processor(store3, report3)(trim_only, 99)
-    probe = read_video_seq_report(spark, report3).collect()
+    probe = read_store(spark, VIDEO_SEQ_REPORT, report3).collect()
     # clip 10/12's own sequences are still stored, so the trim pairs with
     # them — but NEVER with the erased master
     assert all(r.corpus_id != 0 for r in probe)
