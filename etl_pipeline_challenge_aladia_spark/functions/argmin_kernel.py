@@ -28,8 +28,9 @@ bit-for-bit, which is what keeps the SQL oracles hash-exact:
   sorted ascending and using first-occurrence ``np.argmin`` — the
   ``min(struct(dist_fx, cluster))`` contract.
 
-``tests/test_assign_kernel_parity.py`` pins kernel-vs-SQL equality on
-real fixture data and adversarial ties.
+``tests/test_assign_kernel_parity.py`` pins each kernel against its
+expression-plan reference (``tests/reference_ops.py``) on real fixture
+data and adversarial ties.
 """
 
 from __future__ import annotations
@@ -130,7 +131,7 @@ def centroid_component(sfx: int, cnt: int, quant_scale: int, scale: int) -> floa
 def local_kmeans(
     ids: np.ndarray, V: np.ndarray, k: int, iters: int, scale: int = 6
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact in-memory replica of ``_kmeans_rounds`` (single group) for a
+    """Exact in-memory replica of the fixed-point Lloyd loop (single group) for a
     LOCAL matrix — the inner quantizer of the two-level router runs on
     the k-row centroid table, metadata-sized at any corpus scale.
 
@@ -161,8 +162,8 @@ def local_kmeans(
 def build_hier_plan(
     cent_ids: np.ndarray, C: np.ndarray, k2: int, scale: int = 6
 ) -> dict:
-    """Precompute the two-level routing tables of ``_argmin_assign_hier``
-    from a collected centroid table: inner k-means (k2 super-cells,
+    """Precompute the two-level routing tables of ``hier_argmin`` from a
+    collected centroid table: inner k-means (k2 super-cells,
     inner_iters=2) over the centroids, keep only NON-EMPTY super-cells
     (those the final member assignment used), and group member centroids
     per super-cell sorted by cluster id (the tie-break order)."""
@@ -183,7 +184,7 @@ def hier_argmin(V: np.ndarray, plan: dict) -> tuple[np.ndarray, np.ndarray]:
     """Two-level routed exact argmin: route each row to its nearest
     non-empty super-cell (ties to the lower super-cell id), then exact
     argmin against that super-cell's member centroids (ties to the lower
-    cluster id) — `_argmin_assign_hier`, op for op."""
+    cluster id) — the oracles' two-level unroll, op for op."""
     routed, _ = argmin_cells(V, plan["sc_ids"], plan["SC"])
     n = V.shape[0]
     labels = np.empty(n, dtype=np.int64)
@@ -251,10 +252,9 @@ def cell_dup_sweep(
     some lower-id cell-mate i at round4(cosine) >= threshold, emit
     (ids[j], min such ids[i], max such cosine). ``ids`` MUST be sorted
     ascending (the min-id tie-break); tiles i-blocks so memory stays
-    bounded for giant cells. The SQL plan's dot-product prefilter is a
-    conservative margin over the exact cosine, so sweeping exact cosines
-    directly yields the identical row set (and IS what the oracle
-    computes)."""
+    bounded for giant cells. Sweeping exact cosines is what the oracle
+    computes; a dot-product prefilter with a safety margin below the
+    threshold (the expression-plan reference) yields the same row set."""
     m = ids.shape[0]
     if m < 2:
         e = np.empty(0, dtype=np.int64)

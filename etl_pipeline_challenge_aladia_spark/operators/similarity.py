@@ -44,13 +44,6 @@ from etl_pipeline_challenge_aladia_spark.sources.files import fan_out
 _MERSENNE = 2_147_483_647  # 2^31 - 1
 
 
-def jaccard_cols(a, b):
-    """|A ∩ B| / |A ∪ B| for two array columns (distinct semantics)."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
 def _pair_jaccard_verify(
     pairs: DataFrame,
     n: int,
@@ -66,18 +59,19 @@ def _pair_jaccard_verify(
     already-distinct shingle ARRAY ('set'); output is
     ``(id_a, id_b, jaccard)`` with the engine-wide half-up rounding.
 
-    Bit-exact twin of the Catalyst expression it replaces
-    (``round_half_up(jaccard_cols(shingles_col(tokens_col(t), n), ...), 4)``):
-    ``split(" ")`` keeps empty tokens, docs with fewer than ``n`` tokens
-    have an EMPTY shingle set (explode-over-empty: such docs never reach a
-    candidate join, but the kernel still mirrors the column's 0.0-on-empty
-    contract), intersection/union are distinct-set sizes, the division is
-    one IEEE double op and the rounding is floor(j*1e4+0.5)/1e4 — every
-    step correctly rounded and identical in both engines. Shingle sets are
-    memoized PER BATCH by doc id, so a hub document shared by many
-    candidate pairs tokenizes once per batch instead of once per pair —
-    the JVM expression paid the full tokenize+shingle+hash-set build per
-    pair, which profiling shows dominating the verify stage."""
+    Bit-exact with the Catalyst expression ``round_half_up(|A ∩ B| /
+    |A ∪ B|, 4)`` over ``array_distinct(shingles_col(tokens_col(t), n))``
+    sets (the DuckDB oracles' shape): ``split(" ")`` keeps empty tokens,
+    docs with fewer than ``n`` tokens have an EMPTY shingle set
+    (explode-over-empty: such docs never reach a candidate join, but an
+    empty union still yields 0.0), intersection/union are distinct-set
+    sizes, the division is one IEEE double op and the rounding is
+    floor(j*1e4+0.5)/1e4 — every step correctly rounded and identical in
+    both engines. Shingle sets are memoized PER BATCH by doc id, so a hub
+    document shared by many candidate pairs tokenizes once per batch
+    instead of once per pair — a per-pair JVM expression pays the full
+    tokenize+shingle+hash-set build per pair, which profiling showed
+    dominating the verify stage."""
     id_a_t = pairs.schema[0].dataType.simpleString()
     id_b_t = pairs.schema[1].dataType.simpleString()
 
@@ -247,92 +241,86 @@ def minhash_signatures(
 ) -> DataFrame:
     """doc -> array<long> MinHash signature of its n-gram shingle set.
 
-    One explode + one groupBy: shuffle volume is (docs x shingles) hashed
-    rows, independent of corpus pair count.
-
-    Default implementation is an Arrow kernel (guide §4.2): tokenize,
-    shingle, md5-fold and take all ``num_perm`` permutation minima per
-    document INSIDE one map stage — no shingle explode (docs x shingles
-    rows), no 64-column aggregate, no exchange at all. Exactness: the
-    kernel reproduces the SQL column semantics operation for operation —
-    ``split(" ")`` keeps empty tokens on both sides, docs with fewer
-    than n tokens produce NO row (the explode-over-empty contract), md5
-    is md5, and the (h*a+b) % 2147483647 lattice is exact int64 on both
-    sides (max |h*a+b| < 2^63). ``SEMANTIC_ASSIGN_IMPL=sql`` keeps the
-    explode + 64-min aggregate as the bit-equality reference
-    (tests/test_assign_kernel_parity.py pins signature equality).
+    One Arrow kernel (guide §4.2): tokenize, shingle, md5-fold and take
+    all ``num_perm`` permutation minima per document INSIDE one map stage
+    — no shingle explode (docs x shingles rows), no 64-column aggregate,
+    no exchange at all. Exactness: the kernel reproduces the SQL column
+    semantics the DuckDB oracles use (explode the shingles, min of
+    (h*a+b) % 2147483647 per permutation) operation for operation —
+    ``split(" ")`` keeps empty tokens, docs with fewer than n tokens
+    produce NO row (the explode-over-empty contract), md5 is md5, and the
+    lattice is exact int64 (max |h*a+b| < 2^63).
+    tests/test_assign_kernel_parity.py pins the kernel against that
+    expression plan.
     """
+    import numpy as np
+
     params = _perm_params(num_perm, seed)
-    if _assign_impl() != "sql":
-        import numpy as np
+    src = fan_out(docs).select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("t")
+    )
+    id_t = src.schema["id"].dataType.simpleString()
+    A = np.array([a for a, _ in params], dtype=np.int64)
+    B = np.array([b for _, b in params], dtype=np.int64)
 
-        src = fan_out(docs).select(
-            F.col(id_col).alias("id"), F.col(text_col).alias("t")
-        )
-        id_t = src.schema["id"].dataType.simpleString()
-        A = np.array([a for a, _ in params], dtype=np.int64)
-        B = np.array([b for _, b in params], dtype=np.int64)
+    def fn(batches):
+        import hashlib
 
-        def fn(batches):
-            import hashlib
+        import pyarrow as pa
 
-            import pyarrow as pa
-
-            for batch in batches:
-                texts = batch.column(1).to_pylist()
-                keep = []
-                sigs = []
-                for i, t in enumerate(texts):
-                    if t is None:
-                        continue
-                    words = t.split(" ")
-                    if len(words) < n:
-                        continue  # empty shingle set -> no signature row
-                    sh = {
-                        " ".join(words[j : j + n])
-                        for j in range(len(words) - n + 1)
-                    }
-                    h = np.fromiter(
-                        (
-                            int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-                            for s in sh
-                        ),
-                        dtype=np.int64,
-                        count=len(sh),
-                    )
-                    sigs.append(
-                        ((h[:, None] * A[None, :] + B[None, :]) % _MERSENNE)
-                        .min(axis=0)
-                    )
-                    keep.append(i)
-                if not keep:
+        for batch in batches:
+            texts = batch.column(1).to_pylist()
+            keep = []
+            sigs = []
+            for i, t in enumerate(texts):
+                if t is None:
                     continue
-                flat = np.concatenate(sigs)
-                off = np.arange(0, (len(keep) + 1) * len(A), len(A), dtype=np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0).take(pa.array(keep, type=pa.int32())),
-                        pa.ListArray.from_arrays(
-                            pa.array(off), pa.array(flat, type=pa.int64())
-                        ),
-                    ],
-                    names=["id", "signature"],
+                words = t.split(" ")
+                if len(words) < n:
+                    continue  # empty shingle set -> no signature row
+                sh = {
+                    " ".join(words[j : j + n])
+                    for j in range(len(words) - n + 1)
+                }
+                h = np.fromiter(
+                    (
+                        int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+                        for s in sh
+                    ),
+                    dtype=np.int64,
+                    count=len(sh),
                 )
+                sigs.append(
+                    ((h[:, None] * A[None, :] + B[None, :]) % _MERSENNE)
+                    .min(axis=0)
+                )
+                keep.append(i)
+            if not keep:
+                continue
+            flat = np.concatenate(sigs)
+            off = np.arange(0, (len(keep) + 1) * len(A), len(A), dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(pa.array(keep, type=pa.int32())),
+                    pa.ListArray.from_arrays(
+                        pa.array(off), pa.array(flat, type=pa.int64())
+                    ),
+                ],
+                names=["id", "signature"],
+            )
 
-        return src.mapInArrow(fn, f"id {id_t}, signature array<long>")
-    exploded = fan_out(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles_col(tokens_col(text_col), n)).alias("sh"),
-    ).withColumn("h", shingle_hash_col(F.col("sh")))
-    mins = exploded.groupBy("id").agg(
-        *[
-            F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)).alias(f"m{j}")
-            for j, (a, b) in enumerate(params)
-        ]
-    )
-    return mins.select(
-        "id", F.array(*[F.col(f"m{j}") for j in range(num_perm)]).alias("signature")
-    )
+    return src.mapInArrow(fn, f"id {id_t}, signature array<long>")
+
+
+def _check_bands(num_perm: int, bands: int) -> None:
+    """Refuse a band count that does not divide ``num_perm``: banding
+    floors ``num_perm // bands`` rows per band, so it would silently drop
+    the trailing permutations and band a weaker sketch than requested."""
+    if bands <= 0 or num_perm % bands:
+        raise ValueError(
+            f"bands={bands} must divide num_perm={num_perm}: banding would "
+            "silently drop the trailing permutations and band a weaker sketch"
+        )
 
 
 def _band_rows(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
@@ -340,6 +328,7 @@ def _band_rows(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
     EXACT concatenation of the band's signature slice (not a hash): no
     false candidates from key collisions, and the candidate set is
     engine-reproducible (the DuckDB oracle builds the same keys)."""
+    _check_bands(num_perm, bands)
     rows_per_band = num_perm // bands
     return sigs.select(
         "id",
@@ -411,28 +400,12 @@ def minhash_incremental_pairs(
         F.col(id_col).alias("delta_id"), F.col(text_col).alias("t_d")
     )
     joined = candidates.join(t_d, "delta_id").join(t_c, "corpus_id")
-    if _assign_impl() != "sql":
-        return _pair_jaccard_verify(
-            joined.select("delta_id", "corpus_id", "t_d", "t_c"),
-            n,
-            "delta_id",
-            "corpus_id",
-        ).filter(F.col("jaccard") >= threshold)
-    return (
-        joined
-        .select(
-            "delta_id",
-            "corpus_id",
-            round_half_up(
-                jaccard_cols(
-                    shingles_col(tokens_col("t_d"), n),
-                    shingles_col(tokens_col("t_c"), n),
-                ),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _pair_jaccard_verify(
+        joined.select("delta_id", "corpus_id", "t_d", "t_c"),
+        n,
+        "delta_id",
+        "corpus_id",
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def doc_signature_store(
@@ -485,7 +458,7 @@ def minhash_pairs_from_store(
     (it need not even exist anymore). Output is identical to
     ``minhash_incremental_pairs(corpus, delta)`` when the store holds
     that corpus' precomputation: storage is a pure precompute, not an
-    approximation (jaccard_cols is distinct-semantics, so stored
+    approximation (the verify is distinct-set Jaccard, so stored
     deduped shingle arrays verify bit-identically).
 
     Output: (delta_id, corpus_id, jaccard >= threshold)."""
@@ -511,31 +484,15 @@ def minhash_pairs_from_store(
         F.col("id").alias("corpus_id"), F.col("shingles").alias("sh_c")
     )
     joined = candidates.join(t_d, "delta_id").join(sh_c, "corpus_id")
-    if _assign_impl() != "sql":
-        # delta side tokenizes in-kernel; the corpus side is the STORED
-        # distinct shingle array (set semantics — jaccard_cols is
-        # distinct-set either way, so the value is identical)
-        return _pair_jaccard_verify(
-            joined.select("delta_id", "corpus_id", "t_d", "sh_c"),
-            n,
-            "delta_id",
-            "corpus_id",
-            b_kind="set",
-        ).filter(F.col("jaccard") >= threshold)
-    return (
-        joined
-        .select(
-            "delta_id",
-            "corpus_id",
-            round_half_up(
-                jaccard_cols(
-                    shingles_col(tokens_col("t_d"), n), F.col("sh_c")
-                ),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    # delta side tokenizes in-kernel; the corpus side is the STORED
+    # distinct shingle array (set semantics, so the value is identical)
+    return _pair_jaccard_verify(
+        joined.select("delta_id", "corpus_id", "t_d", "sh_c"),
+        n,
+        "delta_id",
+        "corpus_id",
+        b_kind="set",
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_near_dup_pairs(
@@ -585,33 +542,15 @@ def minhash_near_dup_pairs(
     joined = candidates.join(
         txt.withColumnsRenamed({"id": "doc_id_a", "t": "t_a"}), "doc_id_a"
     ).join(txt.withColumnsRenamed({"id": "doc_id_b", "t": "t_b"}), "doc_id_b")
-    if _assign_impl() != "sql":
-        # per-pair tokenize+shingle+set-op fold -> one Arrow map stage
-        # with per-batch doc memoization (guide §4.2; bit-exact contract
-        # in _pair_jaccard_verify). SEMANTIC_ASSIGN_IMPL=sql keeps the
-        # original expression plan as the bit-equality reference.
-        return _pair_jaccard_verify(
-            joined.select("doc_id_a", "doc_id_b", "t_a", "t_b"),
-            n,
-            "doc_id_a",
-            "doc_id_b",
-        ).filter(F.col("jaccard") >= threshold)
-    verified = (
-        joined
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            round_half_up(
-                jaccard_cols(
-                    shingles_col(tokens_col("t_a"), n),
-                    shingles_col(tokens_col("t_b"), n),
-                ),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified
+    # per-pair tokenize+shingle+set-op fold -> one Arrow map stage with
+    # per-batch doc memoization (guide §4.2; bit-exact contract in
+    # _pair_jaccard_verify)
+    return _pair_jaccard_verify(
+        joined.select("doc_id_a", "doc_id_b", "t_a", "t_b"),
+        n,
+        "doc_id_a",
+        "doc_id_b",
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def brute_force_topk(
@@ -1019,10 +958,11 @@ def mutual_knn_ivf(
 
     ``cell_col=None`` replaces the fixed label vocabulary with an
     AUTO-k k-means coarse quantizer (max(32, floor(sqrt(n/iters)))
-    cells, deterministic ``kmeans_with_centroids``, flat/hier routing
-    via ``resolve_semantic_route``) and probes the ``nprobe`` nearest
-    cells by the SAME exact fixed-point distance the assignment uses
-    (fx asc, cluster tie-break — rank-1 probe IS the assignment cell).
+    cells, the deterministic ``kmeans_with_centroids`` training,
+    flat/hier routing via ``resolve_semantic_route``) and probes the
+    ``nprobe`` nearest cells by the SAME exact fixed-point distance the
+    assignment uses (fx asc, cluster tie-break — rank-1 probe IS the
+    assignment cell).
     This is the shipped scale path: a fixed cell vocabulary makes
     per-cell population grow linearly with the corpus, so the per-cell
     GEMM is Θ(n²/L) — measured SUPER-LINEAR (24x per 10x data) at the
@@ -1041,78 +981,47 @@ def mutual_knn_ivf(
         raw = embeddings.select(
             F.col(id_col).alias("id"), to_double_array(vec_col).alias("v")
         )
-        if _assign_impl() != "sql":
-            # ONE fused map stage builds the whole tagged frame: the
-            # frozen quantizer lands on the driver (the Lloyd loop's
-            # centroid-table-bounded collects) and the kernel emits the
-            # member row (assignment cell) plus the nprobe prober rows
-            # per vector — no broadcast crossJoin of n x k candidate
-            # rows, no rank window's exchange+sort over them, and no
-            # assignment re-join (guide §2.4/§4.2; probe order contract
-            # in _make_probe_tag_fn). SEMANTIC_ASSIGN_IMPL=sql keeps the
-            # original window plan as the bit-equality reference.
-            vecs = raw.select(F.lit(0).alias("grp"), "id", "v")
-            cent_map, hier_plans = _lloyd_cent_map(
-                vecs, kq, iters, scale=6, single_group=True, route=route
-            )
-            id_t = raw.schema["id"].dataType.simpleString()
-            tagged = raw.mapInArrow(
-                _make_probe_tag_fn(cent_map, hier_plans, nprobe),
-                f"id {id_t}, v array<double>, cell int, role int",
-            ).localCheckpoint(eager=False)
-            return _mutual_from_tagged(tagged, k, threshold, block_cap)
-        assigned, km_cents = kmeans_with_centroids(
-            embeddings, k=kq, iters=iters, id_col=id_col, vec_col=vec_col,
-            route=route,
+        # ONE fused map stage builds the whole tagged frame: the frozen
+        # quantizer lands on the driver (the Lloyd loop's
+        # centroid-table-bounded collects) and the kernel emits the member
+        # row (assignment cell) plus the nprobe prober rows per vector —
+        # no broadcast crossJoin of n x k candidate rows, no rank window's
+        # exchange+sort over them, and no assignment re-join (guide
+        # §2.4/§4.2; probe order contract in _make_probe_tag_fn).
+        vecs = raw.select(F.lit(0).alias("grp"), "id", "v")
+        cent_map, hier_plans = _lloyd_cent_map(
+            vecs, kq, iters, scale=6, single_group=True, route=route
         )
-        # members carry their assignment cell; probes need only (id, v) —
-        # keep the assignment join off the probe branch's lineage
-        e = raw.join(
-            assigned.select("id", F.col("cluster").alias("own_cell")), "id"
+        id_t = raw.schema["id"].dataType.simpleString()
+        tagged = raw.mapInArrow(
+            _make_probe_tag_fn(cent_map, hier_plans, nprobe),
+            f"id {id_t}, v array<double>, cell int, role int",
+        ).localCheckpoint(eager=False)
+        return _mutual_from_tagged(tagged, k, threshold, block_cap)
+    cents = label_centroids(embeddings, None, cell_col, vec_col)
+    e = embeddings.select(
+        F.col(id_col).alias("id"),
+        F.col(cell_col).alias("own_cell"),
+        to_double_array(vec_col).alias("v"),
+    )
+    probe_w = Window.partitionBy("id").orderBy(
+        F.desc("cent_sim"), F.col("cell")
+    )
+    probes = (
+        e.select("id", "v")
+        .crossJoin(F.broadcast(cents))
+        .select(
+            "id",
+            "v",
+            "cell",
+            round_half_up(
+                cosine_similarity_col(F.col("v"), F.col("centroid")), 4
+            ).alias("cent_sim"),
         )
-        probe_w = Window.partitionBy("id").orderBy("fx", F.col("cell"))
-        probes = (
-            raw
-            .crossJoin(
-                F.broadcast(
-                    km_cents.select(F.col("cluster").alias("cell"), "c")
-                )
-            )
-            .select(
-                "id",
-                "v",
-                "cell",
-                _fx_sq_dist(F.col("v"), F.col("c"), None).alias("fx"),
-            )
-            .withColumn("pr", F.row_number().over(probe_w))
-            .filter(F.col("pr") <= nprobe)
-            .select("id", "v", "cell")
-        )
-    else:
-        cents = label_centroids(embeddings, None, cell_col, vec_col)
-        e = embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(cell_col).alias("own_cell"),
-            to_double_array(vec_col).alias("v"),
-        )
-        probe_w = Window.partitionBy("id").orderBy(
-            F.desc("cent_sim"), F.col("cell")
-        )
-        probes = (
-            e.select("id", "v")
-            .crossJoin(F.broadcast(cents))
-            .select(
-                "id",
-                "v",
-                "cell",
-                round_half_up(
-                    cosine_similarity_col(F.col("v"), F.col("centroid")), 4
-                ).alias("cent_sim"),
-            )
-            .withColumn("pr", F.row_number().over(probe_w))
-            .filter(F.col("pr") <= nprobe)
-            .select("id", "v", "cell")
-        )
+        .withColumn("pr", F.row_number().over(probe_w))
+        .filter(F.col("pr") <= nprobe)
+        .select("id", "v", "cell")
+    )
     # Score candidates with a PER-TILE GEMM (applyInPandas), not a
     # per-pair column expression: each tile's (probers x members) dot
     # products run as one BLAS matmul — identical rounding/threshold to
@@ -1327,11 +1236,11 @@ def kmeans_lite(
 ) -> DataFrame:
     """Deterministic Lloyd's k-means (fixed iterations) -> (id, cluster).
 
-    The iterative-algorithm pattern at engine level: per round, assignment
-    is a map-only stage against a BROADCAST centroid table (k x dim is
-    tiny at any corpus scale), recompute is one posexplode + (cluster, dim)
-    aggregation, and an eager localCheckpoint cuts the lineage so plan
-    depth stays O(1) per round. Determinism: init = the k lowest-id
+    The iterative-algorithm pattern at engine level: the k x dim centroid
+    table (tiny at any corpus scale) lives on the driver and ships inside
+    a map-only assignment kernel; each recompute round is one job of
+    per-batch partial sums, so plan depth stays O(1) per round
+    (``_kmeans_rounds``). Determinism: init = the k lowest-id
     vectors, centroid components rounded (half-up) each round, argmin ties
     broken by cluster index — so the result is reproducible run-to-run
     (this is the real coarse quantizer behind ivf_topk's ``label`` stand-in).
@@ -1346,28 +1255,11 @@ def kmeans_lite(
     ).select("id", "cluster", "dist_fx", "dist")
 
 
-def _fx_sq_dist(v, c, dim: int | None):
+def _fx_sq_dist(v, c):
     """EXACT int64 fixed-point squared distance between two array<double>
-    columns: sum of floor((v_d - c_d)^2 * 1e8 + 0.5). With ``dim`` known
-    the sum unrolls into a flat codegen'd chain — int64 addition is
-    associative, so unrolled and folded values are identical to the bit;
-    without it, the original zip_with/aggregate fold runs (interpreted)."""
-    if dim is not None:
-        from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-            _chain_sum,
-        )
-
-        return _chain_sum(
-            [
-                F.floor(
-                    (v.getItem(d) - c.getItem(d))
-                    * (v.getItem(d) - c.getItem(d))
-                    * F.lit(100000000.0)
-                    + F.lit(0.5)
-                ).cast("long")
-                for d in range(dim)
-            ]
-        )
+    columns: sum of floor((v_d - c_d)^2 * 1e8 + 0.5) as one zip_with /
+    aggregate fold — int64 addition is associative, so the sum is the
+    same in any engine and any order."""
     sq = F.zip_with(
         v,
         c,
@@ -1380,14 +1272,14 @@ def _fx_sq_dist(v, c, dim: int | None):
 
 def kmeans_lite_grouped(
     vecs: DataFrame, k: int = 8, iters: int = 3, scale: int = 6,
-    dim: int | None = None, single_group: bool = False,
+    single_group: bool = False,
     route: str = "flat",
 ) -> DataFrame:
     """Lloyd's k-means over MANY groups at once: ``vecs`` is (grp, id, v)
     and every group trains its own independent k centroids, but all groups
-    share each round's jobs — one broadcast join, one argmin window, one
-    (grp, cluster, dim) aggregation, one lineage checkpoint PER ROUND,
-    regardless of group count. This is what lets product quantization train
+    share each round's jobs — one partial-sums job per recompute round and
+    one map-only assignment stage (``_kmeans_rounds``), regardless of
+    group count. This is what lets product quantization train
     ``blocks`` codebooks for the price of one k-means, and at 100 TB it is
     the difference between ``blocks`` passes over the corpus per round and
     a single pass.
@@ -1399,7 +1291,7 @@ def kmeans_lite_grouped(
     the order-independent fixed-point mean, rounded half-up.
     """
     assigned, _ = _kmeans_rounds(
-        vecs, k, iters, scale, dim, single_group=single_group, route=route
+        vecs, k, iters, scale, single_group=single_group, route=route
     )
     # dist_fx is the EXACT int64 fixed-point squared distance (1e-8 quanta)
     # — consumers needing exact integer aggregation use it directly instead
@@ -1412,135 +1304,6 @@ def kmeans_lite_grouped(
         "dist_fx",
         (F.col("dist_fx").cast("double") / F.lit(100000000.0)).alias("dist"),
     )
-
-
-def _argmin_assign(
-    vecs: DataFrame, centroids: DataFrame, dim: int | None
-) -> DataFrame:
-    """Broadcast-join candidates + hash-aggregate argmin:
-    ``min(struct(dist_fx, cluster))`` is lexicographic — minimum exact
-    fixed-point distance, ties to the lower cluster index — the same
-    contract as a (dist_fx, cluster)-ordered row_number window, but as a
-    HASH AGGREGATE instead of a window SORT: the k candidate rows for
-    each id sit in the exploding partition, so map-side partial
-    aggregation collapses them locally and the exchange moves ~n rows,
-    not n x k — at auto-k (k ~ sqrt n) the difference between a
-    linear-in-corpus shuffle and an n^1.5 one. Distances stay codegen'd
-    expressions (a packed-array fold argmin was measured 25-40% slower
-    here: higher-order lambdas are interpreted per element).
-    ``any_value(v)`` is deterministic-by-value: every candidate row of a
-    group carries the identical source vector."""
-    dist_fx = _fx_sq_dist(F.col("v"), F.col("c"), dim)
-    return (
-        vecs.join(F.broadcast(centroids), "grp")
-        .select("grp", "id", "v", "cluster", dist_fx.alias("dist_fx"))
-        .groupBy("grp", "id")
-        .agg(
-            F.min(F.struct("dist_fx", "cluster")).alias("_m"),
-            F.any_value("v").alias("v"),
-        )
-        .select(
-            "grp",
-            "id",
-            "v",
-            F.col("_m.cluster").alias("cluster"),
-            F.col("_m.dist_fx").alias("dist_fx"),
-        )
-    )
-
-
-def _argmin_assign_hier(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    dim: int | None,
-    k2: int,
-    inner_iters: int = 2,
-    scale: int = 6,
-) -> DataFrame:
-    """Two-level routed argmin — the IVF-of-IVF assignment layout for
-    large k. Flat ``_argmin_assign`` evaluates n x k distances; at
-    auto-k (k ~ sqrt n) that is Θ(n^1.5) compute. Here the centroid
-    table itself is clustered into ``k2`` super-cells by a tiny inner
-    k-means (k rows — negligible at any corpus scale), each vector
-    routes to its nearest NON-EMPTY super-cell (n x k2 distances), and
-    the exact argmin runs only against that super-cell's member
-    centroids (~n x k/k2): with k2 = ceil(sqrt(k)) total distance work
-    is ~2*n*sqrt(k) per round instead of n*k — at 10^9+ vectors the
-    difference between a pass and a day.
-
-    Deterministic end to end — the inner k-means reuses the exact
-    fixed-point ``_kmeans_rounds`` contract (lowest-id init, int64
-    distances, half-up centroid rounding, index tie-breaks), routing
-    and member argmin reuse ``min(struct(dist_fx, idx))`` — so a SQL
-    oracle unrolls BOTH levels and matches bit-for-bit. Assignment is
-    approximate by design (the nearest centroid can live outside the
-    routed super-cell — the standard IVF trade); the flat path remains
-    the exact twin.
-
-    Empty super-cells (an inner Lloyd cluster that lost all member
-    centroids) are excluded from routing, so every routed vector finds
-    at least one member candidate."""
-    cvecs = centroids.select(
-        "grp", F.col("cluster").alias("id"), F.col("c").alias("v")
-    )
-    member, supercents = _kmeans_rounds(
-        cvecs, k2, inner_iters, scale, dim, single_group=True
-    )
-    # member: (id = centroid's cluster index, cluster = its super-cell)
-    member_map = member.select(
-        F.col("id").alias("cluster"), F.col("cluster").alias("supercell")
-    ).localCheckpoint(eager=True)
-    nonempty = (
-        supercents.select(
-            "grp", F.col("cluster").alias("supercell"), F.col("c").alias("sc")
-        )
-        .join(member_map.select("supercell").distinct(), "supercell")
-        .select(
-            "grp", F.col("supercell").alias("cluster"), F.col("sc").alias("c")
-        )
-    )
-    routed = _argmin_assign(vecs, nonempty, dim).select(
-        "grp", "id", "v", F.col("cluster").alias("supercell")
-    )
-    cmem = centroids.join(member_map, "cluster").select(
-        "grp", "supercell", "cluster", "c"
-    )
-    dist_fx = _fx_sq_dist(F.col("v"), F.col("c"), dim)
-    return (
-        # broadcast hash join keyed on (grp, supercell): each vector row
-        # probes only its super-cell's member centroids, so the distance
-        # expression runs ~k/k2 times per vector, not k
-        routed.join(F.broadcast(cmem), ["grp", "supercell"])
-        .select("grp", "id", "v", "cluster", dist_fx.alias("dist_fx"))
-        .groupBy("grp", "id")
-        .agg(
-            F.min(F.struct("dist_fx", "cluster")).alias("_m"),
-            F.any_value("v").alias("v"),
-        )
-        .select(
-            "grp",
-            "id",
-            "v",
-            F.col("_m.cluster").alias("cluster"),
-            F.col("_m.dist_fx").alias("dist_fx"),
-        )
-    )
-
-
-#: Physical implementation of the fixed-point argmin assignment:
-#: "arrow" (default) = the NumPy map-only kernel over Arrow batches
-#: (guide §4.2 — vectorized native arithmetic; no candidate-row join,
-#: no sort, no exchange in the assignment stage); "sql" = the original
-#: broadcast-join + aggregate expression plan, kept as the bit-equality
-#: reference and fallback. Both produce IDENTICAL rows (the kernel
-#: reproduces every IEEE op — functions/argmin_kernel.py's exactness
-#: contract; tests/test_assign_kernel_parity.py pins arrow == sql), so
-#: the SQL oracles are untouched by the switch.
-ASSIGN_IMPL_ENV = "SEMANTIC_ASSIGN_IMPL"
-
-
-def _assign_impl() -> str:
-    return os.environ.get(ASSIGN_IMPL_ENV, "arrow")
 
 
 def _make_assign_fn(cent_map: dict, hier_plans: dict | None):
@@ -1655,8 +1418,8 @@ def _make_probe_tag_fn(cent_map: dict, hier_plans: dict | None, nprobe: int):
                 own, _ = _K.hier_argmin(V, hier_plans[0])
             else:
                 own, _ = _K.argmin_cells(V, ids_c, C)
-            # flat probe ranking over ALL cells (the SQL plan ranks the
-            # full centroid table even under hier assignment): stable
+            # flat probe ranking over ALL cells (the probe contract ranks
+            # the full centroid table even under hier assignment): stable
             # argsort of the exact fx row = (fx asc, cell-id asc) since
             # centroid rows are sorted ascending by id
             k = max(1, C.shape[0])
@@ -1747,8 +1510,8 @@ def _make_partials_fn(cent_map: dict, hier_plans: dict | None):
 
 def _hier_plans(cent_map: dict, k2: int, scale: int) -> dict:
     """Two-level routing tables per group, precomputed on the DRIVER from
-    the collected centroid table: the inner quantizer of
-    ``_argmin_assign_hier`` runs over k rows — metadata-sized at any
+    the collected centroid table: the inner quantizer of the
+    two-level router runs over k rows — metadata-sized at any
     corpus scale, so clustering it locally replaces the 3 scheduled
     inner-k-means jobs per outer round with microseconds (the same
     rationale as the union-find small-graph gate in operators/dedup.py)."""
@@ -1786,10 +1549,9 @@ def _cent_map_from_partials(agg_rows, scale: int) -> dict:
 
 
 def _centroids_df(spark, cent_map: dict, grp_type) -> DataFrame:
-    """Rebuild the (grp, cluster, c) centroid DataFrame from the local
-    map — same schema the SQL path's checkpointed table had, so every
-    downstream consumer (stores, drift audits, frozen-index saves) is
-    untouched."""
+    """Rebuild the (grp, cluster int, c array<double>) centroid DataFrame
+    from the local map — the table every downstream consumer (stores,
+    drift audits, frozen-index saves) reads."""
     from pyspark.sql import types as T
 
     rows = []
@@ -1808,46 +1570,37 @@ def _centroids_df(spark, cent_map: dict, grp_type) -> DataFrame:
 
 
 def _kmeans_rounds(
-    vecs: DataFrame, k: int, iters: int, scale: int, dim: int | None,
-    single_group: bool = False,
-    route: str = "flat",
-) -> tuple[DataFrame, DataFrame]:
-    """Dispatcher: the Arrow/NumPy assignment kernel by default, the
-    original all-expression SQL plan under ``SEMANTIC_ASSIGN_IMPL=sql``
-    (bit-equality reference; identical output rows either way)."""
-    if _assign_impl() == "sql":
-        return _kmeans_rounds_sql(
-            vecs, k, iters, scale, dim, single_group=single_group, route=route
-        )
-    return _kmeans_rounds_arrow(
-        vecs, k, iters, scale, single_group=single_group, route=route
-    )
-
-
-def _kmeans_rounds_arrow(
     vecs: DataFrame, k: int, iters: int, scale: int,
     single_group: bool = False,
     route: str = "flat",
 ) -> tuple[DataFrame, DataFrame]:
-    """Lloyd's loop with the map-only assignment kernel (guide §4.2):
+    """The shared Lloyd's loop: returns (final assignment (grp, id,
+    cluster, dist_fx), the CENTROID table (grp, cluster, c) that final
+    assignment was computed against). Centroids are not recomputed after
+    the last assignment (the SQL oracle has no c{iters} CTE either), so
+    the returned centroids are exactly the ones every ``dist_fx`` refers
+    to — the frozen coarse quantizer a streaming ingest assigns new
+    vectors against (``assign_to_centroids``).
+
+    Physical shape, with the map-only assignment kernel (guide §4.2):
 
     - init and each recompute land the k x dim centroid table on the
-      DRIVER (bounded: k ~ sqrt(n) rows of metadata — the table the SQL
-      path materialized via localCheckpoint anyway), and ship it back
+      DRIVER (bounded: k ~ sqrt(n) rows of metadata) and ship it back
       inside the kernel closure — no broadcast-join stage at all;
     - recompute rounds emit per-batch partial sums (<= k x dim rows per
       batch) instead of n assignment rows: ONE job per round whose
       exchange carries centroid-table bytes, never corpus bytes;
     - the final assignment is a single map-only stage fused into the
-      consumer's plan — no candidate-row join, no SortAggregate, no
-      exchange (the SQL plan paid all three per round).
+      consumer's plan — no candidate-row join, no aggregate, no exchange.
 
-    Semantics identical to ``_kmeans_rounds_sql`` bit-for-bit: the kernel
-    reproduces every IEEE op (functions/argmin_kernel.py), init/ties/
-    empty-cluster behavior included. ``route="hier"`` runs the SAME
-    two-level routed assignment; its inner quantizer (over k centroid
-    rows) runs locally on the driver instead of as 3 scheduled jobs per
-    round."""
+    The kernel reproduces the fixed-point expression plan the oracles
+    unroll (``_fx_sq_dist`` distances, lowest-id init, lower-cluster
+    ties, empty clusters dropped) bit-for-bit (functions/argmin_kernel.py;
+    pinned by tests/test_assign_kernel_parity.py). ``route="hier"``
+    (single-group only) swaps the flat argmin for the two-level router
+    (``_K.hier_argmin``: centroids clustered into k2 = ceil(sqrt(k))
+    super-cells, ~2*n*sqrt(k) distance evaluations per round instead of
+    n*k); its inner quantizer over k centroid rows runs on the driver."""
     cent_map, hier_plans = _lloyd_cent_map(
         vecs, k, iters, scale, single_group=single_group, route=route
     )
@@ -1868,7 +1621,7 @@ def _lloyd_cent_map(
     single_group: bool = False,
     route: str = "flat",
 ) -> tuple[dict, dict | None]:
-    """The driver-side Lloyd loop of ``_kmeans_rounds_arrow``: run the
+    """The driver-side Lloyd loop of ``_kmeans_rounds``: run the
     ``iters - 1`` recompute rounds (one partial-sums job + a
     centroid-table-bounded collect per round) and return the FROZEN
     quantizer the final assignment round would use —
@@ -1884,8 +1637,7 @@ def _lloyd_cent_map(
     grp_type = vecs.schema["grp"].dataType
     if single_group:
         # k-row bounded init fetch (the k lowest-id vectors, already
-        # sorted by the TakeOrdered): same contract as the SQL path's
-        # checkpointed init table, landed locally for the kernel closure
+        # sorted by the TakeOrdered), landed locally for the kernel closure
         init_rows = vecs.orderBy("id").limit(k).collect()
     else:
         w_init = Window.partitionBy("grp").orderBy("id")
@@ -1924,87 +1676,69 @@ def _lloyd_cent_map(
     return cent_map, hier_plans
 
 
-def _kmeans_rounds_sql(
-    vecs: DataFrame, k: int, iters: int, scale: int, dim: int | None,
-    single_group: bool = False,
-    route: str = "flat",
+def _train_assign(
+    embeddings: DataFrame,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    route: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """The shared Lloyd's loop: returns (final assignment, the CENTROID
-    table that final assignment was computed against). Centroids are NOT
-    recomputed after the last assignment — that recompute was a dead
-    aggregation + eager checkpoint job per call (the SQL oracle never had
-    a c{iters} CTE), and skipping it keeps the returned centroids exactly
-    the ones every ``dist_fx`` refers to — the frozen coarse quantizer a
-    streaming ingest assigns new vectors against (``assign_to_centroids``).
+    """Train a single-group quantizer (``_lloyd_cent_map``), then assign
+    every vector in a map stage that ECHOES it: returns (cells (id,
+    cluster, v), centroids (cluster, c)). The in-cell consumers (pair
+    sweeps, screens, index builds) need (id, cluster, v); echoing v from
+    the assignment kernel removes the join back to the corpus, so the
+    corpus side is one map stage. The centroid table is rebuilt from the
+    driver-local map (a LocalTableScan — no lineage to cut)."""
+    vecs = embeddings.select(
+        F.lit(0).alias("grp"),
+        F.col(id_col).alias("id"),
+        to_double_array(vec_col).alias("v"),
+    )
+    cent_map, hier_plans = _lloyd_cent_map(
+        vecs, k, iters, scale=6, single_group=True, route=route
+    )
+    id_t = vecs.schema["id"].dataType.simpleString()
+    cells = vecs.mapInArrow(
+        _make_assign_v_fn(cent_map, hier_plans),
+        f"id {id_t}, cluster int, v array<double>",
+    )
+    centroids = _centroids_df(
+        embeddings.sparkSession, cent_map, vecs.schema["grp"].dataType
+    ).select("cluster", "c")
+    return cells, centroids
 
-    Assignment is a broadcast join + hash-aggregate argmin
-    (``_argmin_assign``): map-side combine keeps the exchange linear in
-    the corpus regardless of k. ``route="hier"`` (single-group only)
-    swaps every round's assignment for the two-level routed
-    ``_argmin_assign_hier`` with k2 = ceil(sqrt(k)) super-cells —
-    ~2*n*sqrt(k) distance evaluations per round instead of n*k, the
-    right shape once auto-k makes k ~ sqrt(n)."""
-    if route == "hier" and not single_group:
-        raise ValueError("hier routing is single-group only")
-    if single_group:
-        # init = the k lowest-id vectors, cluster = rank by id — same
-        # contract as the window path below, but TakeOrderedAndProject +
-        # a k-row bounded collect_list instead of a WindowExec: with grp
-        # a folded constant the window's partition spec is empty and
-        # WindowExec logs a false "serious performance degradation"
-        # scale alarm (the plan was already rewritten to a k-row limit;
-        # this path just removes the operator that prints it)
-        centroids = (
-            vecs.orderBy("id")
-            .limit(k)
-            .groupBy("grp")
-            .agg(F.array_sort(F.collect_list(F.struct("id", "v"))).alias("_top"))
-            .select("grp", F.posexplode("_top").alias("_i", "_s"))
-            .select(
-                "grp",
-                (F.col("_i") + 1).cast("int").alias("cluster"),
-                F.col("_s.v").alias("c"),
-            )
-            .localCheckpoint(eager=True)
-        )
+
+def _route_frozen(
+    vecs: DataFrame, centroids: DataFrame, echo_v: bool = False
+) -> DataFrame:
+    """Route (grp=0, id, v) rows onto a FROZEN (cluster, c) table with the
+    map-only argmin kernel: the k x dim table (tiny at any corpus scale —
+    the quantizer a store hands back) lands on the driver once and ships
+    in the kernel closure, so routing is ONE map stage — no broadcast
+    join, no candidate rows, no exchange. Returns (grp, id, cluster,
+    dist_fx), or (id, cluster, v) with ``echo_v``. An empty centroid
+    table routes nothing: the same columns, no rows."""
+    import numpy as np
+
+    id_t = vecs.schema["id"].dataType.simpleString()
+    if echo_v:
+        schema = f"id {id_t}, cluster int, v array<double>"
     else:
-        w_init = Window.partitionBy("grp").orderBy("id")
-        centroids = (
-            vecs.withColumn("_rn", F.row_number().over(w_init))
-            .filter(F.col("_rn") <= k)
-            .select("grp", F.col("_rn").alias("cluster"), F.col("v").alias("c"))
-            .localCheckpoint(eager=True)
+        schema = f"grp int, id {id_t}, cluster int, dist_fx long"
+    rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
+    if not rows:
+        return vecs.sparkSession.createDataFrame([], schema)
+    rows.sort(key=lambda r: r["cluster"])
+    cent_map = {
+        0: (
+            np.array([r["cluster"] for r in rows], dtype=np.int64),
+            np.array([r["c"] for r in rows], dtype=np.float64),
         )
-    import math
-
-    k2 = int(math.ceil(math.sqrt(k)))  # fixed across rounds (oracle mirrors)
-    assigned = None
-    for r in range(iters):
-        # fixed-point per-dimension squared diffs (1e-8 quanta, int64): the
-        # distance sum is exact integer arithmetic, so argmin assignment is
-        # engine-reproducible and an unrolled SQL twin matches bit-for-bit
-        # (dim=None -> fold; see _fx_sq_dist for the unrolled variant)
-        if route == "hier":
-            assigned = _argmin_assign_hier(vecs, centroids, dim, k2, scale=scale)
-        else:
-            assigned = _argmin_assign(vecs, centroids, dim)
-        if r < iters - 1:
-            centroids = (
-                assigned.select(
-                    "grp", "cluster", F.posexplode("v").alias("dim", "val")
-                )
-                .groupBy("grp", "cluster", "dim")
-                .agg(round_half_up(avg_fixed_point(F.col("val")), scale).alias("cv"))
-                .groupBy("grp", "cluster")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "cv"))),
-                        lambda x: x["cv"],
-                    ).alias("c")
-                )
-                .localCheckpoint(eager=True)
-            )
-    return assigned, centroids
+    }
+    make = _make_assign_v_fn if echo_v else _make_assign_fn
+    return vecs.mapInArrow(make(cent_map, None), schema)
 
 
 def kmeans_with_centroids(
@@ -2019,7 +1753,7 @@ def kmeans_with_centroids(
     """``kmeans_lite`` that ALSO returns its frozen coarse quantizer:
     (assignments (id, cluster, dist_fx, dist), centroids (cluster, c)).
     The centroid table is what a streaming/incremental ingest holds on to
-    — new vectors are routed with ``assign_to_centroids`` (one broadcast
+    — new vectors are routed with ``assign_to_centroids`` (one map-only
     argmin, no re-training) until drift (``cell_drift``) says re-train."""
     vecs = embeddings.select(
         F.lit(0).alias("grp"),
@@ -2027,7 +1761,7 @@ def kmeans_with_centroids(
         to_double_array(vec_col).alias("v"),
     )
     assigned, centroids = _kmeans_rounds(
-        vecs, k, iters, scale, None, single_group=True, route=route
+        vecs, k, iters, scale, single_group=True, route=route
     )
     return (
         assigned.select(
@@ -2045,53 +1779,20 @@ def assign_to_centroids(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Route vectors to their nearest FROZEN centroid — the
-    per-micro-batch ingest primitive of an IVF/SemDeDup layout. Default
-    implementation is the map-only Arrow/NumPy argmin kernel: the k x dim
-    centroid table (tiny at any corpus scale — it is the frozen quantizer
-    a store hands back) lands on the driver once and ships in the kernel
-    closure, so the batch pays ONE map stage — no broadcast-join, no
-    candidate rows, no exchange. ``SEMANTIC_ASSIGN_IMPL=sql`` keeps the
-    original broadcast-join + aggregate argmin as the bit-equality
-    reference. Same exact fixed-point distance + lower-cluster tie-break
-    contract either way, so an unrolled SQL oracle reproduces it
-    bit-for-bit."""
+    per-micro-batch ingest primitive of an IVF/SemDeDup layout — with the
+    map-only argmin kernel (``_route_frozen``): the batch pays ONE map
+    stage. Exact fixed-point distance + lower-cluster tie-break, so an
+    unrolled SQL oracle reproduces it bit-for-bit. Output: (id, cluster,
+    dist_fx, dist); an empty centroid table routes nothing."""
     v = vecs.select(
         F.lit(0).alias("grp"),
         F.col(id_col).alias("id"),
         to_double_array(vec_col).alias("v"),
     )
-    if _assign_impl() == "sql":
-        cents = centroids.select(F.lit(0).alias("grp"), "cluster", "c")
-        assigned = _argmin_assign(v, cents, dim)
-    else:
-        import numpy as np
-
-        rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
-        if not rows:
-            # no centroid to route onto -> no rows, like the sql join
-            return v.select(
-                "id",
-                F.lit(None).cast("int").alias("cluster"),
-                F.lit(None).cast("long").alias("dist_fx"),
-                F.lit(None).cast("double").alias("dist"),
-            ).limit(0)
-        rows.sort(key=lambda r: r["cluster"])
-        cent_map = {
-            0: (
-                np.array([r["cluster"] for r in rows], dtype=np.int64),
-                np.array([r["c"] for r in rows], dtype=np.float64),
-            )
-        }
-        assigned = v.mapInArrow(
-            _make_assign_fn(cent_map, None),
-            f"grp int, id {v.schema['id'].dataType.simpleString()},"
-            " cluster int, dist_fx long",
-        )
     return (
-        assigned
+        _route_frozen(v, centroids)
         .select("id", "cluster", "dist_fx")
         .withColumn(
             "dist", F.col("dist_fx").cast("double") / F.lit(100000000.0)
@@ -2200,10 +1901,10 @@ def pq_assignments(
     The memory math that motivates PQ at 100 TB: a 64-dim float32 vector
     (256 B) compresses to ``blocks`` codeword ids (4 B at blocks=4, k<=256)
     — a 64x shrink with distances still computable from codebook lookup
-    tables. Each block's training is the same broadcast-centroid Lloyd's
+    tables. Each block's training is the same driver-side-centroid Lloyd's
     pass as ``kmeans_lite`` (deterministic: lowest-id init, fixed-point
     distances, order-independent centroid means), so the whole operator is
-    engine-reproducible and the SQL twin unrolls per block x round.
+    engine-reproducible and the SQL oracle unrolls per block x round.
     """
     codes, _books = pq_model(embeddings, blocks, k, iters, id_col, vec_col)
     return codes
@@ -2237,8 +1938,8 @@ def pq_model(
     sub_len = dim // blocks
     # ONE scan fans every vector out to its block subvectors (block = the
     # k-means group), so all codebooks train together in kmeans_lite_grouped
-    # — per round: one broadcast join + one window + one aggregation, not
-    # ``blocks`` separate job chains
+    # — one partial-sums job per round for every block, not ``blocks``
+    # separate job chains
     slices = F.array(
         *[
             F.struct(
@@ -2942,7 +2643,7 @@ def _cell_screen_pairs(
     one COGROUPED Arrow kernel: ``d`` is (cell, id, v) [delta], ``c`` is
     (cell, cid, cv) [stored corpus members]; emits (out_id, canonical_id,
     max_cos) per leaked/duplicate delta row. Cells present on only one
-    side emit nothing — inner-join semantics, like the SQL plan.
+    side emit nothing — inner-join semantics.
 
     Group-input bound: unlike the self-sweep (``_cell_pair_dedup``,
     which hard-caps oversized cells via the tiled route), the screen's
@@ -3017,16 +2718,14 @@ def semantic_dedup(
     join — decide from the data, not a pinned constant). The same formula
     is SQL-expressible, so the oracle stays exact under auto-k (dynamic
     LIMIT on the init CTE). Assignment reuses the deterministic
-    fixed-point ``kmeans_lite`` so the oracle can unroll it. The hot pair stage runs a cheap prefilter — one dot product of
-    PRE-normalized vectors per pair (cosine re-derives both norms per
-    pair, 3x the flops) with a safety margin below the threshold — and
-    only surviving pairs get the exact canonical cosine that the oracle
-    compares, so output values are untouched. Output: one row per
-    duplicate (vec_id, canonical_id = lowest qualifying cell-mate,
-    max_cos).
+    fixed-point ``kmeans_lite`` training so the oracle can unroll it, and
+    the in-cell sweep computes the exact canonical cosine (half-up to 4)
+    the oracle compares (functions/argmin_kernel.py:cell_dup_sweep).
+    Output: one row per duplicate (vec_id, canonical_id = lowest
+    qualifying cell-mate, max_cos).
 
     ``route="hier"`` swaps every Lloyd round's flat argmin for the
-    two-level routed ``_argmin_assign_hier`` (centroids clustered into
+    two-level router of ``_kmeans_rounds`` (centroids clustered into
     ceil(sqrt(k)) super-cells; ~2*n*sqrt(k) distance evaluations per
     round instead of n*k) — with auto-k that cuts total assignment from
     Θ(n^1.5) to ~Θ(n^1.25), the right shape at 10^9+ vectors; still
@@ -3042,11 +2741,6 @@ def semantic_dedup(
     scale; ``route="flat"`` stays available as the explicit exact-audit
     variant.
     """
-    from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-        dot_col,
-        l2_normalize_col,
-    )
-
     n = None
     if k is None or route == "auto":
         # one cheap count (parquet footer metadata when unfiltered) buys
@@ -3058,67 +2752,16 @@ def semantic_dedup(
         route = resolve_semantic_route(
             route, n, route_threshold, spark=embeddings.sparkSession
         )
-    if _assign_impl() != "sql":
-        # in-cell sweep as ONE grouped Arrow kernel (guide §4.2): the
-        # exchange moves each member once, keyed by its cell, and the
-        # kernel computes the exact round4 cosines vectorized — no
-        # self-join, no per-pair interpreted folds, no second exchange
-        # for the dup-grain aggregate (a dup's matches all live in its
-        # own cell, so the rollup is in-kernel). The dot-product
-        # PREFILTER of the SQL plan is a conservative margin over the
-        # exact cosine, so sweeping exact cosines directly emits the
-        # identical row set — which is also precisely what the oracle's
-        # pair CTE computes. The assignment kernel ECHOES the vector
-        # (r14), so the old join back to the corpus for v is gone: the
-        # whole query is one map stage + one cell-keyed exchange.
-        vecs = embeddings.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        cent_map, hier_plans = _lloyd_cent_map(
-            vecs, k, iters, scale=6, single_group=True, route=route
-        )
-        id_t = vecs.schema["id"].dataType.simpleString()
-        m = vecs.mapInArrow(
-            _make_assign_v_fn(cent_map, hier_plans),
-            f"id {id_t}, cluster int, v array<double>",
-        )
-        return _cell_pair_dedup(m, threshold, out_id="vec_id", n_hint=n)
-    cells = kmeans_lite(
-        embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        route=route,
-    )
-    v = embeddings.select(
-        F.col(id_col).alias("id"),
-        to_double_array(vec_col).alias("v"),
-        l2_normalize_col(to_double_array(vec_col)).alias("nv"),
-    )
-    m = cells.select("id", "cluster").join(v, "id")
-    a, b = m.alias("a"), m.alias("b")
-    # margin covers normalized-dot vs exact-cosine float noise (~1e-15) by
-    # ten orders of magnitude; candidates below it cannot reach threshold
-    prefilter = dot_col(F.col("a.nv"), F.col("b.nv")) >= F.lit(threshold - 0.01)
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a.id") < F.col("b.id"))
-            & prefilter,
-        )
-        .select(
-            F.col("a.id").alias("keep_id"),
-            F.col("b.id").alias("dup_id"),
-            round_half_up(
-                cosine_similarity_col(F.col("a.v"), F.col("b.v")), 4
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= F.lit(threshold))
-    )
-    return pairs.groupBy(F.col("dup_id").alias("vec_id")).agg(
-        F.min("keep_id").alias("canonical_id"),
-        F.max("cos_sim").alias("max_cos"),
-    )
+    # in-cell sweep as ONE grouped Arrow kernel (guide §4.2): the exchange
+    # moves each member once, keyed by its cell, and the kernel computes
+    # the exact round4 cosines vectorized — no self-join, no per-pair
+    # interpreted folds, no second exchange for the dup-grain aggregate (a
+    # dup's matches all live in its own cell, so the rollup is in-kernel).
+    # The assignment kernel ECHOES the vector, so there is no join back
+    # to the corpus: the whole query is one map stage + one cell-keyed
+    # exchange.
+    cells, _ = _train_assign(embeddings, k, iters, id_col, vec_col, route)
+    return _cell_pair_dedup(cells, threshold, out_id="vec_id", n_hint=n)
 
 
 def semantic_dedup_screen(
@@ -3132,7 +2775,7 @@ def semantic_dedup_screen(
 ) -> DataFrame:
     """The pure per-batch screening half of incremental semantic dedup:
     route ``delta`` onto a FROZEN coarse quantizer (``centroids`` —
-    (cluster, c), one broadcast argmin, linear in the batch), then
+    (cluster, c), one map-only argmin stage, linear in the batch), then
     compare each delta vector ONLY against the stored corpus members of
     its routed cell. Cost per batch is |delta| x (k + avg cell size) —
     independent of corpus size, which is the whole point of the
@@ -3142,93 +2785,34 @@ def semantic_dedup_screen(
     ``corpus_cells`` is the stored index: (id_col, vec_col, cell_col) —
     cells were assigned by the SAME quantizer at ingest time, so no
     corpus-side recompute happens here. Same pair contract as
-    ``semantic_dedup``: pre-normalized dot prefilter with a safety
-    margin, exact canonical cosine (half-up to 4) for surviving pairs.
-    Output: (vec_id [delta ids], canonical_id = min matching corpus id,
-    max_cos). Within-batch twins are NOT screened against each other —
+    ``semantic_dedup``: the exact canonical cosine (half-up to 4) of each
+    delta vector against every member of its routed cell
+    (functions/argmin_kernel.py:cell_screen_sweep). Output: (vec_id
+    [delta ids], canonical_id = min matching corpus id, max_cos); an
+    empty centroid table screens nothing (no rows, same columns).
+    Within-batch twins are NOT screened against each other —
     they surface when the next batch screens against the appended
     corpus (the ``streaming/docs.py`` accumulation contract).
     """
-    from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-        dot_col,
-        l2_normalize_col,
+    # delta-vs-corpus sweep as ONE cogrouped Arrow kernel: both sides
+    # exchange once, keyed by the cell, and the kernel computes the exact
+    # round4 cosines vectorized. The routing kernel ECHOES the delta
+    # vector, so there is no join back to the delta for v: the delta side
+    # is one map stage straight into the cogroup exchange.
+    dvec = delta.select(
+        F.lit(0).alias("grp"),
+        F.col(id_col).alias("id"),
+        to_double_array(vec_col).alias("v"),
     )
-
-    if _assign_impl() != "sql":
-        # delta-vs-corpus sweep as ONE cogrouped Arrow kernel: both sides
-        # exchange once, keyed by the cell, and the kernel computes the
-        # exact round4 cosines vectorized (same prefilter-superset
-        # argument as semantic_dedup's kernel — identical row set). The
-        # routing kernel ECHOES the delta vector (r14), so the old join
-        # back to the delta for v is gone: the delta side is one map
-        # stage straight into the cogroup exchange.
-        import numpy as np
-
-        rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table
-        if not rows:
-            # no cell to route into -> nothing screens, like the sql join
-            return delta.select(
-                F.col(id_col),
-                F.col(id_col).alias("canonical_id"),
-                F.lit(None).cast("double").alias("max_cos"),
-            ).limit(0)
-        rows.sort(key=lambda r: r["cluster"])
-        cent_map = {
-            0: (
-                np.array([r["cluster"] for r in rows], dtype=np.int64),
-                np.array([r["c"] for r in rows], dtype=np.float64),
-            )
-        }
-        dvec = delta.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        id_t = dvec.schema["id"].dataType.simpleString()
-        dd = dvec.mapInArrow(
-            _make_assign_v_fn(cent_map, None),
-            f"id {id_t}, cluster int, v array<double>",
-        ).select(F.col("cluster").alias("cell"), "id", "v")
-        cc = corpus_cells.select(
-            F.col(cell_col).alias("cell"),
-            F.col(id_col).alias("cid"),
-            to_double_array(vec_col).alias("cv"),
-        )
-        return _cell_screen_pairs(dd, cc, threshold, out_id=id_col)
-    routed = assign_to_centroids(
-        delta, centroids, id_col=id_col, vec_col=vec_col
-    ).select("id", F.col("cluster").alias(cell_col))
-    d = routed.join(
-        delta.select(
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-            l2_normalize_col(to_double_array(vec_col)).alias("nv"),
-        ),
-        "id",
+    dd = _route_frozen(dvec, centroids, echo_v=True).select(
+        F.col("cluster").alias("cell"), "id", "v"
     )
-    m = corpus_cells.select(
+    cc = corpus_cells.select(
+        F.col(cell_col).alias("cell"),
         F.col(id_col).alias("cid"),
-        F.col(cell_col).alias(cell_col),
         to_double_array(vec_col).alias("cv"),
-        l2_normalize_col(to_double_array(vec_col)).alias("cnv"),
     )
-    prefilter = dot_col(F.col("nv"), F.col("cnv")) >= F.lit(threshold - 0.01)
-    pairs = (
-        d.join(m, [cell_col])
-        .filter(prefilter)
-        .select(
-            F.col("id").alias("dup_id"),
-            F.col("cid").alias("keep_id"),
-            round_half_up(
-                cosine_similarity_col(F.col("v"), F.col("cv")), 4
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= F.lit(threshold))
-    )
-    return pairs.groupBy(F.col("dup_id").alias(id_col)).agg(
-        F.min("keep_id").alias("canonical_id"),
-        F.max("cos_sim").alias("max_cos"),
-    )
+    return _cell_screen_pairs(dd, cc, threshold, out_id=id_col)
 
 
 def semantic_dedup_incremental(
@@ -3263,39 +2847,14 @@ def semantic_dedup_incremental(
         route = resolve_semantic_route(
             route, n, route_threshold, spark=corpus.sparkSession
         )
-    if _assign_impl() != "sql":
-        # the corpus-side assignment kernel echoes the vector (r14), so
-        # corpus_cells needs no join back to the corpus for vec_col
-        vecs = corpus.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        cent_map, hier_plans = _lloyd_cent_map(
-            vecs, k, iters, scale=6, single_group=True, route=route
-        )
-        id_t = vecs.schema["id"].dataType.simpleString()
-        corpus_cells = vecs.mapInArrow(
-            _make_assign_v_fn(cent_map, hier_plans),
-            f"id {id_t}, cluster int, v array<double>",
-        ).select(
-            F.col("id").alias(id_col),
-            F.col("v").alias(vec_col),
-            F.col("cluster").alias("cell"),
-        )
-        centroids = _centroids_df(
-            corpus.sparkSession, cent_map, vecs.schema["grp"].dataType
-        ).select("cluster", "c")
-    else:
-        assigned, centroids = kmeans_with_centroids(
-            corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-            route=route,
-        )
-        corpus_cells = assigned.select(
-            F.col("id").alias(id_col), F.col("cluster").alias("cell")
-        ).join(
-            corpus.select(F.col(id_col), F.col(vec_col)), id_col
-        )
+    # the corpus-side assignment kernel echoes the vector, so
+    # corpus_cells needs no join back to the corpus for vec_col
+    cells, centroids = _train_assign(corpus, k, iters, id_col, vec_col, route)
+    corpus_cells = cells.select(
+        F.col("id").alias(id_col),
+        F.col("v").alias(vec_col),
+        F.col("cluster").alias("cell"),
+    )
     return semantic_dedup_screen(
         corpus_cells,
         delta,
@@ -3325,7 +2884,7 @@ def semantic_decontaminate(
     EMBEDDING cosine. Cluster the eval set once (it is the small,
     frozen side — thousands of rows against a 100 TB train corpus),
     route every train vector onto the frozen eval quantizer (one
-    broadcast argmin, linear in train), and compare each train vector
+    map-only argmin, linear in train), and compare each train vector
     only against its routed cell's eval members — exactly the
     ``semantic_dedup_incremental`` screen with corpus=eval, delta=train,
     so cost is |train| x (k + avg cell size), never |train| x |eval|.
@@ -3368,7 +2927,7 @@ def semantic_decontaminate_from_index(
     frozen between benchmark re-publications — so a deployment builds
     the index once (streaming/embeddings.py:build_eval_index +
     save_eval_index) and every later curation run screens through this
-    entry point: one broadcast argmin onto the stored centroids plus
+    entry point: one map-only argmin onto the stored centroids plus
     the in-cell compare, nothing else. Output — and therefore any
     oracle — is IDENTICAL to the recompute form when the index was
     built with the same (k, iters, route) pricing, because storage
@@ -3527,7 +3086,11 @@ def tune_bands(
     exact pair baseline once (the lossless inverted-index path, never
     all-pairs) ON THE TUNING SAMPLE — a deployment tunes on a sample,
     never the production corpus — then one band-keyed self-join + two
-    count aggregates per candidate banding."""
+    count aggregates per candidate banding. Every candidate must divide
+    ``num_perm`` (``_check_bands``); a bad one raises ``ValueError``
+    before any job runs."""
+    for bands in candidate_bands:
+        _check_bands(num_perm, bands)
     sigs = minhash_signatures(
         docs, id_col=id_col, text_col=text_col, n=n,
         num_perm=num_perm, seed=seed,
@@ -3642,14 +3205,9 @@ def lsh_band_stats(
     band explode, then two hash aggregations over BUCKET-sized frames —
     the corpus pair join itself is never executed. Integer-exact
     throughout (the pair formula uses integer division; the product of
-    two consecutive integers is even, so nothing truncates).
+    two consecutive integers is even, so nothing truncates). A ``bands``
+    that does not divide ``num_perm`` raises ``ValueError`` (``_check_bands``).
     """
-    if num_perm % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_perm={num_perm}: _band_rows "
-            "would silently drop the trailing "
-            f"{num_perm % bands} permutations and audit a weaker sketch"
-        )
     sigs = minhash_signatures(
         docs, id_col=id_col, text_col=text_col, n=n, num_perm=num_perm, seed=seed
     )
@@ -3672,133 +3230,6 @@ def lsh_band_stats(
             .alias("n_candidate_pairs"),
         )
     )
-
-
-def tune_lsh_bands(
-    docs: DataFrame,
-    candidates: list[int] | None = None,
-    target_recall_permille: int = 900,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    threshold: float = 0.8,
-    seed: int = 42,
-) -> tuple[int, int, int]:
-    """Recall-driven band-count selection — the measured-decision pattern
-    (``tune_nprobe``, ``auto_salted_join``, ``auto_semantic_k``) applied
-    to MinHash LSH: for each candidate band count (fewer bands = more
-    rows per band = tighter buckets = fewer candidates but lower
-    recall), audit the verified LSH pair set against the exact
-    inverted-index Jaccard ground truth ON A SAMPLE, and return the
-    CHEAPEST configuration meeting the recall target as
-    (bands, recall_permille, candidate_mass). This is how a deployment
-    picks its cost/recall point from data instead of the 16-band
-    default; the exact baseline runs once and is reused per candidate.
-
-    Candidates are evaluated cheapest-first (ascending bands), so the
-    first configuration to meet the target is returned; if none does,
-    the best-recall one is. ``candidate_mass`` (sum of per-bucket
-    pair counts, from the same aggregate as ``lsh_band_stats``) is the
-    predicted join cost at corpus scale — the number a capacity plan
-    multiplies out before committing to a 100-TB run.
-
-    The corpus-wide signature aggregate (the expensive stage) and the
-    exact ground truth are each built ONCE and checkpointed; every
-    candidate band count only re-derives band rows from the stored
-    signatures and verifies its (vanishing-fraction) candidate pairs —
-    the same candidate+verify semantics as ``minhash_near_dup_pairs``,
-    without re-shingling the corpus per configuration.
-    """
-    if candidates is None:
-        candidates = [b for b in (4, 8, 16, 32) if num_perm % b == 0]
-    else:
-        bad = [b for b in candidates if b <= 0 or num_perm % b != 0]
-        if bad:
-            raise ValueError(
-                f"candidate band counts {bad} do not divide "
-                f"num_perm={num_perm}: each would silently audit a "
-                "weaker sketch (trailing permutations dropped)"
-            )
-    exact = (
-        ngram_jaccard_pairs(
-            docs, id_col=id_col, text_col=text_col, n=n, threshold=threshold
-        )
-        .select("doc_id_a", "doc_id_b")
-        .localCheckpoint(eager=True)  # ground truth built once
-    )
-    total = exact.count()
-    sigs = minhash_signatures(
-        docs, id_col=id_col, text_col=text_col, n=n, num_perm=num_perm, seed=seed
-    ).localCheckpoint(eager=True)  # signatures shared by every candidate
-    txt = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    best: tuple[int, int, int] | None = None
-    for bands in sorted(candidates):
-        band_rows = _band_rows(sigs, num_perm, bands)
-        left, right = band_rows.alias("x"), band_rows.alias("y")
-        cand = (
-            left.join(
-                right,
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.band_hash") == F.col("y.band_hash"))
-                & (F.col("x.id") < F.col("y.id")),
-            )
-            .select(
-                F.col("x.id").alias("doc_id_a"), F.col("y.id").alias("doc_id_b")
-            )
-            .distinct()
-        )
-        joined = cand.join(
-            txt.withColumnsRenamed({"id": "doc_id_a", "t": "t_a"}), "doc_id_a"
-        ).join(
-            txt.withColumnsRenamed({"id": "doc_id_b", "t": "t_b"}), "doc_id_b"
-        )
-        if _assign_impl() != "sql":
-            found = _pair_jaccard_verify(
-                joined.select("doc_id_a", "doc_id_b", "t_a", "t_b"),
-                n,
-                "doc_id_a",
-                "doc_id_b",
-            ).filter(F.col("jaccard") >= threshold).select(
-                "doc_id_a", "doc_id_b"
-            )
-        else:
-            found = (
-                joined
-                .select(
-                    "doc_id_a",
-                    "doc_id_b",
-                    round_half_up(
-                        jaccard_cols(
-                            shingles_col(tokens_col("t_a"), n),
-                            shingles_col(tokens_col("t_b"), n),
-                        ),
-                        4,
-                    ).alias("jaccard"),
-                )
-                .filter(F.col("jaccard") >= threshold)
-                .select("doc_id_a", "doc_id_b")
-            )
-        recall = (
-            1000
-            if total == 0
-            else exact.join(found, ["doc_id_a", "doc_id_b"]).count() * 1000 // total
-        )
-        # integer `div` + long sum: `/` would go double-inexact past 2^53,
-        # the hub-bucket magnitudes this number exists to predict
-        mass = (
-            band_rows.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("sz"))
-            .agg(F.sum(F.expr("(sz * (sz - 1)) div 2")).cast("long"))
-            .first()[0]
-            or 0
-        )
-        if best is None or recall > best[1]:
-            best = (bands, recall, int(mass))
-        if recall >= target_recall_permille:
-            return bands, recall, int(mass)
-    assert best is not None
-    return best
 
 
 def containment_pairs(
@@ -3939,7 +3370,7 @@ def kcenter_select(
     bounded-driver-state exception as the union-find edge collect,
     ``operators/dedup.py``) and re-enter each following round as an
     array literal consumed by the compact zip_with/aggregate distance
-    fold (bit-identical to the unrolled chain; see ``_fx_sq_dist``).
+    fold (``_fx_sq_dist``).
     The running-min ``md`` column is MATERIALIZED (localCheckpoint)
     every round, so round r's plan contains exactly ONE distance
     expression against the stored column — O(k) total plan/codegen
@@ -3973,13 +3404,11 @@ def kcenter_select(
     have_md = False
     for rank in range(2, k + 2):
         lit_vec = F.array(*[F.lit(float(x)) for x in last_vec])
-        # dim=None -> the compact zip_with/aggregate fold (bit-identical
-        # to the unrolled chain): the loop pays plan analysis + codegen k
-        # times, and the unrolled 64-term tree costs ~1.5 s/round there vs
-        # ~0.25 s for the fold. One-shot ops keep the unrolled codegen'd
-        # variant; the sequential loop trades per-row codegen for O(1)
-        # plan size per round.
-        d = _fx_sq_dist(F.col("v"), lit_vec, None)
+        # the compact zip_with/aggregate fold: the loop pays plan
+        # analysis + codegen k times, and an unrolled 64-term tree cost
+        # ~1.5 s/round here vs ~0.25 s for the fold (O(1) plan size per
+        # round).
+        d = _fx_sq_dist(F.col("v"), lit_vec)
         # Lazy checkpoint: the top-1 job below evaluates every partition
         # (global TakeOrdered), which materializes the checkpoint in the
         # SAME job — one Spark job per round instead of two.
@@ -4045,7 +3474,7 @@ def kcenter_vs_random_audit(
         F.col("id").alias("pid"),
         # fold form: bit-identical, ~64x smaller expression tree (see
         # label_separation_audit — this audit is likewise planning-bound)
-        _fx_sq_dist(F.col("v"), F.col("cv"), None).alias("dist"),
+        _fx_sq_dist(F.col("v"), F.col("cv")).alias("dist"),
     )
     m = d.groupBy("method", "pid").agg(F.min("dist").alias("mind"))
     return m.groupBy("method").agg(
@@ -4107,14 +3536,11 @@ def label_separation_audit(
         base.join(F.broadcast(cent_arr), "label")
         .select(
             "label",
-            # fold form (dim=None): bit-identical to the unrolled chain
-            # (int64 addition is associative — _fx_sq_dist docstring) but
-            # a ~64x smaller expression tree; this query is DRIVER-bound
-            # (measured 0.8 s of job wall inside 4.5 s: Catalyst
-            # re-optimizes three unrolled 64-term trees per AQE stage),
-            # while its row counts (corpus x 1, labels^2) are far too
-            # small for interpreted-fold eval cost to matter
-            _fx_sq_dist(F.col("v"), F.col("c"), None).alias("dist"),
+            # the fold, not a per-dimension unroll: this query is
+            # DRIVER-bound (Catalyst re-optimizes each expression tree
+            # per AQE stage), and its row counts (corpus x 1, labels^2)
+            # are far too small for interpreted-fold eval cost to matter
+            _fx_sq_dist(F.col("v"), F.col("c")).alias("dist"),
         )
         .groupBy("label")
         .agg(
@@ -4134,7 +3560,7 @@ def label_separation_audit(
         .select(
             "la",
             "lb",
-            _fx_sq_dist(F.col("ca"), F.col("cb"), None).alias("dist"),
+            _fx_sq_dist(F.col("ca"), F.col("cb")).alias("dist"),
         )
     )
     bm = bd.groupBy(F.col("la").alias("label")).agg(
@@ -4507,7 +3933,7 @@ def mmr_select(
     q_lit = F.array(*[F.lit(float(x)) for x in qv])
     cand = (
         base.filter(F.col("id") != qid)
-        .withColumn("dq", _fx_sq_dist(F.col("v"), q_lit, None))
+        .withColumn("dq", _fx_sq_dist(F.col("v"), q_lit))
         .localCheckpoint(eager=True)  # dq computed exactly once
     )
     lam, mu = lambda_permille, 1000 - lambda_permille
@@ -4524,7 +3950,7 @@ def mmr_select(
             last = top[0]
             continue
         lit_vec = F.array(*[F.lit(float(x)) for x in last["v"]])
-        d = _fx_sq_dist(F.col("v"), lit_vec, None)
+        d = _fx_sq_dist(F.col("v"), lit_vec)
         cur = (
             cur.filter(F.col("id") != last["id"])
             .withColumn(

@@ -4562,8 +4562,8 @@ def _kmeans_cte_prefix_hier(
     inner_iters: int = 2,
 ) -> str:
     """Unrolled TWO-LEVEL-routed kmeans CTE chain — the SQL twin of
-    ``kmeans_lite(route="hier")`` (operators/similarity.py:
-    _argmin_assign_hier), ending at assignment CTE ``a{iters}``
+    ``kmeans_lite(route="hier")`` (functions/argmin_kernel.py:
+    hier_argmin), ending at assignment CTE ``a{iters}``
     (vec_id, cluster, fx) exactly like ``_kmeans_cte_prefix`` so the
     same final selects compose.
 
@@ -4973,7 +4973,7 @@ def _semantic_dedup_injected(spark: SparkSession, sf_dir: str, route: str) -> Da
     "emb_semantic_dedup_hier",
     _semantic_dedup_oracle_sql(route="hier"),
     doc="The 100-TB-scale routing twin of emb_semantic_dedup "
-    "(operators/similarity.py:_argmin_assign_hier): every Lloyd round "
+    "(functions/argmin_kernel.py:hier_argmin): every Lloyd round "
     "routes vectors TWO-LEVEL — a tiny inner k-means clusters the "
     "centroid table itself into k2=ceil(sqrt(k)) super-cells, each "
     "vector picks its nearest non-empty super-cell (n x k2 distances) "
@@ -5000,7 +5000,7 @@ SELECT CAST(cluster AS BIGINT) AS cluster,
        {_s4('CAST(sum(fx) AS DOUBLE) / 100000000.0 / count(*)')} AS avg_sq_dist
 FROM a3 GROUP BY cluster""",
     doc="kmeans_lite with two-level centroid routing "
-    "(operators/similarity.py:_argmin_assign_hier) at fixed k=8 "
+    "(functions/argmin_kernel.py:hier_argmin) at fixed k=8 "
     "(k2=3 super-cells) — the structural oracle pair for the hier "
     "assignment path itself, independent of the semantic-dedup sweep: "
     "cluster sizes + mean within-cluster squared distance, SQL-unrolled "
@@ -5096,7 +5096,7 @@ GROUP BY dup_id"""
     "quantizer trains on the CORPUS only (auto-k from the corpus "
     "count, TWO-LEVEL-routed training — the scale-optimal config), "
     "the injected-twin delta is ROUTED onto the frozen centroids "
-    "(one broadcast argmin, linear in the delta), and each delta "
+    "(one map-only argmin, linear in the delta), and each delta "
     "vector is screened only against the stored members of its "
     "routed cell — |delta|-proportional cost vs the batch twin's "
     "full re-cluster of corpus+delta. The oracle unrolls hier corpus "
@@ -5450,8 +5450,8 @@ def q_emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     "emb_kmeans_clusters",
     _kmeans_oracle_sql(),
     doc="Deterministic Lloyd's k-means over embeddings (k=8, 3 rounds): "
-    "broadcast-centroid assignment + one (cluster, dim) aggregation per "
-    "round, eager localCheckpoint between rounds "
+    "map-only assignment kernel against the driver-held centroid table + "
+    "one partial-sums job per recompute round "
     "(operators/similarity.py:kmeans_lite). Output: cluster sizes and "
     "mean within-cluster squared distance. The SQL oracle UNROLLS the "
     "three rounds as chained CTEs — possible because every round is "
@@ -5510,7 +5510,7 @@ FROM best
     "the contingency-based cluster-grain view. Emits the majority "
     "COUNT, not the label identity, so label-count ties cannot make "
     "the output ambiguous. Scale shape: the kmeans rounds themselves "
-    "(broadcast-centroid map stages), one (cluster, label) contingency "
+    "(map-only assignment stages), one (cluster, label) contingency "
     "aggregate, one cluster-grain max/sum rollup — the contingency "
     "table is (k x labels)-sized, never corpus-sized.",
 )
@@ -5610,7 +5610,7 @@ FROM ts FULL JOIN ds USING (cluster) CROSS JOIN tt CROSS JOIN td
     "(operators/similarity.py:cell_drift): the coarse quantizer trains on "
     "the deterministic 'already ingested' 80% slice, the remaining 20% "
     "routes onto the FROZEN centroids exactly as a streaming ingest does "
-    "between re-trains (assign_to_centroids: broadcast argmin, no "
+    "between re-trains (assign_to_centroids: map-only argmin, no "
     "re-training), and each cell compares occupancy share + mean exact "
     "fixed-point quantization error across the two populations — the "
     "re-train/re-index trigger a frozen production ANN/SemDeDup index "

@@ -323,23 +323,41 @@ def _split_bytes(spark: SparkSession) -> int:
     return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
-def _grown_bucket_count(num_buckets: int, bucket_bytes: dict, split: int) -> int:
+def _grown_bucket_count(
+    num_buckets: int, bucket_bytes: dict, bucket_rows: dict, split: int
+) -> int:
     """The bucket count the next commit writes: unchanged while the largest
     bucket fits one scan split, else the smallest power-of-two multiple of
     it that brings the largest bucket under the split (hashing spreads a
-    bucket's rows evenly over its ``m`` children)."""
-    largest = max(bucket_bytes.values(), default=0)
+    bucket's rows evenly over its ``m`` children). Also unchanged when no
+    growth can bring that bucket under the split: its rows spread over at
+    most its row count of children, so a bucket whose rows average more
+    than a split (one key's row larger than the split, say) stays over it
+    at any count."""
+    if not bucket_bytes:
+        return num_buckets
+    key = max(bucket_bytes, key=bucket_bytes.get)
+    largest = bucket_bytes[key]
+    rows = bucket_rows.get(key)
+    if rows is not None and largest > rows * split:
+        return num_buckets
     m = 1
     while largest > m * split:
         m *= 2
     return num_buckets * m
 
 
-def _data_bytes(d: str) -> int:
-    """Bytes of the data files in a bucket directory (Spark skips ``.`` and
-    ``_`` files — checksums, markers — when it scans, so they do not count)."""
-    return sum(
-        e.stat().st_size for e in os.scandir(d) if not e.name.startswith((".", "_"))
+def _data_stats(d: str) -> tuple[int, int]:
+    """(bytes, rows) of the data files in a bucket directory: file sizes
+    plus parquet footer row counts, read on the driver (Spark skips ``.``
+    and ``_`` files — checksums, markers — when it scans, so they do not
+    count)."""
+    import pyarrow.parquet as pq
+
+    files = [e for e in os.scandir(d) if not e.name.startswith((".", "_"))]
+    return (
+        sum(e.stat().st_size for e in files),
+        sum(pq.read_metadata(e.path).num_rows for e in files),
     )
 
 
@@ -354,12 +372,14 @@ def _publish(
     """Install the staged ``_bucket=N`` directories of every touched bucket
     as version directories and publish them in one manifest commit. A
     touched bucket with nothing staged has no rows left and leaves the
-    manifest. Each installed bucket's data bytes go into the manifest's
-    ``bucket_bytes`` for the next merge's split decision (a driver-side
-    stat of the files just renamed). Returns the directories installed."""
+    manifest. Each installed bucket's data bytes and rows go into the
+    manifest's ``bucket_bytes`` and ``bucket_rows`` for the next merge's
+    split decision (a driver-side stat and footer read of the files just
+    renamed). Returns the directories installed."""
     version = int(manifest["version"]) + 1
     buckets = dict(manifest["buckets"])
     sizes = dict(manifest.get("bucket_bytes", {}))
+    rows = dict(manifest.get("bucket_rows", {}))
     replaced = []
     written = 0
     for bk in touched:
@@ -371,15 +391,16 @@ def _publish(
             new_dir = os.path.join(path, _bucket_dirname(bk, version))
             os.rename(src, new_dir)
             buckets[key] = os.path.basename(new_dir)
-            sizes[key] = _data_bytes(new_dir)
+            sizes[key], rows[key] = _data_stats(new_dir)
             written += 1
         else:
             buckets.pop(key, None)
             sizes.pop(key, None)
+            rows.pop(key, None)
     _commit_manifest(
         path,
         {"version": version, "num_buckets": num_buckets, "buckets": buckets,
-         "bucket_bytes": sizes, "garbage": replaced,
+         "bucket_bytes": sizes, "bucket_rows": rows, "garbage": replaced,
          "history": _rotate_history(manifest, retain_snapshots)},
     )
     shutil.rmtree(staged, ignore_errors=True)
@@ -418,8 +439,10 @@ def merge_warehouse_batch(
     commit. When the largest bucket exceeds one scan split, the next merge
     re-buckets the whole table in its one atomic commit: the count grows
     to the smallest power-of-two multiple that brings the largest bucket
-    under the split. As ``pmod(h, m*N) = pmod(h, N) mod N``, old bucket
-    ``b``'s rows land only in new buckets ``b + k*N``; the rewrite is this
+    under the split, unless its rows average more than a split, which no
+    count can bring under it (``_grown_bucket_count``). As
+    ``pmod(h, m*N) = pmod(h, N) mod N``, old bucket ``b``'s rows land
+    only in new buckets ``b + k*N``; the rewrite is this
     same touched-bucket path with every bucket touched under the new
     modulus. The decision reads only the manifest: no Spark job, no
     listing.
@@ -463,7 +486,10 @@ def merge_warehouse_batch(
         _commit_manifest(path, manifest)
     old_n = int(manifest["num_buckets"])
     num_buckets = _grown_bucket_count(
-        old_n, manifest.get("bucket_bytes", {}), _split_bytes(spark)
+        old_n,
+        manifest.get("bucket_bytes", {}),
+        manifest.get("bucket_rows", {}),
+        _split_bytes(spark),
     )
 
     # entry GC: unreferenced versions are aged-out garbage (replaced a

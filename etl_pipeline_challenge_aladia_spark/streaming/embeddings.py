@@ -2,7 +2,7 @@
 
 The online half of the IVF/SemDeDup serving story: an index is trained
 once (``kmeans_with_centroids``), then a continuous stream of new
-vectors is ROUTED — not re-trained — one broadcast argmin per
+vectors is ROUTED — not re-trained — one map-only argmin per
 micro-batch (``assign_to_centroids``), appended into a cell-partitioned
 layout (scans for "probe cells c3, c7" prune to those directories), and
 monitored: per-batch per-cell occupancy + quantization error land in a
@@ -25,7 +25,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
 
 from etl_pipeline_challenge_aladia_spark.operators.similarity import (
     assign_to_centroids,
@@ -193,14 +192,14 @@ def build_eval_index(
 ) -> tuple[DataFrame, DataFrame]:
     """Cluster the eval/benchmark set once into the frozen index the
     decontamination screen routes against: (eval_cells (vec_id,
-    embedding, cell), centroids (cluster, c)). Same auto-k /
-    auto-route pricing as ``semantic_dedup_incremental`` (the batch
-    twin), both checkpointed — the eval side is small and read by
-    every micro-batch."""
-    import etl_pipeline_challenge_aladia_spark.operators.similarity as sim
+    embedding array<double>, cell int), centroids (cluster, c)). Same
+    auto-k / auto-route pricing and training as
+    ``semantic_dedup_incremental`` (the batch twin); the cells are
+    checkpointed — the eval side is small and read by every
+    micro-batch."""
     from etl_pipeline_challenge_aladia_spark.operators.similarity import (
+        _train_assign,
         auto_semantic_k,
-        kmeans_with_centroids,
         resolve_semantic_route,
     )
 
@@ -209,48 +208,16 @@ def build_eval_index(
         if k is None:
             k = max(32, min(max(n, 1), auto_semantic_k(n, iters)))
         route = resolve_semantic_route(route, n, spark=eval_set.sparkSession)
-    if sim._assign_impl() != "sql":
-        # fused build (r14): the assignment kernel echoes the vector, so
-        # cells needs no join back to the eval set, and the centroid
-        # table is rebuilt from the driver-local map (a LocalTableScan —
-        # no lineage to cut, so no checkpoint job for it either)
-        from etl_pipeline_challenge_aladia_spark.functions.vectors import (
-            to_double_array,
-        )
-
-        vecs = eval_set.select(
-            F.lit(0).alias("grp"),
-            F.col(id_col).alias("id"),
-            to_double_array(vec_col).alias("v"),
-        )
-        cent_map, hier_plans = sim._lloyd_cent_map(
-            vecs, k, iters, scale=6, single_group=True, route=route
-        )
-        id_t = vecs.schema["id"].dataType.simpleString()
-        cells = vecs.mapInArrow(
-            sim._make_assign_v_fn(cent_map, hier_plans),
-            f"id {id_t}, cluster int, v array<double>",
-        ).select(
-            F.col("id").alias(id_col),
-            F.col("v").alias(vec_col),
-            F.col("cluster").alias("cell"),
-        ).localCheckpoint(eager=True)
-        centroids = sim._centroids_df(
-            eval_set.sparkSession, cent_map, vecs.schema["grp"].dataType
-        ).select("cluster", "c")
-        return cells, centroids
-    assigned, centroids = kmeans_with_centroids(
-        eval_set, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        route=route,
-    )
-    cells = (
-        assigned.select(
-            F.col("id").alias(id_col), F.col("cluster").alias("cell")
-        )
-        .join(eval_set.select(id_col, vec_col), id_col)
-        .localCheckpoint(eager=True)
-    )
-    return cells, centroids.localCheckpoint(eager=True)
+    # the assignment kernel echoes the vector, so cells needs no join back
+    # to the eval set; the centroid table is a driver-local relation (no
+    # lineage to cut, so no checkpoint job for it either)
+    cells, centroids = _train_assign(eval_set, k, iters, id_col, vec_col, route)
+    cells = cells.select(
+        F.col("id").alias(id_col),
+        F.col("v").alias(vec_col),
+        F.col("cluster").alias("cell"),
+    ).localCheckpoint(eager=True)
+    return cells, centroids
 
 
 def save_eval_index(
@@ -267,18 +234,6 @@ def save_eval_index(
     pointer, a half-written new generation is invisible until the flip,
     and a pinned version reproduces any historical screen."""
     vdir = os.path.join(store_path, f"version={version}")
-    # one persisted layout whichever build wrote the cells: the Arrow
-    # build's (id, vector as array<double>, cell int). The sql build
-    # emits (id, cell, vector) in the source's element type.
-    vec = next(
-        f.name for f in eval_cells.schema if isinstance(f.dataType, ArrayType)
-    )
-    idc = next(c for c in eval_cells.columns if c not in (vec, "cell"))
-    eval_cells = eval_cells.select(
-        idc,
-        F.col(vec).cast("array<double>").alias(vec),
-        F.col("cell").cast("int").alias("cell"),
-    )
     # an eval index is METADATA-SIZED by contract (a benchmark set of
     # thousands of rows against a 100 TB corpus): one file per layer, so
     # the publish commits one object and every read-back lists one file
@@ -327,7 +282,7 @@ def make_decontamination_ingest_processor(
     """Ingest-time benchmark decontamination — the streaming twin of
     ``operators/similarity.py:semantic_decontaminate``: every arriving
     training micro-batch is screened against the FROZEN eval index
-    (one broadcast argmin + in-cell compare, linear in the batch) and
+    (one map-only argmin + in-cell compare, linear in the batch) and
     leaked rows land in a ``batch=<id>``-keyed report.
 
     Contrast with the dedup ingest (``make_semantic_dedup_ingest_
@@ -540,7 +495,7 @@ def make_monitored_ingest_processor(
     the index keeps per-batch cell layouts (a background re-index can
     rewrite old batches cell-by-cell without blocking ingest).
 
-    Scale: routing is the linear broadcast argmin; drift works on
+    Scale: routing is the linear map-only argmin; drift works on
     k-bounded stats rows; only an actual retrain rescans the index —
     exactly as often as the threshold fires."""
 

@@ -1,11 +1,12 @@
-"""Arrow/NumPy assignment-kernel parity: the optimization contract.
+"""Kernel parity: each similarity operator against its expression plan.
 
-Round 13 swapped the fixed-point argmin assignment (and the in-cell
-cosine pair sweeps) from Catalyst expression plans to Arrow-batched
-NumPy kernels (functions/argmin_kernel.py). The optimization is only
-admissible because the kernels reproduce the JVM expressions
-BIT-FOR-BIT — these tests pin that equality by running both physical
-implementations (``SEMANTIC_ASSIGN_IMPL=sql`` vs the default ``arrow``)
+The fixed-point argmin assignment, the Lloyd loop, the in-cell cosine
+pair sweeps and the MinHash signature/verify stages run as Arrow-batched
+NumPy kernels (functions/argmin_kernel.py, operators/similarity.py). A
+kernel is admissible only because it reproduces the Catalyst expression
+plan the SQL oracles unroll BIT-FOR-BIT. These tests pin that equality:
+each runs a package operator as shipped and again with its kernels
+swapped for the expression-plan references in ``tests/reference_ops.py``,
 over data engineered to hit the edge semantics: exact cosine ties,
 lowest-id tie-breaks, empty clusters, multi-group (PQ) training, and
 the two-level (hier) router."""
@@ -21,6 +22,8 @@ from pyspark.sql import types as T
 
 import etl_pipeline_challenge_aladia_spark.operators.similarity as sim
 from etl_pipeline_challenge_aladia_spark.functions import argmin_kernel as K
+
+import reference_ops as ref
 
 
 @pytest.fixture()
@@ -52,17 +55,19 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _both(monkeypatch, fn):
-    monkeypatch.setenv(sim.ASSIGN_IMPL_ENV, "sql")
-    a = _rows(fn())
-    monkeypatch.setenv(sim.ASSIGN_IMPL_ENV, "arrow")
-    b = _rows(fn())
-    return a, b
+def _with_reference(monkeypatch, fn):
+    """(rows of ``fn()`` with the package kernels, rows of ``fn()`` with
+    every kernel seam swapped for its ``reference_ops`` expression plan)."""
+    got = _rows(fn())
+    with monkeypatch.context() as m:
+        ref.use_references(m)
+        want = _rows(fn())
+    return got, want
 
 
 def test_kmeans_flat_and_hier_parity(monkeypatch, planted):
     for route in ("flat", "hier"):
-        a, b = _both(
+        a, b = _with_reference(
             monkeypatch,
             lambda: sim.kmeans_lite(planted, k=9, iters=3, route=route),
         )
@@ -70,39 +75,54 @@ def test_kmeans_flat_and_hier_parity(monkeypatch, planted):
 
 
 def test_grouped_pq_parity(monkeypatch, planted):
-    a, b = _both(
+    a, b = _with_reference(
         monkeypatch, lambda: sim.pq_model(planted, blocks=4, k=3, iters=2)[0]
     )
     assert a == b and len(a) > 0
-    a, b = _both(
+    a, b = _with_reference(
         monkeypatch, lambda: sim.pq_model(planted, blocks=4, k=3, iters=2)[1]
     )
     assert a == b
 
 
-def test_assign_to_centroids_parity(monkeypatch, planted):
-    empty_schemas = []
-
+def test_assign_to_centroids_parity(monkeypatch, spark, planted):
     def run():
         _, cents = sim.kmeans_with_centroids(planted, k=5, iters=2)
         delta = planted.filter(F.col("vec_id") % 2 == 0)
-        # an empty centroid table routes nothing, on either path
-        empty = sim.assign_to_centroids(delta, cents.limit(0))
-        assert empty.collect() == []
-        empty_schemas.append([(f.name, f.dataType) for f in empty.schema])
         return sim.assign_to_centroids(delta, cents)
 
-    a, b = _both(monkeypatch, run)
+    a, b = _with_reference(monkeypatch, run)
     assert a == b and len(a) > 0
-    assert empty_schemas[0] == empty_schemas[1]
+    # an exact distance tie goes to the lower cluster id, whatever the
+    # centroid table's row order
+    tie_cents = spark.createDataFrame(
+        [(2, [2.0, 0.0]), (1, [0.0, 0.0])], "cluster int, c array<double>"
+    )
+    tie_vecs = spark.createDataFrame(
+        [(7, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    a, b = _with_reference(
+        monkeypatch, lambda: sim.assign_to_centroids(tie_vecs, tie_cents)
+    )
+    assert a == b == [(7, 1, 100_000_000, 1.0)]
+    # an empty centroid table routes nothing, with the normal columns
+    _, cents = sim.kmeans_with_centroids(planted, k=5, iters=2)
+    empty = sim.assign_to_centroids(planted, cents.limit(0))
+    assert empty.collect() == []
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        ("id", T.LongType()),
+        ("cluster", T.IntegerType()),
+        ("dist_fx", T.LongType()),
+        ("dist", T.DoubleType()),
+    ]
 
 
 def test_semantic_dedup_pair_sweep_parity(monkeypatch, planted):
-    """The grouped pair kernel emits exactly the SQL plan's rows —
+    """The grouped pair kernel emits exactly the expression plan's rows —
     including duplicates found via EXACT ties (cosine 1.0), where the
     min-id canonical and max-cos rollups must break ties identically."""
     for route in ("flat", "hier"):
-        a, b = _both(
+        a, b = _with_reference(
             monkeypatch, lambda: sim.semantic_dedup(planted, route=route)
         )
         assert a == b and len(a) > 0
@@ -111,12 +131,12 @@ def test_semantic_dedup_pair_sweep_parity(monkeypatch, planted):
 def test_screen_and_decontaminate_parity(monkeypatch, planted):
     tr = planted.filter(F.col("vec_id") % 2 == 0)
     ev = planted.filter(F.col("vec_id") % 2 == 1)
-    a, b = _both(
+    a, b = _with_reference(
         monkeypatch,
         lambda: sim.semantic_decontaminate(tr, ev, threshold=0.8),
     )
     assert a == b and len(a) > 0
-    a, b = _both(
+    a, b = _with_reference(
         monkeypatch,
         lambda: sim.semantic_dedup_incremental(tr, ev, threshold=0.8),
     )
@@ -197,54 +217,62 @@ def edge_docs(spark):
 
 
 def test_minhash_signature_and_verify_parity(monkeypatch, edge_docs):
-    """sql-vs-arrow equality for minhash_signatures (the r13 kernel: the
-    docstring's pinned contract, previously only hand-verified) AND the
-    r14 pair-verify kernel behind minhash_near_dup_pairs, over the edge
+    """Kernel-vs-reference equality for minhash_signatures AND the
+    pair-verify kernel behind minhash_near_dup_pairs, over the edge
     fixture (None text, empty-token runs, sub-n docs, exact twins)."""
-    a, b = _both(
+    a, b = _with_reference(
         monkeypatch,
         lambda: sim.minhash_signatures(edge_docs, n=3, num_perm=16),
     )
     assert a == b and len(a) > 0
-    # docs 4, 5, 7 must emit NO signature row on either side
+    # docs 4, 5, 7 must emit NO signature row
     ids = {r[0] for r in a}
     assert ids.isdisjoint({4, 5, 7}) and {1, 2, 6, 8} <= ids
-    a, b = _both(
-        monkeypatch,
-        lambda: sim.minhash_near_dup_pairs(
-            edge_docs, n=3, num_perm=16, bands=4, threshold=0.5
-        ),
-    )
-    assert a == b and len(a) > 0
+    for bands in (4, 16):
+        a, b = _with_reference(
+            monkeypatch,
+            lambda: sim.minhash_near_dup_pairs(
+                edge_docs, n=3, num_perm=16, bands=bands, threshold=0.5
+            ),
+        )
+        assert a == b and len(a) > 0
+    # one-row bands make the partial overlaps candidates too, so the
+    # verify's division and rounding are pinned off 1.0
+    assert any(r[2] < 1.0 for r in a)
 
 
 def test_store_verify_parity(monkeypatch, edge_docs):
     """Mixed text-vs-stored-shingle-array verify (minhash_pairs_from_store)
-    is sql-vs-arrow identical, including the sub-n/None-text delta rows."""
-    def run():
+    matches the reference, including the sub-n/None-text delta rows."""
+    def run(bands):
         bands_df, sh = sim.doc_signature_store(
-            edge_docs, n=3, num_perm=16, bands=4
+            edge_docs, n=3, num_perm=16, bands=bands
         )
         return sim.minhash_pairs_from_store(
-            bands_df, sh, edge_docs, n=3, num_perm=16, bands=4, threshold=0.5
+            bands_df, sh, edge_docs, n=3, num_perm=16, bands=bands,
+            threshold=0.5,
         )
 
-    a, b = _both(monkeypatch, run)
-    assert a == b and len(a) > 0
+    for bands in (4, 16):
+        a, b = _with_reference(monkeypatch, lambda: run(bands))
+        assert a == b and len(a) > 0
+    assert any(r[2] < 1.0 for r in a)
 
 
-def test_mutual_knn_probe_kernel_parity(monkeypatch, planted):
-    """The fused probe+assign kernel (r14) emits the same reciprocal
-    pairs as the crossJoin + rank-window plan, on both routes (the hier
-    route's member cell comes from the two-level argmin while probes
-    rank flat — the kernel must reproduce that asymmetry)."""
+def test_mutual_knn_probe_kernel_parity(planted):
+    """The fused probe+assign kernel emits the same reciprocal pairs as
+    the crossJoin + rank-window plan, on both routes (the hier route's
+    member cell comes from the two-level argmin while probes rank flat —
+    the kernel must reproduce that asymmetry)."""
     for route in ("flat", "hier"):
-        a, b = _both(
-            monkeypatch,
-            lambda: sim.mutual_knn_ivf(
+        a = _rows(
+            sim.mutual_knn_ivf(
                 planted, k=4, nprobe=2, threshold=0.3, cell_col=None,
                 route=route,
-            ),
+            )
+        )
+        b = _rows(
+            ref.mutual_knn_ivf(planted, k=4, nprobe=2, threshold=0.3, route=route)
         )
         assert a == b and len(a) > 0
 
@@ -252,8 +280,9 @@ def test_mutual_knn_probe_kernel_parity(monkeypatch, planted):
 def test_giant_cell_tiled_route_parity(monkeypatch, planted):
     """Forcing a tiny group cap routes every cell through the tiled
     (canon-block, dup-block) sweep + dup-grain rollup — output must be
-    bit-identical to the single-group kernel AND the SQL plan (exact
-    twins included, so min-canon/max-cos tie composition is exercised)."""
+    bit-identical to the single-group kernel, which the pair-sweep parity
+    test pins to the expression plan (exact twins included, so
+    min-canon/max-cos tie composition is exercised)."""
     want = _rows(sim.semantic_dedup(planted, route="flat"))
     monkeypatch.setattr(K, "PAIR_GROUP_ROWS", 7)
     got = _rows(sim.semantic_dedup(planted, route="flat"))
@@ -281,10 +310,10 @@ def test_giant_cell_tiled_route_parity(monkeypatch, planted):
     assert got2 == want2 and len(got2) > 0
 
 
-def test_eval_index_persisted_layout_parity(monkeypatch, planted, tmp_path):
-    """A persisted eval index has ONE layout whichever implementation
-    built it: from single-precision source vectors, both builds read
-    back the same cells schema and rows."""
+def test_eval_index_persisted_layout_parity(planted, tmp_path):
+    """A persisted eval index has ONE layout: from single-precision
+    source vectors it reads back as (vec_id, embedding array<double>,
+    cell int), with the built cells' rows."""
     from etl_pipeline_challenge_aladia_spark.streaming.embeddings import (
         build_eval_index,
         load_eval_index,
@@ -294,14 +323,12 @@ def test_eval_index_persisted_layout_parity(monkeypatch, planted, tmp_path):
     src = planted.select(
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
     )
-    cells = {}
-    for impl in ("sql", "arrow"):
-        monkeypatch.setenv(sim.ASSIGN_IMPL_ENV, impl)
-        save_eval_index(
-            *build_eval_index(src, k=4, route="flat"), str(tmp_path / impl)
-        )
-        cells[impl] = load_eval_index(
-            planted.sparkSession, str(tmp_path / impl)
-        )[0]
-    assert cells["sql"].schema == cells["arrow"].schema
-    assert _rows(cells["sql"]) == _rows(cells["arrow"])
+    cells, cents = build_eval_index(src, k=4, route="flat")
+    save_eval_index(cells, cents, str(tmp_path))
+    back = load_eval_index(planted.sparkSession, str(tmp_path))[0]
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        ("vec_id", T.LongType()),
+        ("embedding", T.ArrayType(T.DoubleType())),
+        ("cell", T.IntegerType()),
+    ]
+    assert _rows(back) == _rows(cells) and len(_rows(back)) == planted.count()

@@ -100,7 +100,7 @@ def test_build_eval_index_routes_like_the_batch_operator(spark):
 
     eval_set = _vecs(spark, [(i, i * 0.3) for i in range(8)])
     seen = []
-    # (r14) the arrow build path trains via _lloyd_cent_map
+    # the build trains via _lloyd_cent_map
     real = sim._lloyd_cent_map
 
     def spy(*a, **kw):

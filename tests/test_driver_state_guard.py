@@ -48,8 +48,7 @@ ALLOWED_COLLECTS = {
         "bounded greedy-loop fetch adjudicated in VERDICT r9-r11",
     ("operators/similarity.py", 'init_rows = vecs.orderBy("id").limit(k).collect()'):
         "k-row k-means init (the k lowest-id vectors) — the centroid "
-        "table the SQL path materialized via localCheckpoint, landed "
-        "locally for the Arrow assignment-kernel closure",
+        "table, landed locally for the Arrow assignment-kernel closure",
     ("operators/similarity.py", '.collect()  # k x groups bounded init rows'):
         "k x groups k-means init rows (grouped/PQ training) — same "
         "centroid-table bound as the single-group init",
@@ -58,8 +57,7 @@ ALLOWED_COLLECTS = {
         "metadata-sized at any corpus scale (k ~ sqrt(n))",
     ("operators/similarity.py", 'rows = centroids.select("cluster", "c").collect()  # k-row frozen quantizer table'):
         "the frozen coarse quantizer (k rows) a store hands back — "
-        "collected once per batch for the kernel closure, the same "
-        "table the SQL path broadcast",
+        "collected once per batch for the kernel closure",
     ("operators/similarity.py", '.collect()  # n_cells-bounded histogram of exact-pair probe ranks'):
         "tune_nprobe's recall curve: one row per probe rank, bounded by "
         "the cell count (the same bound the old per-step counts had)",

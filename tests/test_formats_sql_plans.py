@@ -219,6 +219,177 @@ def test_fan_out_never_probes_non_scan_inputs(spark, sf_dir, monkeypatch):
     assert fan_out(wide, partitions=8) is wide
 
 
+#: catalog queries allowed an Arrow-batched Python kernel in their plan
+_ARROW_OK = {"media_feature_extract"}
+
+#: plan nodes of a Python row loop
+_PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython")
+
+
+# queries whose plan legitimately contains BroadcastNestedLoopJoin:
+# every crossed side is a 1-row aggregate or a <=5-row literal frame
+_BNLJ_OK = {
+    "events_value_histogram",       # 1-row min/max bounds
+    "events_value_deciles",         # 1-row quantile-boundary frame
+    "events_value_percentiles",     # 1-row quantile-boundary frame
+    "doc_unigram_surprisal",        # 1-row corpus-total frame
+    "doc_token_drift",              # 1-row doc-count + totals frames
+    "doc_vocab_topk",               # 1-row vocabulary-total frame
+    "doc_bigram_lift",              # 1-row unigram-total frame
+    "doc_mixture_weights",          # 1-row corpus-total frame
+    "doc_subword_budget",           # 1-row total frame
+    "doc_token_diversity",          # 1-row total frame
+    "doc_dup_graph_degree",         # 1-row total x 1-row in-pairs
+    "doc_dup_threshold_sensitivity",  # 5-row threshold literal
+    "doc_bm25_search",              # 1-row df/avgdl frame
+    "dq_profile_orders",            # 1-row profile bounds
+    "minhash_recall_audit",         # 1-row summary cross
+    "emb_ivf_recall_audit",         # 1-row summary cross
+    "doc_decontaminate",            # 1-row benchmark-size frame
+    "doc_corpus_diff",              # 1-row snapshot-count frame
+    "events_anomaly_days",          # 1-row mean/stddev frame
+    "lineitem_yearly_growth",       # 1-row base-year frame
+    "doc_quality_above_median",     # group-count-sized median frame
+    "emb_quantize_error",           # 1-row scale frame
+    "emb_pq_error",                 # 1-row summary frame
+    "tpch_q11_important_stock",     # 1-row threshold subquery
+    "tpch_q14_promo_effect",        # 1-row ratio frame
+    "tpch_q15_top_supplier",        # 1-row max-revenue frame
+    "tpch_q17_small_quantity_revenue",  # per-part avg, AQE may BNLJ tiny side
+    "tpch_q22_dormant_rich_customers",  # 1-row avg-balance frame
+    "emb_cell_drift",               # 1-row population totals
+    "events_gap_filled_daily_value",    # 1-row day-span frame
+    "emb_semantic_dedup",           # 1-row auto-k count frame
+    "emb_semantic_dedup_hier",      # 1-row auto-k count frame
+    "emb_semantic_dedup_incremental",   # 1-row auto-k count frame
+    "emb_semantic_decontaminate",   # k x dim centroid-table broadcast
+    "emb_semantic_decontaminate_stored",  # same screen; centroids read
+                                    # from the persisted eval index
+    "emb_leakage_rate_by_label",    # same screen + label rollup
+    "doc_curation_pipeline_decontaminated",  # same centroid broadcast
+                                    # in the composed semantic leg
+    "doc_curation_pipeline_decontaminated_stored",  # same centroid
+                                    # broadcast; denylist read from the
+                                    # leakage store (skinny id frame)
+    "emb_knn_classify",             # 1-row label-prior frame
+    "emb_centroid_outliers",        # 1-row threshold frame
+    "orders_rfm_segments",          # 1-row boundary frame
+    "emb_mutual_knn_ivf",           # cells-sized centroid broadcast
+    "emb_mutual_knn_ivf_recall_audit",  # centroid broadcast + 1-row counts
+    "emb_ivf_nprobe_tradeoff",      # centroid broadcast + 1-row counts
+    "doc_lsh_band_tradeoff",        # 1-row count frames per variant
+    "emb_cluster_label_purity",     # k-row centroid frames in kmeans
+    "events_weekly_retention",      # 1-row cohort-base frame
+    "events_funnel_view_click_purchase",  # 1-row funnel-base frame
+    "doc_length_buckets",           # 1-row bucket-bounds frame
+    "doc_mixture_upsample",         # <=5-row rates literal
+    "doc_stratified_sample",        # <=5-row rates literal
+    "cdc_quarantine_stats",         # 1-row totals frame
+    "media_decode_audit",           # 1-row audit-total frame
+    "events_hourly_click_purchase_full_outer",  # tiny hour-grain outer
+    "basket_brand_lift",            # 1-row order-total frame
+    "doc_heavy_hitter_tokens",      # <=support-bound candidate literal
+    "doc_curation_pipeline",        # 1-row stage-total frames
+    "emb_cosine_topk",              # bounded query-sample frame crossed into scan
+    "emb_cosine_near_dup",          # bounded query-sample frame
+    "emb_hard_negatives",           # bounded query-sample frame
+    "emb_ivf_topk",                 # k-row centroid frame (probe + rerank)
+    "emb_ivf_adc_topk",             # k-row centroid + codebook frames
+    "emb_kmeans_clusters",          # k-row centroid frame per Lloyd round
+    "emb_kmeans_clusters_hier",     # k-row centroid + sqrt(k)-row super-cell frames
+    "doc_tfidf_top_terms",          # 1-row doc-count frame
+    "orders_zorder_layout",         # 1-row min/max interleave bounds
+    "emb_pq_code_balance",          # 1-row corpus-count frame
+    "emb_kcenter_vs_random_audit",  # 1-row coverage-summary frames
+    "emb_label_separation_audit",   # labels^2 centroid cross (label-vocab bounded)
+    "orders_topk_revenue_concentration",  # 1-row total-revenue frame
+    "doc_crosslang_near_dup_matrix",  # 1-row pair-total frame
+    "emb_top_pc_power_iteration",   # 1-row axis frame per iteration
+    "emb_anisotropy_audit",         # 1-row moment frames
+    "dq_benford_totalprice",        # 9-row Benford literal x 1-row total
+    "orders_revenue_trend_by_nation",  # 1-row base-month frame
+    "events_decayed_engagement",    # 1-row reference-time frame
+    "doc_dup_triangle_census",      # 1-row totals frame
+    "doc_rrf_fusion",               # 1-row list-size frames
+    "events_weekly_autocorr",       # 1-row day-count frame
+    "events_cusum_changepoint",     # 1-row global-mean frame
+    "orders_bloom_fpr_audit",       # 1-row filter-summary frame
+    "events_markov_removal_attribution",  # event-type-vocab state frames
+    "events_mad_outlier_days",      # 1-row median + 1-row MAD frames
+    "events_type_drift_chisq",      # 1-row split-day + 1-row totals frames
+    "orders_theil_sen_monthly_trend",  # 1-row month-count frame
+    "events_user_fano_overdispersion",  # 1-row day-span frame
+    "doc_distinctive_terms_chisq",  # 1-row corpus-total frame
+    "emb_mutual_knn_pairs",         # blocks^2/2-row block-pair literal (blocked GEMM)
+    "orders_value_decile_migration",  # 1-row decile-boundary frame
+    "events_stickiness_dau_wau",    # 1-row min-day frame
+    "orders_seasonal_index",        # 1-row grand-total frame
+    "doc_term_burstiness",          # 1-row doc-count frame
+    "doc_vocab_coverage_curve",     # 1-row total + 3-row k literal
+    "events_growth_accounting",     # 1-row min-day + 1-row max-week frames
+    "doc_dedup_source_shift",       # two 1-row total frames
+    "emb_cosine_histogram",         # block-pair literal + 1-row total
+    "doc_vocab_growth_curve",       # 1-row id-range frame
+    "orders_lineitem_count_histogram",  # 1-row total frame
+    "dq_status_priority_contingency",   # 1-row grand-total frame
+    "doc_bpe_merge_rounds",         # three 1-row merge-decision frames
+}
+
+
+#: the default-gate sample: ``doc_leakage_safe_split`` (the benchmark's
+#: corpus query) and every catalog query that calls the MinHash,
+#: semantic-dedup, k-means/PQ or mutual-kNN operators
+PLAN_AUDIT_SAMPLE = (
+    "doc_canonical_per_cluster", "doc_containment_lsh_audit",
+    "doc_curation_pipeline", "doc_curation_pipeline_decontaminated",
+    "doc_curation_pipeline_decontaminated_stored", "doc_dedup_clusters",
+    "doc_dedup_clusters_distributed", "doc_dup_rate_by_source",
+    "doc_incremental_near_dup", "doc_incremental_near_dup_stored",
+    "doc_leakage_safe_split", "doc_lsh_band_autotune", "doc_lsh_band_tradeoff",
+    "emb_cell_drift", "emb_cluster_label_purity", "emb_ivf_adc_topk",
+    "emb_kmeans_clusters", "emb_kmeans_clusters_hier",
+    "emb_leakage_rate_by_label", "emb_mutual_knn_ivf",
+    "emb_mutual_knn_ivf_recall_audit", "emb_pq_adc_topk",
+    "emb_pq_code_balance", "emb_pq_error", "emb_semantic_decontaminate",
+    "emb_semantic_decontaminate_stored", "emb_semantic_dedup",
+    "emb_semantic_dedup_flat", "emb_semantic_dedup_hier",
+    "emb_semantic_dedup_incremental", "minhash_band_stats",
+    "minhash_near_dup", "minhash_recall_audit",
+)
+
+
+def _plan_offenders(spark, sf_dir, names) -> list[tuple[str, str]]:
+    """(query, plan node) for each invariant the executed plans of the
+    named catalog queries break: a row-at-a-time Python eval
+    (BatchEvalPython), an Arrow Python eval outside ``_ARROW_OK``, a
+    CartesianProduct, or a BroadcastNestedLoopJoin outside ``_BNLJ_OK``
+    (every allowed BNLJ crosses a 1-row aggregate or a <=5-row literal
+    frame into a linear pass; an unbounded cartesian would be quadratic
+    at corpus scale)."""
+    from etl_pipeline_challenge_aladia_spark.plans.queries import CATALOG
+
+    offenders = []
+    for name in names:
+        plan = CATALOG[name].spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        if "BatchEvalPython" in plan:
+            offenders.append((name, "BatchEvalPython"))
+        if "ArrowEvalPython" in plan and name not in _ARROW_OK:
+            offenders.append((name, "ArrowEvalPython"))
+        if "CartesianProduct" in plan:
+            offenders.append((name, "CartesianProduct"))
+        if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_OK:
+            offenders.append((name, "BroadcastNestedLoopJoin"))
+    return offenders
+
+
+def test_plan_invariants_hold_on_similarity_sample(spark, sf_dir):
+    """The full-catalog plan audits (``slow``) on a fixed sample the
+    default gate can afford: the similarity-operator queries and the
+    benchmark's corpus query plan no Python row loop and no unaudited
+    cartesian."""
+    assert _plan_offenders(spark, sf_dir, PLAN_AUDIT_SAMPLE) == []
+
+
 def test_no_forced_broadcast_of_fact_tables():
     """Policy guard (VERDICT r01): explicit F.broadcast is reserved for
     bounded dims (nation/region) and single-row aggregates. Anything that
@@ -246,15 +417,9 @@ def test_no_python_row_loop_in_any_catalog_plan(spark, sf_dir):
     queries (multimodal decode); everything else must stay JVM-side."""
     from etl_pipeline_challenge_aladia_spark.plans.queries import CATALOG
 
-    arrow_ok = {"media_feature_extract"}
-    offenders = []
-    for name, spec in CATALOG.items():
-        plan = spec.spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "BatchEvalPython" in plan:
-            offenders.append((name, "BatchEvalPython"))
-        if "ArrowEvalPython" in plan and name not in arrow_ok:
-            offenders.append((name, "ArrowEvalPython"))
-    assert not offenders, f"Python row loops in catalog plans: {offenders}"
+    offenders = _plan_offenders(spark, sf_dir, CATALOG)
+    python = [o for o in offenders if o[1] in _PYTHON_NODES]
+    assert not python, f"Python row loops in catalog plans: {python}"
 
 
 def test_cli_list_and_run(capsys, spark, sf_dir):
@@ -312,123 +477,10 @@ def test_no_unbounded_cartesian_in_any_catalog_plan(spark, sf_dir):
     introduce one silently."""
     from etl_pipeline_challenge_aladia_spark.plans.queries import CATALOG
 
-    # queries whose plan legitimately contains BroadcastNestedLoopJoin:
-    # every crossed side is a 1-row aggregate or a <=5-row literal frame
-    bnlj_ok = {
-        "events_value_histogram",       # 1-row min/max bounds
-        "events_value_deciles",         # 1-row quantile-boundary frame
-        "events_value_percentiles",     # 1-row quantile-boundary frame
-        "doc_unigram_surprisal",        # 1-row corpus-total frame
-        "doc_token_drift",              # 1-row doc-count + totals frames
-        "doc_vocab_topk",               # 1-row vocabulary-total frame
-        "doc_bigram_lift",              # 1-row unigram-total frame
-        "doc_mixture_weights",          # 1-row corpus-total frame
-        "doc_subword_budget",           # 1-row total frame
-        "doc_token_diversity",          # 1-row total frame
-        "doc_dup_graph_degree",         # 1-row total x 1-row in-pairs
-        "doc_dup_threshold_sensitivity",  # 5-row threshold literal
-        "doc_bm25_search",              # 1-row df/avgdl frame
-        "dq_profile_orders",            # 1-row profile bounds
-        "minhash_recall_audit",         # 1-row summary cross
-        "emb_ivf_recall_audit",         # 1-row summary cross
-        "doc_decontaminate",            # 1-row benchmark-size frame
-        "doc_corpus_diff",              # 1-row snapshot-count frame
-        "events_anomaly_days",          # 1-row mean/stddev frame
-        "lineitem_yearly_growth",       # 1-row base-year frame
-        "doc_quality_above_median",     # group-count-sized median frame
-        "emb_quantize_error",           # 1-row scale frame
-        "emb_pq_error",                 # 1-row summary frame
-        "tpch_q11_important_stock",     # 1-row threshold subquery
-        "tpch_q14_promo_effect",        # 1-row ratio frame
-        "tpch_q15_top_supplier",        # 1-row max-revenue frame
-        "tpch_q17_small_quantity_revenue",  # per-part avg, AQE may BNLJ tiny side
-        "tpch_q22_dormant_rich_customers",  # 1-row avg-balance frame
-        "emb_cell_drift",               # 1-row population totals
-        "events_gap_filled_daily_value",    # 1-row day-span frame
-        "emb_semantic_dedup",           # 1-row auto-k count frame
-        "emb_semantic_dedup_hier",      # 1-row auto-k count frame
-        "emb_semantic_dedup_incremental",   # 1-row auto-k count frame
-        "emb_semantic_decontaminate",   # k x dim centroid-table broadcast
-        "emb_semantic_decontaminate_stored",  # same screen; centroids read
-                                        # from the persisted eval index
-        "emb_leakage_rate_by_label",    # same screen + label rollup
-        "doc_curation_pipeline_decontaminated",  # same centroid broadcast
-                                        # in the composed semantic leg
-        "doc_curation_pipeline_decontaminated_stored",  # same centroid
-                                        # broadcast; denylist read from the
-                                        # leakage store (skinny id frame)
-        "emb_knn_classify",             # 1-row label-prior frame
-        "emb_centroid_outliers",        # 1-row threshold frame
-        "orders_rfm_segments",          # 1-row boundary frame
-        "emb_mutual_knn_ivf",           # cells-sized centroid broadcast
-        "emb_mutual_knn_ivf_recall_audit",  # centroid broadcast + 1-row counts
-        "emb_ivf_nprobe_tradeoff",      # centroid broadcast + 1-row counts
-        "doc_lsh_band_tradeoff",        # 1-row count frames per variant
-        "emb_cluster_label_purity",     # k-row centroid frames in kmeans
-        "events_weekly_retention",      # 1-row cohort-base frame
-        "events_funnel_view_click_purchase",  # 1-row funnel-base frame
-        "doc_length_buckets",           # 1-row bucket-bounds frame
-        "doc_mixture_upsample",         # <=5-row rates literal
-        "doc_stratified_sample",        # <=5-row rates literal
-        "cdc_quarantine_stats",         # 1-row totals frame
-        "media_decode_audit",           # 1-row audit-total frame
-        "events_hourly_click_purchase_full_outer",  # tiny hour-grain outer
-        "basket_brand_lift",            # 1-row order-total frame
-        "doc_heavy_hitter_tokens",      # <=support-bound candidate literal
-        "doc_curation_pipeline",        # 1-row stage-total frames
-        "emb_cosine_topk",              # bounded query-sample frame crossed into scan
-        "emb_cosine_near_dup",          # bounded query-sample frame
-        "emb_hard_negatives",           # bounded query-sample frame
-        "emb_ivf_topk",                 # k-row centroid frame (probe + rerank)
-        "emb_ivf_adc_topk",             # k-row centroid + codebook frames
-        "emb_kmeans_clusters",          # k-row centroid frame per Lloyd round
-        "emb_kmeans_clusters_hier",     # k-row centroid + sqrt(k)-row super-cell frames
-        "doc_tfidf_top_terms",          # 1-row doc-count frame
-        "orders_zorder_layout",         # 1-row min/max interleave bounds
-        "emb_pq_code_balance",          # 1-row corpus-count frame
-        "emb_kcenter_vs_random_audit",  # 1-row coverage-summary frames
-        "emb_label_separation_audit",   # labels^2 centroid cross (label-vocab bounded)
-        "orders_topk_revenue_concentration",  # 1-row total-revenue frame
-        "doc_crosslang_near_dup_matrix",  # 1-row pair-total frame
-        "emb_top_pc_power_iteration",   # 1-row axis frame per iteration
-        "emb_anisotropy_audit",         # 1-row moment frames
-        "dq_benford_totalprice",        # 9-row Benford literal x 1-row total
-        "orders_revenue_trend_by_nation",  # 1-row base-month frame
-        "events_decayed_engagement",    # 1-row reference-time frame
-        "doc_dup_triangle_census",      # 1-row totals frame
-        "doc_rrf_fusion",               # 1-row list-size frames
-        "events_weekly_autocorr",       # 1-row day-count frame
-        "events_cusum_changepoint",     # 1-row global-mean frame
-        "orders_bloom_fpr_audit",       # 1-row filter-summary frame
-        "events_markov_removal_attribution",  # event-type-vocab state frames
-        "events_mad_outlier_days",      # 1-row median + 1-row MAD frames
-        "events_type_drift_chisq",      # 1-row split-day + 1-row totals frames
-        "orders_theil_sen_monthly_trend",  # 1-row month-count frame
-        "events_user_fano_overdispersion",  # 1-row day-span frame
-        "doc_distinctive_terms_chisq",  # 1-row corpus-total frame
-        "emb_mutual_knn_pairs",         # blocks^2/2-row block-pair literal (blocked GEMM)
-        "orders_value_decile_migration",  # 1-row decile-boundary frame
-        "events_stickiness_dau_wau",    # 1-row min-day frame
-        "orders_seasonal_index",        # 1-row grand-total frame
-        "doc_term_burstiness",          # 1-row doc-count frame
-        "doc_vocab_coverage_curve",     # 1-row total + 3-row k literal
-        "events_growth_accounting",     # 1-row min-day + 1-row max-week frames
-        "doc_dedup_source_shift",       # two 1-row total frames
-        "emb_cosine_histogram",         # block-pair literal + 1-row total
-        "doc_vocab_growth_curve",       # 1-row id-range frame
-        "orders_lineitem_count_histogram",  # 1-row total frame
-        "dq_status_priority_contingency",   # 1-row grand-total frame
-        "doc_bpe_merge_rounds",         # three 1-row merge-decision frames
-    }
-    offenders = []
-    for name, spec in CATALOG.items():
-        plan = spec.spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            offenders.append((name, "CartesianProduct"))
-        if "BroadcastNestedLoopJoin" in plan and name not in bnlj_ok:
-            offenders.append((name, "BroadcastNestedLoopJoin"))
-    assert not offenders, (
-        f"unaudited cartesian/BNLJ in catalog plans: {offenders} — if the "
+    offenders = _plan_offenders(spark, sf_dir, CATALOG)
+    cartesian = [o for o in offenders if o[1] not in _PYTHON_NODES]
+    assert not cartesian, (
+        f"unaudited cartesian/BNLJ in catalog plans: {cartesian} — if the "
         f"crossed side is a bounded literal/aggregate frame, add the query "
-        f"to bnlj_ok with a justification comment"
+        f"to _BNLJ_OK with a justification comment"
     )

@@ -56,9 +56,8 @@ def test_auto_route_pins_the_plan_switch_at_the_threshold(spark, monkeypatch):
     either side of the boundary."""
     corpus = _corpus(spark)  # 61 vectors
     seen: list[str] = []
-    # the default (arrow) dedup path hands the resolved route to
-    # _lloyd_cent_map (r14: the fused assignment kernel replaced the
-    # kmeans_lite call); spy there
+    # the dedup hands the resolved route to its training step,
+    # _lloyd_cent_map; spy there
     real = sim._lloyd_cent_map
 
     def spy(*a, **kw):
@@ -110,7 +109,7 @@ def test_auto_route_output_equals_the_explicit_route(spark):
 def test_incremental_auto_routes_on_corpus_count(spark, monkeypatch):
     corpus, delta = _corpus(spark, 40), _corpus(spark, 5)
     seen: list[str] = []
-    # (r14) the arrow incremental path trains via _lloyd_cent_map
+    # the incremental path trains via _lloyd_cent_map
     real = sim._lloyd_cent_map
 
     def spy(*a, **kw):

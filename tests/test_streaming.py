@@ -531,6 +531,45 @@ def test_merge_sink_sizes_buckets_to_the_data(spark, tmp_path):
     assert {d for d in os.listdir(path) if d.startswith("b")} == live
 
 
+def test_merge_sink_does_not_grow_buckets_it_cannot_split(spark, tmp_path):
+    """A bucket whose only row is larger than one scan split cannot be
+    brought under the split by any bucket count: repeated merges of that
+    key keep the table at one bucket instead of multiplying the count on
+    every merge."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from etl_pipeline_challenge_aladia_spark.sinks import (
+        _read_manifest,
+        merge_warehouse_batch,
+        read_warehouse,
+    )
+
+    rng = random.Random(5)
+    path = str(tmp_path / "wh")
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8192")
+    try:
+        for version in range(1, 6):
+            # ~27 KB of incompressible hex: one row larger than the split
+            payload = "%x" % rng.getrandbits(4 * 27_000)
+            batch = _merge_base_frame(spark, n=1, version=version).withColumn(
+                "payload", F.lit(payload)
+            )
+            merge_warehouse_batch(spark, batch, path)
+            m = _read_manifest(path)
+            assert m["num_buckets"] == 1, (version, m["num_buckets"])
+            assert m["bucket_bytes"]["0"] > 8192
+    finally:
+        spark.conf.set(key, prev)
+    rows = read_warehouse(spark, path).collect()
+    assert [(r["original_id"], r["version"], r["payload"]) for r in rows] == [
+        ("doc_0", 5, payload)
+    ]
+
+
 def test_cdc_batch_merge_and_refresh_job_counts(spark, tmp_path, monkeypatch):
     """The Spark jobs one CDC micro-batch's merge and view refresh start,
     pinned: a change that adds a per-bucket, listing or counting job fails
@@ -1541,9 +1580,7 @@ def test_cell_partitioned_index_probe_scans_only_probed_cells(spark, tmp_path):
 
 
 @pytest.mark.slow  # measured heavy in the full --durations run (see pytest.ini)
-def test_semantic_dedup_ingest_stream_matches_batch_operator(
-    spark, tmp_path, monkeypatch
-):
+def test_semantic_dedup_ingest_stream_matches_batch_operator(spark, tmp_path):
     """Streaming incremental semantic dedup: each micro-batch is screened
     against the ACCUMULATED index, per-batch reports equal the batch
     operator bit-for-bit (including one-shot semantic_dedup_incremental
@@ -1649,20 +1686,15 @@ def test_semantic_dedup_ingest_stream_matches_batch_operator(
     )
     assert read_store(spark, EMBEDDING_INDEX, idx).count() == 25
 
-    # an EMPTY centroid table routes nothing: both implementations screen
-    # to an empty frame with the normal output schema
-    from etl_pipeline_challenge_aladia_spark.operators.similarity import (
-        ASSIGN_IMPL_ENV,
-    )
-
-    schemas = []
-    for impl in ("arrow", "sql"):
-        monkeypatch.setenv(ASSIGN_IMPL_ENV, impl)
-        empty = semantic_dedup_screen(idx0, delta1, cents.limit(0))
-        assert empty.columns == ["vec_id", "canonical_id", "max_cos"]
-        assert empty.collect() == []
-        schemas.append([f.dataType for f in empty.schema.fields])
-    assert schemas[0] == schemas[1]
+    # an EMPTY centroid table routes nothing: the screen is an empty
+    # frame with the normal output columns and types
+    empty = semantic_dedup_screen(idx0, delta1, cents.limit(0))
+    assert empty.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("vec_id", "bigint"),
+        ("canonical_id", "bigint"),
+        ("max_cos", "double"),
+    ]
 
 
 @pytest.mark.slow  # measured heavy in the full --durations run (see pytest.ini)
